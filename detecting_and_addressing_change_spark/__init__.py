@@ -13,4 +13,7 @@ pipeline; this package rebuilds the same computations Spark-first:
 - ``streaming``  — Structured Streaming wiring (DDM, prequential loop)
 """
 
+# installed wherever package code is unpickled, i.e. in every Python worker
+from . import zipimport_cache  # noqa: F401
+
 __version__ = "0.1.0"

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..sources.tables import forget_footer_schemas, read_parquet_cached_schema
 from .dedup import minhash_bands, minhash_candidate_pairs, minhash_signatures
@@ -57,9 +58,18 @@ def _digests(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # the stored docs/ layout is ALWAYS (doc_id, dgst): build/append accept
     # any id column name, but edges/probe read the canonical name — without
     # this alias an index built with a custom id_col failed at read time
-    # with AnalysisException (ADVICE r6)
+    # with AnalysisException (ADVICE r6). The cast keeps the files on
+    # _DOCS_SCHEMA, which every read declares; a non-integer id would cast
+    # to null, so it is refused instead
+    id_type = docs.schema[id_col].dataType
+    if not isinstance(id_type, T.IntegralType):
+        raise TypeError(
+            f"minhash index ids must be integers; {id_col!r} is "
+            f"{id_type.simpleString()}"
+        )
     return docs.select(
-        F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("dgst")
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.md5(F.col(text_col)).alias("dgst"),
     )
 
 

@@ -26,6 +26,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _columns(schema: T.StructType) -> dict[str, str]:
+    # name -> type, ignoring order (the merge is by name) and nullability
+    # (parquet reads every column back as nullable)
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
 
 
 class ChangelogSnapshot:
@@ -56,6 +63,8 @@ class ChangelogSnapshot:
         # replays nothing already committed, and the epoch write below is
         # the idempotent "write new, then advance" half of that contract
         self.epoch = self._recover_epoch()
+        # schema of the stored epoch; after a restart it is read from disk
+        self._state_schema: T.StructType | None = None
 
     def _recover_epoch(self) -> int:
         try:
@@ -77,9 +86,19 @@ class ChangelogSnapshot:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         parts = batch_df
         if self.epoch > 0:
-            # state rows are merged batch rows, so the stored epoch's schema
-            # IS the batch schema — passing it skips the footer-inference
-            # job a bare read would fire per epoch (guide §1.2)
+            # a batch whose columns or types differ from the stored epoch
+            # would read the old state through the wrong schema (a dropped
+            # column vanishes from every stored row); the check costs one
+            # footer-inference job after a restart, none per later epoch
+            stored = self._state_schema
+            if stored is None:
+                stored = self.spark.read.parquet(self._path(self.epoch)).schema
+            if _columns(stored) != _columns(batch_df.schema):
+                raise ValueError(
+                    f"batch schema {batch_df.schema.simpleString()} does not "
+                    f"match the stored epoch v{self.epoch} at "
+                    f"{self.state_dir!r}: {stored.simpleString()}"
+                )
             prev = self.spark.read.schema(batch_df.schema).parquet(
                 self._path(self.epoch)
             )
@@ -101,7 +120,7 @@ class ChangelogSnapshot:
         merge metadata stripped)."""
         if self.epoch == 0:
             raise ValueError("no batches processed yet")
-        sch = getattr(self, "_state_schema", None)
+        sch = self._state_schema
         reader = self.spark.read.schema(sch) if sch else self.spark.read
         cur = reader.parquet(self._path(self.epoch))
         return cur.filter(F.col(self.op_col) != self.delete_op).drop(

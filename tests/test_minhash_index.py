@@ -341,3 +341,31 @@ def test_delete_equals_rebuild_and_forgets_signatures(spark, corpus, tmp_path):
         .count()
         == 1
     )
+
+
+def test_int32_ids_are_stored_as_long(spark, corpus, tmp_path):
+    """docs/ is read with the declared ``doc_id long``; ids of a narrower
+    integer type are cast on write so the files carry that type."""
+    path = str(tmp_path / "int32idx")
+    narrow = corpus.select(F.col("doc_id").cast("int").alias("doc_id"), "text")
+    build_minhash_index(narrow.filter(F.col("doc_id") < 20), path)
+    append_to_minhash_index(narrow.filter(F.col("doc_id") >= 20), path)
+    stored = spark.read.parquet(f"{path}/docs").schema["doc_id"].dataType
+    assert stored.simpleString() == "bigint"
+    got = _edge_set(minhash_index_edges(spark, path))
+    assert got == _edge_set(minhash_dedup_edges(corpus)) and got
+    probe = minhash_index_probe(
+        spark,
+        path,
+        narrow.filter(F.col("doc_id") % 7 == 0).select(
+            (F.col("doc_id") + 900).alias("doc_id"), "text"
+        ),
+    )
+    hits = {r["index_id"] for r in probe.filter(F.col("via") == "exact").collect()}
+    assert hits == {0}
+
+
+def test_non_integer_ids_are_refused(corpus, tmp_path):
+    text_ids = corpus.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    with pytest.raises(TypeError, match="must be integers"):
+        build_minhash_index(text_ids, str(tmp_path / "stridx"))

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from detecting_and_addressing_change_spark.operators.upsert import (
@@ -149,3 +151,27 @@ def test_restart_resumes_from_disk_state(spark):
         assert snap2.epoch > epochs_run1
         got = sorted(map(tuple, snap2.snapshot().collect()))
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "batch_ddl, row",
+    [
+        ("k long, version int, op string", (1, 2, "U")),
+        ("k long, p double, version long, op string", (1, 2.0, 2, "U")),
+    ],
+    ids=["dropped_column", "int_to_long"],
+)
+def test_restart_with_changed_schema_raises(spark, batch_ddl, row):
+    """After a restart the stored epoch is the only record of the state's
+    schema; a batch that does not match it must fail, not merge."""
+    first = spark.createDataFrame(
+        [(1, 1.0, 1, "U")], "k long, p double, version int, op string"
+    )
+    changed = spark.createDataFrame([row], batch_ddl)
+    with tempfile.TemporaryDirectory() as tmp:
+        ChangelogSnapshot(spark, f"{tmp}/state", ["k"]).process_batch(first, 0)
+        restarted = ChangelogSnapshot(spark, f"{tmp}/state", ["k"])
+        assert restarted.epoch == 1
+        with pytest.raises(ValueError, match="stored epoch v1"):
+            restarted.process_batch(changed, 1)
+        assert restarted.epoch == 1
