@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from .queries.extensions7 import curation_verdicts
 from .sinks.parquet import write_partitioned
-from .sources.tables import read_parquet_cached_schema
+from .sources.tables import local_table, read_parquet_cached_schema
 
 
 def curate_corpus(docs: DataFrame, out_path: str) -> DataFrame:
@@ -198,9 +198,6 @@ def build_training_shards(
             .collect()
         )
         vocab = [(r["item"], i + 1) for i, r in enumerate(top)]
-        spark.createDataFrame(
-            vocab, "item string, token_id int"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{out_path}/vocab")
         vmap = _map_literal(vocab)
         encoded = kept.select(
             "doc_id",
@@ -212,7 +209,8 @@ def build_training_shards(
         from .operators.bpe import bpe_encode, bpe_fit
 
         merges = bpe_fit(kept, n_merges=n_merges)
-        spark.createDataFrame(
+        local_table(
+            spark,
             [(i, a, b) for i, (a, b) in enumerate(merges)],
             "rank int, left_sym string, right_sym string",
         ).coalesce(1).write.mode("overwrite").parquet(f"{out_path}/merges")
@@ -227,9 +225,6 @@ def build_training_shards(
             .collect()
         )
         vocab = [(r["item"], i + 1) for i, r in enumerate(sub)]
-        spark.createDataFrame(
-            vocab, "item string, token_id int"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{out_path}/vocab")
         vmap = _map_literal(vocab)
         encoded = enc.select(
             "doc_id",
@@ -240,6 +235,8 @@ def build_training_shards(
         )
     else:
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
+    vocab_t = local_table(spark, vocab, "item string, token_id int")
+    vocab_t.coalesce(1).write.mode("overwrite").parquet(f"{out_path}/vocab")
 
     n_sizing = sum(
         x is not None

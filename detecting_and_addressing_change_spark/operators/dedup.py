@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round
 from ..functions.text import sorted_word_fingerprint_col, word_ngrams_col
+from ..sources.tables import local_table
 
 
 def duplication_rate_estimate(
@@ -767,9 +768,8 @@ def _jaccard_dense_vocab(
         .collect()
     )
     if not cutoff_rows or cutoff_rows[0]["jr_min"] is None:
-        spark = words.sparkSession
-        return spark.createDataFrame(
-            [], "a_id long, b_id long, jaccard double"
+        return local_table(
+            words.sparkSession, [], "a_id long, b_id long, jaccard double"
         )
     jr_min = cutoff_rows[0]["jr_min"]
     kept = pairs.filter(F.col("jr") >= jr_min)

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_table
+
 
 def connected_components(
     nodes: DataFrame,
@@ -218,8 +220,8 @@ def connected_components_star(
     return labels, rounds
 
 
-def _unionfind_min_labels(edge_rows: list) -> list[tuple[int, int]]:
-    """Driver-side union-find over a SMALL edge list: [(node, min-id of
+def _unionfind_min_labels(edge_rows) -> list[tuple[int, int]]:
+    """Driver-side union-find over SMALL (a, b) edges: [(node, min-id of
     its component)] for every node that appears in an edge. Identical
     labels to the distributed algorithms (min member per component)."""
     parent: dict[int, int] = {}
@@ -288,15 +290,24 @@ def dedup_clusters(
     # ONE action decides the route AND fetches the small graph (r18, guide
     # §1.2 action count — was a count job followed by a collect job): limit
     # to threshold+1 bounds the driver transfer the same way the count
-    # guard did (~16 B/edge, <=16 MB at the default threshold); seeing
-    # threshold+1 rows means "not small", collect is never unbounded.
-    head = norm.limit(small_graph_threshold + 1).collect()
-    if len(head) <= small_graph_threshold:
-        spark = nodes.sparkSession
+    # guard did; seeing threshold+1 rows means "not small", the fetch is
+    # never unbounded. The head arrives as two Arrow int64 columns (16
+    # B/edge, <=16 MB at the default threshold) and reaches the union-find
+    # in 64k-edge slices, never as one list of Python Rows.
+    head = (
+        norm.limit(small_graph_threshold + 1)
+        .select(F.col("a_id").cast("long"), F.col("b_id").cast("long"))
+        .toArrow()
+    )
+    if head.num_rows <= small_graph_threshold:
         local = _unionfind_min_labels(
-            [(int(r[0]), int(r[1])) for r in head]
+            edge
+            for b in head.to_batches(max_chunksize=1 << 16)
+            for edge in zip(b.column(0).to_pylist(), b.column(1).to_pylist())
         )
-        lab = spark.createDataFrame(local, "node bigint, lbl bigint")
+        lab = local_table(
+            nodes.sparkSession, local, "node bigint, lbl bigint"
+        )
         node_t = dict(nodes.dtypes)[id_col]
         labels = (
             nodes.select(F.col(id_col).cast("bigint").alias("node"))

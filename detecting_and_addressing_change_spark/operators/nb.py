@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.tables import local_table
+
 STATS_SCHEMA = T.StructType(
     [
         T.StructField("label", T.IntegerType()),
@@ -256,7 +258,7 @@ def _nb_predict_bcast(
     row. One shuffle of rows x classes key/struct pairs — the price of a
     plannable expression when even literal arrays would exceed Catalyst's
     comfort."""
-    stats_local = df.sparkSession.createDataFrame(rows, STATS_SCHEMA)
+    stats_local = local_table(df.sparkSession, rows, STATS_SCHEMA)
     st = F.broadcast(
         stats_local.select(
             F.col("label").alias("nb_label"),

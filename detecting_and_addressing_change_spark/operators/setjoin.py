@@ -99,7 +99,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round
 from ..functions.text import word_ngrams_col
-from ..sources.tables import spread_small_input
+from ..sources.tables import local_table, spread_small_input
 from .dedup import (
     collapse_exact,
     minhash_bands,
@@ -591,8 +591,8 @@ def ssjoin_routing_audit_modes(
     if volume > budget_rows:
         # auto routes minhash == the forced computation; one pipeline
         # run serves both rows (unchanged semantics from the start)
-        return spark.createDataFrame(
-            [("auto",) + forced_row[1:], forced_row], schema
+        return local_table(
+            spark, [("auto",) + forced_row[1:], forced_row], schema
         )
     # auto routes exact: the exact fingerprint stays lazy (the caller's
     # one action computes it), unioned with the already-computed forced
@@ -600,4 +600,4 @@ def ssjoin_routing_audit_modes(
     auto = _fingerprint_agg(
         pairs_for("exact"), "exact", volume, budget_rows
     ).select(F.lit("auto").alias("mode"), "*")
-    return auto.unionByName(spark.createDataFrame([forced_row], schema))
+    return auto.unionByName(local_table(spark, [forced_row], schema))

@@ -25,6 +25,7 @@ from .functions.rounding import portable_round
 from .operators.ddm import ddm_scan
 from .operators.nb import nb_collect_stats, nb_fit, nb_predict
 from .operators.windows import count_window_agg
+from .sources.tables import local_table
 
 
 def _round6(x: float) -> float:
@@ -32,21 +33,6 @@ def _round6(x: float) -> float:
     arithmetic (floor(x * 1e6 + 0.5) / 1e6), bit-identical to the Spark
     expression and the DuckDB oracle."""
     return math.floor(float(x) * 1e6 + 0.5) / 1e6
-
-
-def _local_result(spark, rows, columns: list[str], ddl: str) -> DataFrame:
-    """Driver-local result frame as ONE Arrow batch.
-
-    ``createDataFrame(list_of_rows)`` slices into defaultParallelism
-    partitions, so every downstream action on a ~100-row experiment result
-    schedules a 32-task job (~0.3s of pure task overhead on local[32]); the
-    pandas/Arrow path plans a single local partition instead. Values are
-    bit-identical (float64/int64 passthrough)."""
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(list(rows), columns=columns), ddl
-    )
 
 
 def _collect_local(df: DataFrame) -> DataFrame:
@@ -58,23 +44,7 @@ def _collect_local(df: DataFrame) -> DataFrame:
     pipelines unpersist their cached feature tables deterministically in
     a ``finally`` block instead of leaking cached RDDs across calls in a
     long-lived session."""
-    import pandas as pd
-
-    rows = df.collect()
-    # pandas coerces None in numeric columns to NaN, and Spark then
-    # materializes NaN (not null) — a float column with nulls would
-    # change semantics through this helper. Detect TRUE nulls from the
-    # collected Row values (isna() cannot tell NaN from None — coercing
-    # on isna() would also turn genuine NaN results into NULLs) and route
-    # such frames as object dtype so None survives; genuine NaN floats
-    # pass through unchanged on both paths.
-    has_none = any(v is None for r in rows for v in r)
-    pdf = pd.DataFrame(
-        [tuple(r) for r in rows],
-        columns=df.columns,
-        dtype=object if has_none else None,
-    )
-    return df.sparkSession.createDataFrame(pdf, df.schema)
+    return local_table(df.sparkSession, df.collect(), df.schema)
 
 
 def pooled_features(
@@ -216,13 +186,12 @@ def _abrupt_drift_body(
     # flag join would cost three more 32-task stages on 150 rows
     per_rows = sorted(per_batch.collect(), key=lambda r: r["seq_id"])
     flags = ddm_scan([float(r["error"]) for r in per_rows])
-    return _local_result(
+    return local_table(
         labels.sparkSession,
         [
             (r["seq_id"], r["stream"], _round6(r["accuracy"]), f)
             for r, f in zip(per_rows, flags)
         ],
-        ["seq_id", "stream", "accuracy", "flag"],
         "seq_id long, stream string, accuracy double, flag string",
     )
 
@@ -391,13 +360,12 @@ def _unsupervised_drift_body(
     )
     per_rows = sorted(per_batch.collect(), key=lambda r: r["seq_id"])
     flags = ddm_scan([float(r["error"]) for r in per_rows])
-    return _local_result(
+    return local_table(
         labels.sparkSession,
         [
             (r["seq_id"], _round6(r["agreement"]), f)
             for r, f in zip(per_rows, flags)
         ],
-        ["seq_id", "agreement", "flag"],
         "seq_id long, agreement double, flag string",
     )
 
@@ -514,13 +482,12 @@ def gradual_drift_experiment(
         )
         per_rows = sorted(per_batch.collect(), key=lambda r: r["seq_id"])
         flags = ddm_scan([float(r["error"]) for r in per_rows])
-        return _local_result(
+        return local_table(
             feats.sparkSession,
             [
                 (r["seq_id"], _round6(r["sigma"]), _round6(r["accuracy"]), f)
                 for r, f in zip(per_rows, flags)
             ],
-            ["seq_id", "sigma", "accuracy", "flag"],
             "seq_id long, sigma double, accuracy double, flag string",
         )
     finally:

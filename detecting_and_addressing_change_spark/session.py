@@ -26,6 +26,17 @@ def get_spark(
     - Arrow on: every pandas_udf / toPandas boundary is vectorized.
     - shuffle.partitions defaults to cores locally; on a cluster set it to
       ~2-3x total cores (or rely on AQE coalescing from a higher initial).
+    - Generated-code cache of 1000 entries (Spark's default is 100). The
+      cache is an LRU of compiled whole-stage and expression classes, so a
+      workload whose working set exceeds it recompiles every class on
+      every pass: Janino, then the JIT again on the fresh classes. A warm
+      ``curate`` perfbench pass needs between 100 and 200 entries: at the
+      default it recompiles about 127 classes every pass, at 200 none
+      after its second pass.
+      1000 leaves headroom for the bench rows and the driver's query
+      windows, whose plans are more varied. It is a static conf, so it
+      can only be set here (or through ``extra_conf``) before the session
+      starts.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -38,6 +49,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

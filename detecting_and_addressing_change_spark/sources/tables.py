@@ -281,6 +281,31 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     return df
 
 
+def local_table(
+    spark: SparkSession, rows, schema: T.StructType | str
+) -> DataFrame:
+    """Driver-built rows as a ``LocalRelation``, shipped as Arrow.
+
+    ``createDataFrame(list)`` parallelizes the rows through a ``PythonRDD``,
+    so the first action on even a 3-row table forks the Python daemon and
+    runs one Python task per partition. An Arrow table becomes a
+    ``LocalRelation`` in the plan and never reaches a Python worker.
+    ``pa.array`` over the Python values keeps ``None`` as null and NaN as
+    NaN (a pandas frame would turn NaN into null too), and an empty
+    ``rows`` keeps the schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 

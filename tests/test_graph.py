@@ -230,3 +230,32 @@ def test_hash_min_raises_on_diameter_exceeding_budget(spark):
         connected_components(
             nodes, edges, "doc_id", "a_id", "b_id", max_iter=3
         )
+
+
+def test_small_graph_route_boundary(spark):
+    """The route probe fetches threshold+1 edges as Arrow columns: a graph
+    of exactly ``threshold`` distinct edges takes the driver union-find
+    (its label table is a LocalRelation leaf), one edge more takes the
+    distributed loop, and both label like the forced-distributed path."""
+    nodes = spark.range(40).withColumnRenamed("id", "doc_id")
+    # 12 distinct edges once normalized: reversed and self pairs drop out
+    edge_rows = [(i, i + 1) for i in range(0, 8)] + [(20, 21), (21, 22)]
+    edge_rows += [(30, 31), (33, 32), (31, 30), (35, 35)]
+    edges = spark.createDataFrame(edge_rows, "a_id int, b_id int")
+    n_edges = 12
+
+    def run(threshold):
+        out = dedup_clusters(nodes, edges, small_graph_threshold=threshold)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        rows = sorted(
+            (r["doc_id"], r["cluster_id"], r["is_canonical"])
+            for r in out.collect()
+        )
+        return "LocalRelation" in plan, rows
+
+    small, at = run(n_edges)
+    distributed, above = run(n_edges - 1)
+    _, forced = run(0)
+    assert small and not distributed
+    assert at == above == forced
+    assert dict((d, c) for d, c, _ in forced)[8] == 0
