@@ -144,15 +144,3 @@ def linear_map_udf(matrix: list[list[float]]):
 
     fn.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
     return pandas_udf(fn, "array<double>")
-
-
-def add_gaussian_noise_col(vec: Column, sigma: Column, seed: int) -> Column:
-    """R5 Gaussian noise injection with a per-batch σ schedule
-    (streams/run_stream_supervised.py:50-54 in reference). Seeded randn for
-    reproducibility within a single run; exact cross-engine determinism is
-    not part of the oracle contract (checked by property tests instead)."""
-    return F.zip_with(
-        vec,
-        vec,
-        lambda x, _: x.cast("double") + F.randn(seed) * sigma,
-    )

@@ -5,9 +5,9 @@ that participates in the oracle contract is built from primitives both
 engines implement identically: integer arithmetic and ``md5`` hex digests
 (SURVEY §2.8 Q22 note).
 
-Used by: the deterministic train/test split (O3, SURVEY §2.5), MinHash
-signatures, SimHash fingerprints, and rolling document fingerprints — the
-dedup family of the LLM-pipeline extensions.
+Used by: the LCG keep-rule and hash-sample buckets, Kirsch-Mitzenmacher
+MinHash signatures, and rolling document fingerprints — the dedup family of
+the LLM-pipeline extensions.
 """
 
 from __future__ import annotations
@@ -26,20 +26,6 @@ def lcg_bucket(key: Column, n_buckets: int) -> Column:
     return (key % M31) * LCG_A % M31 % F.lit(n_buckets)
 
 
-def hash_split_col(key: Column, n_buckets: int = 5, test_bucket: int = 0) -> Column:
-    """O3 deterministic train/test split (SURVEY §2.5): replaces the
-    reference's random ``train_test_split`` (streams/stream_data.py:92-94)
-    with a stable hash so epochs never re-split (SURVEY §8 Q9)."""
-    return lcg_bucket(key, n_buckets) == test_bucket
-
-
-def md5_minhash_col(shingle: Column, perm: int) -> Column:
-    """One MinHash 'permutation': the first 8 hex chars of
-    md5('<perm>:' || shingle). Lexicographic MIN over these hex strings is a
-    valid min-wise hash and computes identically in Spark and DuckDB."""
-    return F.substring(F.md5(F.concat(F.lit(f"{perm}:"), shingle)), 1, 8)
-
-
 M32 = 4_294_967_296  # 2^32
 
 
@@ -52,13 +38,6 @@ def km_hash_pair_cols(shingle: Column) -> tuple[Column, Column]:
     hx = F.conv(F.substring(digest, 1, 8), 16, 10).cast("long")
     hy = F.conv(F.substring(digest, 9, 8), 16, 10).cast("long")
     return hx, hy
-
-
-def km_minhash_col(shingle: Column, perm: int) -> Column:
-    """j-th Kirsch-Mitzenmacher hash of a shingle (max intermediate
-    ~(1+j)*2^32 — safely inside int64)."""
-    hx, hy = km_hash_pair_cols(shingle)
-    return (hx + F.lit(perm) * hy) % F.lit(M32)
 
 
 def md5_pct_col(key: Column) -> Column:
@@ -75,13 +54,6 @@ def md5_pct_col(key: Column) -> Column:
         .cast("long")
         % 100
     )
-
-
-def md5_u16_col(s: Column) -> Column:
-    """First 16 bits of md5(s) as an integer — the per-feature hash for
-    SimHash. conv(hex, 16, 10) is available in Spark; the oracle uses
-    DuckDB's from_hex/CAST equivalent arithmetic."""
-    return F.conv(F.substring(F.md5(s), 1, 4), 16, 10).cast("int")
 
 
 def rolling_fingerprint_udf(window: int = 8, base: int = 257, mod: int = 1_000_000_007):

@@ -40,16 +40,6 @@ def token_count_col(text: Column) -> Column:
     return F.size(words_col(text))
 
 
-def bpe_ish_token_count_col(text: Column) -> Column:
-    """BPE-ish token estimate: count regex word-pieces (runs of alnum up to
-    4 chars, or single non-space symbols). Pure-SQL approximation of a BPE
-    tokenizer's token count for budget estimation at scale."""
-    pieces = F.regexp_extract_all(
-        text, F.lit(r"[A-Za-z0-9]{1,4}|[^A-Za-z0-9\s]"), F.lit(0)
-    )
-    return F.size(pieces)
-
-
 def word_ngrams_col(text: Column, n: int) -> Column:
     """Word n-grams via slice over the split array — no explode/join, stays
     codegen'd. Returns array<string> of space-joined n-grams; empty array

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..sources.tables import local_table
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -749,7 +751,7 @@ def synth_media(spark, n: int = 64) -> DataFrame:
             "duration_ms": 4 if kind == "audio" else (1000 + 37 * i if kind == "video" else None),
         }
         rows.append((i, kind, fmt, payload, meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_table(spark, rows, MEDIA_SCHEMA)
 
 
 RESIZED_SCHEMA = MEDIA_SCHEMA  # same shape: resize is media -> media

@@ -22,7 +22,7 @@ equi-join. Both are provided.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -91,8 +91,3 @@ def range_join_bins(
         (facts[value_col] >= b[lo_col]) & (facts[value_col] < b[hi_col]),
         "inner",
     )
-
-
-def bucketize_col(value: Column, lo: float, width: float) -> Column:
-    """Equi-join alternative for uniform bins: bin id in O(1), no join."""
-    return F.floor((value - F.lit(lo)) / F.lit(width)).cast("int")

@@ -19,6 +19,10 @@ dataflow exactly where required and nowhere else: rows are grouped by
 ``detector_id`` (each group is one logical detector — parallelism across
 detectors is free, SURVEY §4.3), sorted by ``seq_id`` *within* the group,
 and scanned sequentially by an Arrow-batched ``applyInPandas`` kernel.
+That shell (:func:`detector_scan`, with :func:`scan_group` as its per-group
+body) is shared by every sequential detector: any state class with
+``add_element(x) -> flag`` and a ``STATE_SCHEMA`` of its carried fields runs
+through it, batch here and streaming in ``streaming/ddm_stream.py``.
 """
 
 from __future__ import annotations
@@ -36,6 +40,21 @@ from pyspark.sql import types as T
 @dataclass
 class DDMState:
     """Detector state: tiny, serializable (used as streaming state too)."""
+
+    # fields a stream carries across micro-batches (the parameters are
+    # rebuilt from the operator's arguments; in_warning_zone is recomputed
+    # by every add_element)
+    STATE_SCHEMA = T.StructType(
+        [
+            T.StructField("sample_count", T.LongType()),
+            T.StructField("miss_prob", T.DoubleType()),
+            T.StructField("miss_std", T.DoubleType()),
+            T.StructField("miss_prob_sd_min", T.DoubleType()),
+            T.StructField("miss_prob_min", T.DoubleType()),
+            T.StructField("miss_sd_min", T.DoubleType()),
+            T.StructField("in_concept_change", T.BooleanType()),
+        ]
+    )
 
     min_num_instances: int = 30
     warning_level: float = 2.0
@@ -109,6 +128,61 @@ DDM_OUTPUT_SCHEMA = T.StructType(
 )
 
 
+def detector_input(
+    df: DataFrame, detector_col: str, seq_col: str, error_col: str
+) -> DataFrame:
+    """The (detector, seq, error) triple every detector scan reads, cast to
+    string/long/double."""
+    return df.select(
+        F.col(detector_col).cast("string").alias(detector_col),
+        F.col(seq_col).cast("long").alias(seq_col),
+        F.col(error_col).cast("double").alias(error_col),
+    )
+
+
+def scan_group(
+    key: tuple, pdf: pd.DataFrame, st, seq_col: str, error_col: str
+) -> pd.DataFrame:
+    """Sort one detector's rows by ``seq_col``, feed them through ``st`` in
+    that order and return them as a ``DDM_OUTPUT_SCHEMA`` frame. The id is
+    the group key, so a null detector id stays null."""
+    pdf = pdf.sort_values(seq_col)
+    errors = pdf[error_col].astype(float)
+    return pd.DataFrame(
+        {
+            "detector_id": [key[0]] * len(pdf),
+            "seq_id": pdf[seq_col].astype("int64").values,
+            "error": errors.values,
+            "flag": [st.add_element(e) for e in errors],
+        }
+    )
+
+
+def detector_scan(
+    df: DataFrame,
+    state_cls: type,
+    params: dict,
+    detector_col: str,
+    seq_col: str,
+    error_col: str,
+) -> DataFrame:
+    """Batch scan of a sequential detector over DataFrame[detector, seq,
+    error]: groupBy(detector).applyInPandas, one fresh ``state_cls(**params)``
+    per group. Detectors scale out horizontally; a single detector is a
+    single logical sequence and cannot be parallelized without changing
+    semantics (it matches the reference's single shared detector instance,
+    SURVEY §8 Q8)."""
+
+    def scan(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        return scan_group(key, pdf, state_cls(**params), seq_col, error_col)
+
+    return (
+        detector_input(df, detector_col, seq_col, error_col)
+        .groupBy(detector_col)
+        .applyInPandas(scan, DDM_OUTPUT_SCHEMA)
+    )
+
+
 def detect_drift(
     df: DataFrame,
     detector_col: str = "detector_id",
@@ -118,38 +192,15 @@ def detect_drift(
     warning_level: float = 2.0,
     out_control_level: float = 3.0,
 ) -> DataFrame:
-    """Batch-mode DDM over DataFrame[detector_id, seq_id, error].
-
-    groupBy(detector).applyInPandas: each detector's series is delivered to
-    one task (Arrow-batched), sorted by seq_id there, and scanned. Detectors
-    scale out horizontally; a single detector is a single logical sequence
-    and cannot be parallelized without changing semantics (it matches the
-    reference's single shared detector instance, SURVEY §8 Q8).
-    """
+    """Batch-mode DDM over DataFrame[detector_id, seq_id, error]."""
     params = dict(
         min_num_instances=min_num_instances,
         warning_level=warning_level,
         out_control_level=out_control_level,
     )
-
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(seq_col)
-        flags = ddm_scan(pdf[error_col].astype(float).tolist(), **params)
-        return pd.DataFrame(
-            {
-                "detector_id": pdf[detector_col].astype(str).values,
-                "seq_id": pdf[seq_col].astype("int64").values,
-                "error": pdf[error_col].astype(float).values,
-                "flag": flags,
-            }
-        )
-
-    src = df.select(
-        F.col(detector_col).cast("string").alias(detector_col),
-        F.col(seq_col).cast("long").alias(seq_col),
-        F.col(error_col).cast("double").alias(error_col),
+    return detector_scan(
+        df, DDMState, params, detector_col, seq_col, error_col
     )
-    return src.groupBy(detector_col).applyInPandas(scan, DDM_OUTPUT_SCHEMA)
 
 
 def flag_case_expr(metric: Column, drift_at: float, warn_at: float) -> Column:

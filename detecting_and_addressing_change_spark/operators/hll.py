@@ -168,45 +168,3 @@ def merge_hll_batch(
         os.rename(path, path + ".old")
     os.rename(path + ".new", path)
     shutil.rmtree(path + ".old", ignore_errors=True)
-
-
-def hll_oracle_sql(
-    table: str, value_expr: str, group_col: str, p: int = 6
-) -> str:
-    """DuckDB CTE chain mirroring the exact register/estimate arithmetic
-    (same md5-prefix hash, same bin()-length rank, same exact-integer
-    harmonic sum) — ends with ``hest(<group>, est, zero_regs)``."""
-    m = 1 << p
-    w_bits = HASH_BITS - p
-    s_shift = w_bits + 1
-    num = float(_alpha(m)) * float(m * m) * float(1 << s_shift)
-    return f"""
-    hh AS (
-      SELECT {group_col} AS grp,
-             ('0x' || substr(md5(CAST({value_expr} AS VARCHAR)), 1, 15))::BIGINT AS h
-      FROM {table}
-    ),
-    hbr AS (
-      SELECT grp, h // {1 << w_bits} AS bucket,
-             CASE WHEN h % {1 << w_bits} = 0 THEN {w_bits + 1}
-                  ELSE {w_bits + 1} - length(bin(h % {1 << w_bits}))
-             END AS rank
-      FROM hh
-    ),
-    hreg AS (
-      SELECT grp, bucket, MAX(rank) AS reg FROM hbr GROUP BY grp, bucket
-    ),
-    hagg AS (
-      SELECT grp,
-             SUM((1::BIGINT << ({s_shift} - reg))) AS s_nz,
-             COUNT(*) AS nz
-      FROM hreg GROUP BY grp
-    ),
-    hest AS (
-      SELECT grp,
-             {num!r} / CAST(s_nz + ({m} - nz) * (1::BIGINT << {s_shift})
-                            AS DOUBLE) AS est,
-             CAST({m} - nz AS INT) AS zero_regs
-      FROM hagg
-    )
-    """

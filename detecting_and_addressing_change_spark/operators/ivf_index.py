@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_col
 from ..functions.rounding import portable_round
-from ..sources.tables import read_parquet_cached_schema
+from ..sources.tables import local_table, read_parquet_cached_schema
 from .index_commit import recover_all_partition_swaps, swap_partition
 from .kmeans import kmeans_assign_col, kmeans_fit, kmeans_probe_cells_col
 from .similarity import quantize_col
@@ -62,8 +62,8 @@ def build_ivf_index(
     and immediately searches skips the centroid read."""
     centroids = kmeans_fit(corpus, n_centroids, n_iter, id_col, vec_col)
     spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(cid, qc) for cid, qc in centroids], "cell int, qc array<bigint>"
+    local_table(
+        spark, centroids, "cell int, qc array<bigint>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     (
         corpus.select(

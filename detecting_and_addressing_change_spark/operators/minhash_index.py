@@ -41,7 +41,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.tables import forget_footer_schemas, read_parquet_cached_schema
+from ..sources.tables import (
+    forget_footer_schemas,
+    local_table,
+    read_parquet_cached_schema,
+)
 from .dedup import minhash_bands, minhash_candidate_pairs, minhash_signatures
 from .index_commit import commit_table_swap, recover_table_swap
 
@@ -129,7 +133,7 @@ def build_minhash_index(
     _digests(docs, text_col, id_col).write.mode("overwrite").parquet(
         f"{path}/docs/batch=base"
     )
-    empty = spark.createDataFrame([], "dgst string")
+    empty = local_table(spark, [], "dgst string")
     _sign_novel(
         docs, empty, text_col, id_col, num_hashes, shingle_size
     ).write.mode("overwrite").parquet(f"{path}/sigs")
@@ -288,10 +292,10 @@ def init_minhash_index(
     """Empty index state — the starting point for a STREAMING ingest
     (``append_minhash_batch``), where no base build exists yet."""
     sig_fields = ", ".join(f"h{j} long" for j in range(num_hashes))
-    spark.createDataFrame([], f"dgst string, {sig_fields}").write.mode(
+    local_table(spark, [], f"dgst string, {sig_fields}").write.mode(
         "overwrite"
     ).parquet(f"{path}/sigs")
-    spark.createDataFrame([], "doc_id long, dgst string").write.mode(
+    local_table(spark, [], "doc_id long, dgst string").write.mode(
         "overwrite"
     ).parquet(f"{path}/docs/batch=-1")
 

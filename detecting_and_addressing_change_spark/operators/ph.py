@@ -25,17 +25,24 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .ddm import DDM_OUTPUT_SCHEMA
+from .ddm import detector_scan
 
 
 @dataclass
 class PageHinkleyState:
-    """Detector state: tiny, serializable."""
+    """Detector state: tiny, serializable (used as streaming state too)."""
+
+    STATE_SCHEMA = T.StructType(
+        [
+            T.StructField("sample_count", T.LongType()),
+            T.StructField("mean", T.DoubleType()),
+            T.StructField("cum", T.DoubleType()),
+            T.StructField("cum_min", T.DoubleType()),
+        ]
+    )
 
     delta: float = 0.005
     threshold: float = 1.0
@@ -82,29 +89,12 @@ def detect_drift_ph(
     min_instances: int = 30,
 ) -> DataFrame:
     """Batch-mode Page-Hinkley over DataFrame[detector_id, seq_id, error]
-    — same shape as :func:`operators.ddm.detect_drift`: each detector's
-    series is one applyInPandas group, sorted by seq_id, scanned
-    sequentially; the output schema matches DDM's so the two detectors
-    are drop-in alternatives in the experiment pipelines."""
+    — the same :func:`operators.ddm.detector_scan` as DDM, so the output
+    schema matches and the two detectors are drop-in alternatives in the
+    experiment pipelines."""
     params = dict(
         delta=delta, threshold=threshold, min_instances=min_instances
     )
-
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(seq_col)
-        flags = ph_scan(pdf[error_col].astype(float).tolist(), **params)
-        return pd.DataFrame(
-            {
-                "detector_id": pdf[detector_col].astype(str).values,
-                "seq_id": pdf[seq_col].astype("int64").values,
-                "error": pdf[error_col].astype(float).values,
-                "flag": flags,
-            }
-        )
-
-    src = df.select(
-        F.col(detector_col).cast("string").alias(detector_col),
-        F.col(seq_col).cast("long").alias(seq_col),
-        F.col(error_col).cast("double").alias(error_col),
+    return detector_scan(
+        df, PageHinkleyState, params, detector_col, seq_col, error_col
     )
-    return src.groupBy(detector_col).applyInPandas(scan, DDM_OUTPUT_SCHEMA)

@@ -33,12 +33,3 @@ def count_window_agg(
         .groupBy(bucket_name)
         .agg(*aggs)
     )
-
-
-def drop_incomplete_tail(
-    windowed: DataFrame, count_col: str, batch_size: int
-) -> DataFrame:
-    """O5 tail-drop: the reference's detection runners skip the final short
-    batch (streams/run_stream_supervised.py:43-46) while training consumes it
-    (models/wos_train_lstm.py:83-86) — SURVEY §8 Q4. Explicit opt-in here."""
-    return windowed.filter(F.col(count_col) == batch_size)

@@ -36,7 +36,7 @@ from .registry import query
 # warm_start=sys.maxsize in fine_tuning_experiments.py — so fine-tuning
 # is unconditional, not detection-gated, and this query mirrors that).
 # Here the model is the exact-sufficient-statistics NB and "fine-tune"
-# is fine_tune_nb (streaming/prequential.py) — the same test-then-train
+# is fine_tune (streaming/prequential.py) — the same test-then-train
 # session loop, whose model state after N batches is the exact merge of
 # the pre-trained stats with the batches' stats.
 #
@@ -54,7 +54,7 @@ from .registry import query
 # provable: tests/test_adaptation_pipelines.py::
 # test_fine_tune_adapts_to_new_distribution (separable synthetic
 # classes, short pre-train, accuracy 0.0 -> >0.75 through the same
-# fine_tune_nb), and the LSTM half in tests/test_streaming.py::
+# fine_tune), and the LSTM half in tests/test_streaming.py::
 # test_fine_tune_lstm_adapts. This row attests the SESSION end-to-end
 # on driver data with every output column — series, held-out correct
 # counts, and the improvement boolean — recomputed exactly by the
@@ -157,14 +157,14 @@ def x103(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-trained NB), the untrained stream (space B scored by the SAME
     model — the reference's abrupt embedding drift), and the fine-tuned
     stream (space B held-out docs scored by the model AFTER a
-    fine_tune_nb session over B's first 4 batches), plus the exact
+    fine_tune session over B's first 4 batches), plus the exact
     held-out correct counts both ways and the improvement boolean —
     all recomputed by the oracle, nothing pinned."""
     from pyspark.sql import Window
 
     from ..operators.nb import nb_collect_stats, nb_fit, nb_predict
     from ..pipelines import pooled_features_models
-    from ..streaming.prequential import PrequentialNB, fine_tune_nb
+    from ..streaming.prequential import PrequentialNB, fine_tune
 
     docs = load_table(spark, sf_dir, "documents")
     lang_codes = (
@@ -205,7 +205,7 @@ def x103(spark: SparkSession, sf_dir: str) -> DataFrame:
         # collect on the next line populates the persist cache in the
         # same job that computes the stats
         stats_a = nb_collect_stats(stats_a_df)  # while still cached
-        fine_tune_nb(
+        fine_tune(
             loop,
             feats_b.join(labels, "doc_id"),
             n_batches=_X103_FT_DOCS // _X103_BATCH,

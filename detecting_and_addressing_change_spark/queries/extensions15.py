@@ -40,7 +40,7 @@ from ..sources.tables import read_parquet_cached_schema
 # x108 attests the half that genuinely recovers).
 #
 # The session runs the REAL loop classes (streaming/prequential.py
-# PrequentialLSTM + fine_tune_lstm: per-batch Spark collect -> test with
+# PrequentialLSTM + fine_tune: per-batch Spark collect -> test with
 # current weights -> one Adam step), on streams derived from driver
 # data: the 32 lowest documents are replicated into deterministic
 # marker-separable token sequences (the test_fine_tune_lstm_adapts
@@ -160,7 +160,7 @@ def x108(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..operators.lstm import lstm_predict
-    from ..streaming.prequential import PrequentialLSTM, fine_tune_lstm
+    from ..streaming.prequential import PrequentialLSTM, fine_tune
 
     docs = load_table(spark, sf_dir, "documents")
     w = Window.orderBy("doc_id")
@@ -196,7 +196,7 @@ def x108(spark: SparkSession, sf_dir: str) -> DataFrame:
         label_col="label",
         id_col="seq_id",
     )
-    fine_tune_lstm(
+    fine_tune(
         loop,
         df_a,
         n_batches=_X108_PRETRAIN_BATCHES,
@@ -206,7 +206,7 @@ def x108(spark: SparkSession, sf_dir: str) -> DataFrame:
     pretrain_tail = [a for _, a, _ in loop.results()[-3:]]
     pre_weights = _copy.deepcopy(loop.weights)
 
-    fine_tune_lstm(
+    fine_tune(
         loop,
         df_b,
         n_batches=_X108_FT_BATCHES,

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .operators.embedder import pooled_embed_documents_tagged
 from .operators.ivf_index import build_ivf_index, ivf_index_search
-from .sources.tables import read_parquet_cached_schema
+from .sources.tables import local_table, read_parquet_cached_schema
 
 # chunk_id = doc_id * CHUNK_ID_BASE + chunk_idx. Chunking covers the WHOLE
 # document (no truncation), so the base bounds the supported document
@@ -138,8 +138,8 @@ def search_text(
     """Embed the query strings exactly like the chunks and probe the
     index: DataFrame[query_id, doc_id, chunk_idx, chunk_text, cosine,
     rnk]. query_id is the position in ``query_texts``."""
-    qdf = spark.createDataFrame(
-        list(enumerate(query_texts)), "query_id long, text string"
+    qdf = local_table(
+        spark, list(enumerate(query_texts)), "query_id long, text string"
     )
     qvecs = _embed_as(qdf, "query_id", "text", model, dim).select(
         F.col("vec_id").alias("query_id"),

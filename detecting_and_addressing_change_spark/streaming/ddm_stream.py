@@ -1,12 +1,12 @@
 """Structured Streaming DDM (SURVEY §2.6 T1, §4.2 item 1 — streaming side).
 
-``applyInPandasWithState`` keyed by ``detector_id``: state is the tiny
-DDMState tuple; each micro-batch's rows are sorted by ``seq_id`` within the
-key before being scanned. The source must deliver per-key monotonically
-increasing ``seq_id`` across micro-batches (the replay source does); rows
-arriving out of order ACROSS batches would be a semantic error for DDM, as
-it is for the reference's strictly-ordered stream
-(``streams/stream_data.py:116-157``).
+``applyInPandasWithState`` keyed by ``detector_id``: the group state holds
+the detector's ``STATE_SCHEMA`` fields; each micro-batch's rows are sorted
+by ``seq_id`` within the key before being scanned. The source must deliver
+per-key monotonically increasing ``seq_id`` across micro-batches (the
+replay source does); rows arriving out of order ACROSS batches would be a
+semantic error for DDM, as it is for the reference's strictly-ordered
+stream (``streams/stream_data.py:116-157``).
 
 Batch/stream parity (SURVEY §5.2.5): with the same ordered input this emits
 exactly what ``operators.ddm.detect_drift`` emits — pinned by
@@ -15,63 +15,64 @@ tests/test_streaming.py.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterable
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.ddm import DDM_OUTPUT_SCHEMA, DDMState
-
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("sample_count", T.LongType()),
-        T.StructField("miss_prob", T.DoubleType()),
-        T.StructField("miss_std", T.DoubleType()),
-        T.StructField("miss_prob_sd_min", T.DoubleType()),
-        T.StructField("miss_prob_min", T.DoubleType()),
-        T.StructField("miss_sd_min", T.DoubleType()),
-        T.StructField("in_concept_change", T.BooleanType()),
-    ]
+from ..operators.ddm import (
+    DDM_OUTPUT_SCHEMA,
+    DDMState,
+    detector_input,
+    scan_group,
 )
 
-_INF = float("inf")
 
+def detector_stream(
+    stream_df: DataFrame,
+    state_cls: type,
+    params: dict,
+    detector_col: str,
+    seq_col: str,
+    error_col: str,
+) -> DataFrame:
+    """Streaming twin of :func:`operators.ddm.detector_scan`: the same
+    per-group scan, with ``state_cls.STATE_SCHEMA``'s fields carried in the
+    group state from one micro-batch to the next.
 
-def _state_to_tuple(st: DDMState) -> tuple:
-    def enc(x: float) -> float:
-        return 1e308 if math.isinf(x) else x
+    The state store round-trips IEEE doubles, ±inf included, so the
+    detectors' +inf minima are stored as they are. Checkpoints written when
+    +inf was stored as 1e308 resume unchanged: every comparison the two
+    kernels make against such a minimum comes out the same for 1e308 as for
+    +inf (``p + s <= 1e308`` holds, and ``1e308 + 2 * 1e308`` overflows to
+    inf)."""
+    fields = state_cls.STATE_SCHEMA.fieldNames()
+
+    def fn(
+        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        st = state_cls(**params)
+        if state.exists:
+            for name, value in zip(fields, state.get):
+                setattr(st, name, value)
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        out = scan_group(key, pdf, st, seq_col, error_col)
+        state.update(tuple(getattr(st, name) for name in fields))
+        yield out
 
     return (
-        st.sample_count,
-        st.miss_prob,
-        st.miss_std,
-        enc(st.miss_prob_sd_min),
-        enc(st.miss_prob_min),
-        enc(st.miss_sd_min),
-        st.in_concept_change,
+        detector_input(stream_df, detector_col, seq_col, error_col)
+        .groupBy(detector_col)
+        .applyInPandasWithState(
+            fn,
+            outputStructType=DDM_OUTPUT_SCHEMA,
+            stateStructType=state_cls.STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-
-
-def _tuple_to_state(t: tuple, **params) -> DDMState:
-    def dec(x: float) -> float:
-        return _INF if x >= 1e308 else x
-
-    st = DDMState(**params)
-    (
-        st.sample_count,
-        st.miss_prob,
-        st.miss_std,
-        st.miss_prob_sd_min,
-        st.miss_prob_min,
-        st.miss_sd_min,
-        st.in_concept_change,
-    ) = (t[0], t[1], t[2], dec(t[3]), dec(t[4]), dec(t[5]), t[6])
-    return st
 
 
 def detect_drift_stream(
@@ -90,160 +91,6 @@ def detect_drift_stream(
         warning_level=warning_level,
         out_control_level=out_control_level,
     )
-
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        st = (
-            _tuple_to_state(state.get, **params)
-            if state.exists
-            else DDMState(**params)
-        )
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(seq_col)
-        flags = [st.add_element(e) for e in pdf[error_col].astype(float)]
-        state.update(_state_to_tuple(st))
-        yield pd.DataFrame(
-            {
-                "detector_id": [key[0]] * len(pdf),
-                "seq_id": pdf[seq_col].astype("int64").values,
-                "error": pdf[error_col].astype(float).values,
-                "flag": flags,
-            }
-        )
-
-    src = stream_df.select(
-        F.col(detector_col).cast("string").alias(detector_col),
-        F.col(seq_col).cast("long").alias(seq_col),
-        F.col(error_col).cast("double").alias(error_col),
+    return detector_stream(
+        stream_df, DDMState, params, detector_col, seq_col, error_col
     )
-    return src.groupBy(detector_col).applyInPandasWithState(
-        fn,
-        outputStructType=DDM_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Spark 4.x transformWithStateInPandas variant (SURVEY §4.2 item 1): the
-# successor API to applyInPandasWithState — explicit typed ValueState,
-# init/close lifecycle, and composable state variables. Same semantics, same
-# bit-exact kernel; parity with both the batch operator and the
-# applyInPandasWithState path is pinned in tests/test_streaming.py (the test
-# skips where the API's protobuf dependency is absent — this container has
-# no google.protobuf, which TWS's state protocol requires at runtime).
-# ---------------------------------------------------------------------------
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf for its state
-    protocol (pyspark/sql/streaming/proto); absent here, the query crashes
-    at pre-init. Capability-gate like the HF embedder backend."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def detect_drift_stream_tws(
-    stream_df: DataFrame,
-    detector_col: str = "detector_id",
-    seq_col: str = "seq_id",
-    error_col: str = "error",
-    min_num_instances: int = 30,
-    warning_level: float = 2.0,
-    out_control_level: float = 3.0,
-) -> DataFrame:
-    """Streaming DDM via ``transformWithStateInPandas`` — one ValueState
-    per detector key holding the 7-field DDM tuple."""
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, which is "
-            "not installed in this container; use detect_drift_stream "
-            "(applyInPandasWithState) — identical semantics"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    params = dict(
-        min_num_instances=min_num_instances,
-        warning_level=warning_level,
-        out_control_level=out_control_level,
-    )
-
-    class DDMProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ddm", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            st = (
-                _tuple_to_state(tuple(self._state.get()), **params)
-                if self._state.exists()
-                else DDMState(**params)
-            )
-            pdf = pd.concat(list(rows), ignore_index=True)
-            pdf = pdf.sort_values(seq_col)
-            flags = [st.add_element(e) for e in pdf[error_col].astype(float)]
-            self._state.update(_state_to_tuple(st))
-            yield pd.DataFrame(
-                {
-                    "detector_id": [key[0]] * len(pdf),
-                    "seq_id": pdf[seq_col].astype("int64").values,
-                    "error": pdf[error_col].astype(float).values,
-                    "flag": flags,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    src = stream_df.select(
-        F.col(detector_col).cast("string").alias(detector_col),
-        F.col(seq_col).cast("long").alias(seq_col),
-        F.col(error_col).cast("double").alias(error_col),
-    )
-    return src.groupBy(detector_col).transformWithStateInPandas(
-        statefulProcessor=DDMProcessor(),
-        outputStructType=DDM_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def detect_drift_stream_auto(
-    stream_df: DataFrame,
-    detector_col: str = "detector_id",
-    seq_col: str = "seq_id",
-    error_col: str = "error",
-    min_num_instances: int = 30,
-    warning_level: float = 2.0,
-    out_control_level: float = 3.0,
-    prefer_tws: bool = True,
-) -> DataFrame:
-    """Capability-probed streaming-DDM entry point (VERDICT r7 #8): picks
-    ``transformWithStateInPandas`` (the Spark 4.x stateful API — typed
-    ValueState, init/close lifecycle) when the runtime can actually run it
-    (``tws_available()``: google.protobuf present), else the
-    ``applyInPandasWithState`` twin. The two paths are parity-pinned to
-    the same bit-exact DDM kernel (tests/test_streaming.py), so a
-    protobuf-equipped deployment gets the newer API with NO code change
-    and an environment like this container silently keeps the portable
-    path. ``prefer_tws=False`` forces the applyInPandasWithState path
-    (for A/B-ing state backends)."""
-    kwargs = dict(
-        detector_col=detector_col,
-        seq_col=seq_col,
-        error_col=error_col,
-        min_num_instances=min_num_instances,
-        warning_level=warning_level,
-        out_control_level=out_control_level,
-    )
-    if prefer_tws and tws_available():
-        return detect_drift_stream_tws(stream_df, **kwargs)
-    return detect_drift_stream(stream_df, **kwargs)

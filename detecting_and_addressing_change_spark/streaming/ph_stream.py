@@ -1,50 +1,17 @@
 """Structured Streaming Page-Hinkley — the x57 detector as a live stream
-operator, mirroring ``streaming/ddm_stream.py``: ``applyInPandasWithState``
-keyed by ``detector_id``, state is the 4-field PageHinkleyState tuple,
-rows sorted by ``seq_id`` within each micro-batch. Same ordered-source
-contract as the DDM stream (the replay source provides it); batch/stream
-parity is pinned by tests/test_streaming.py.
-
-State encoding note: ``cum_min`` starts at +infinity, which Arrow cannot
-round-trip through the state store, so it is encoded as 1e308. This
-assumes the monitored series is a bounded error/quality rate (|cum| far
-below 1e308) — any legitimate cum_min >= 1e308 would decode back to
-+infinity. That is unreachable for the rate-valued series this engine
-feeds its detectors, but it is a domain restriction on the round-trip."""
+operator: the same ``detector_stream`` shell as ``streaming/ddm_stream.py``
+(``applyInPandasWithState`` keyed by ``detector_id``, rows sorted by
+``seq_id`` within each micro-batch), carrying ``PageHinkleyState``'s
+``STATE_SCHEMA``. Same ordered-source contract as the DDM stream (the
+replay source provides it); batch/stream parity is pinned by
+tests/test_streaming.py."""
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterable
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.ddm import DDM_OUTPUT_SCHEMA
 from ..operators.ph import PageHinkleyState
-
-PH_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("sample_count", T.LongType()),
-        T.StructField("mean", T.DoubleType()),
-        T.StructField("cum", T.DoubleType()),
-        T.StructField("cum_min", T.DoubleType()),
-    ]
-)
-
-_INF = float("inf")
-
-
-def _enc(x: float) -> float:
-    return 1e308 if math.isinf(x) else x
-
-
-def _dec(x: float) -> float:
-    return _INF if x >= 1e308 else x
+from .ddm_stream import detector_stream
 
 
 def detect_drift_ph_stream(
@@ -62,43 +29,6 @@ def detect_drift_ph_stream(
     params = dict(
         delta=delta, threshold=threshold, min_instances=min_instances
     )
-
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        st = PageHinkleyState(**params)
-        if state.exists:
-            t = state.get
-            st.sample_count, st.mean, st.cum, st.cum_min = (
-                t[0],
-                t[1],
-                t[2],
-                _dec(t[3]),
-            )
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(seq_col)
-        flags = [st.add_element(e) for e in pdf[error_col].astype(float)]
-        state.update(
-            (st.sample_count, st.mean, st.cum, _enc(st.cum_min))
-        )
-        yield pd.DataFrame(
-            {
-                "detector_id": [key[0]] * len(pdf),
-                "seq_id": pdf[seq_col].astype("int64").values,
-                "error": pdf[error_col].astype(float).values,
-                "flag": flags,
-            }
-        )
-
-    src = stream_df.select(
-        F.col(detector_col).cast("string").alias(detector_col),
-        F.col(seq_col).cast("long").alias(seq_col),
-        F.col(error_col).cast("double").alias(error_col),
-    )
-    return src.groupBy(detector_col).applyInPandasWithState(
-        fn,
-        outputStructType=DDM_OUTPUT_SCHEMA,
-        stateStructType=PH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return detector_stream(
+        stream_df, PageHinkleyState, params, detector_col, seq_col, error_col
     )

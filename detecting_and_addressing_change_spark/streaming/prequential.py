@@ -91,33 +91,6 @@ class PrequentialNB:
         return list(self.history)
 
 
-def fine_tune_nb(
-    loop: "PrequentialNB",
-    new_data: DataFrame,
-    n_batches: int,
-    batch_size: int = 32,
-    seq_col: str = "doc_id",
-) -> "PrequentialNB":
-    """U8 fine-tune session (adaptation/fine_tuning.py:10-97): continue
-    test-then-train over the first n_batches of a NEW-distribution table —
-    a bounded replay (T5). The NB 'fine-tune' is the exact partial_fit merge,
-    so adaptation is deterministic and order-exact."""
-    from pyspark.sql import functions as F
-
-    bounded = new_data.filter(
-        F.col(seq_col) < n_batches * batch_size
-    ).withColumn("__bucket", F.floor(F.col(seq_col) / batch_size))
-    buckets = sorted(
-        r["__bucket"]
-        for r in bounded.select("__bucket").distinct().collect()
-    )
-    for b in buckets:
-        loop.process_batch(
-            bounded.filter(F.col("__bucket") == b).drop("__bucket"), int(b)
-        )
-    return loop
-
-
 @dataclass
 class PrequentialLSTM:
     """T3 test-then-train for the LSTM classifier (U2 + U8's LSTM half).
@@ -197,17 +170,19 @@ class PrequentialLSTM:
         return list(self.history)
 
 
-def fine_tune_lstm(
-    loop: "PrequentialLSTM",
+def fine_tune(
+    loop: "PrequentialNB | PrequentialLSTM",
     new_data: DataFrame,
     n_batches: int,
     batch_size: int = 32,
     seq_col: str = "doc_id",
-) -> "PrequentialLSTM":
-    """U8 fine-tune session, LSTM half (adaptation/fine_tuning.py:10-97):
-    continue test-then-train over the first n_batches of a NEW-distribution
-    table — a bounded replay (T5) through the same one-Adam-step-per-batch
-    cadence as the original stream. Mirrors fine_tune_nb."""
+) -> "PrequentialNB | PrequentialLSTM":
+    """U8 fine-tune session (adaptation/fine_tuning.py:10-97): continue
+    test-then-train over the first n_batches of a NEW-distribution table —
+    a bounded replay (T5) through the loop's own ``process_batch`` cadence.
+    For NB that is the exact partial_fit merge (deterministic and
+    order-exact); for the LSTM it is one Adam step per batch, as in the
+    original stream."""
     bounded = new_data.filter(
         F.col(seq_col) < n_batches * batch_size
     ).withColumn("__bucket", F.floor(F.col(seq_col) / batch_size))

@@ -56,12 +56,6 @@ def synthetic_detector_feed(
     )
 
 
-def class_universe(spark: SparkSession, n_classes: int) -> DataFrame:
-    """A8: the fixed label dim table (np.arange(n_classes) in reference,
-    models/wos_train_nb.py:55)."""
-    return spark.range(n_classes).select(F.col("id").cast("int").alias("cls"))
-
-
 def sigma_schedule_for(
     buckets: DataFrame,
     bucket_col: str = "bucket",

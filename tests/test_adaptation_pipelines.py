@@ -44,7 +44,7 @@ def test_unsupervised_drift_pseudo_labels(spark, labeled_docs):  # noqa: F811
 def test_fine_tune_adapts_to_new_distribution(spark):
     from detecting_and_addressing_change_spark.streaming.prequential import (
         PrequentialNB,
-        fine_tune_nb,
+        fine_tune,
     )
 
     rng = np.random.RandomState(21)
@@ -77,7 +77,7 @@ def test_fine_tune_adapts_to_new_distribution(spark):
     # history has ONE pre-train entry (batch 0 trains only), so the first
     # fine-tune score is results()[1:]
     new = mk(6 * batch, label_shift=1)
-    fine_tune_nb(loop, new, n_batches=6, batch_size=batch)
+    fine_tune(loop, new, n_batches=6, batch_size=batch)
     accs_new = [a for _, a, _ in loop.results()[1:]]
     # model trained on the old concept mislabels everything at the seam;
     # once the new data dominates the merged stats, accuracy recovers

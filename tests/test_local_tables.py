@@ -174,3 +174,83 @@ def test_training_shard_tables_are_written_without_parallelize(
         assert vocab.agg(F.min("token_id")).first()[0] == 1
         if tokenizer == "bpe":
             assert spark.read.parquet(f"{tmp}/run/merges").count() == 4
+
+
+def test_minhash_index_empty_tables_are_written_without_parallelize(
+    spark, no_parallelize, tmp_path
+):
+    from detecting_and_addressing_change_spark.operators.minhash_index import (
+        build_minhash_index,
+        init_minhash_index,
+    )
+
+    init_minhash_index(spark, str(tmp_path / "stream"), num_hashes=2)
+    sigs = spark.read.parquet(str(tmp_path / "stream/sigs"))
+    assert sigs.columns == ["dgst", "h0", "h1"] and sigs.count() == 0
+    docs = spark.read.parquet(str(tmp_path / "stream/docs"))
+    assert docs.count() == 0
+    # the base build signs against an empty local digest table
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = local_table(
+        spark, [(1, text), (2, text), (3, "a b c d e f g")],
+        "doc_id long, text string",
+    )
+    build_minhash_index(docs, str(tmp_path / "batch"), num_hashes=2)
+    assert spark.read.parquet(str(tmp_path / "batch/sigs")).count() == 2
+
+
+def test_ivf_centroid_table_is_written_without_parallelize(
+    spark, no_parallelize, tmp_path
+):
+    from detecting_and_addressing_change_spark.operators.ivf_index import (
+        build_ivf_index,
+        load_ivf_centroids,
+    )
+
+    emb = local_table(
+        spark,
+        [(i, [float(i % 4), float(i // 4), 1.0]) for i in range(16)],
+        "vec_id long, embedding array<float>",
+    )
+    path = str(tmp_path / "ivf")
+    built = build_ivf_index(emb, path, n_centroids=2, n_iter=1)
+    assert load_ivf_centroids(spark, path) == sorted(built)
+
+
+def test_search_text_query_table_is_local(spark, no_parallelize, tmp_path):
+    from detecting_and_addressing_change_spark.retrieval import (
+        build_text_index,
+        search_text,
+    )
+
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    docs = local_table(
+        spark,
+        [(i, " ".join(words[i:] + words[:i])) for i in range(6)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "rag")
+    build_text_index(docs, path, n_centroids=2)
+    # the search checkpoints its probe side (a LogicalRDD too), so the
+    # fixture, not the plan, is the check here
+    hits = search_text(spark, path, [" ".join(words)], k=1)
+    top = min(hits.collect(), key=lambda h: h["rnk"])
+    assert top["cosine"] == 1.0
+
+
+def test_synth_media_is_local_and_keeps_null_meta(spark, no_parallelize):
+    import hashlib
+
+    from detecting_and_addressing_change_spark.multimodal.binary_ops import (
+        MEDIA_SCHEMA,
+        synth_media,
+    )
+
+    media = synth_media(spark, n=6)
+    assert _analyzed(media) == "LocalRelation"
+    assert media.schema == MEDIA_SCHEMA
+    rows = {r["media_id"]: r for r in media.collect()}
+    assert tuple(rows[0]["meta"]) == (4, 3, None, None)  # image
+    assert tuple(rows[1]["meta"]) == (None, None, 8000, 4)  # audio
+    assert tuple(rows[2]["meta"]) == (None, None, None, 1074)  # video
+    assert bytes(rows[5]["data"]) == hashlib.md5(b"media-5").digest() * 9

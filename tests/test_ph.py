@@ -104,7 +104,8 @@ def test_ph_stream_matches_batch(spark):
 def test_detector_fleet_parallelism(spark):
     """The fleet claim (SCALE.md): 64 independent detectors process in ONE
     keyed applyInPandas job — per-key flags match the kernel run on that
-    key's series alone, for both detectors."""
+    key's series alone, for both detectors. A null detector id is its own
+    series and comes back null, not as the string "None"."""
     from detecting_and_addressing_change_spark.operators.ddm import (
         ddm_scan,
         detect_drift,
@@ -117,8 +118,9 @@ def test_detector_fleet_parallelism(spark):
         s = list(0.1 + 0.03 * rng.randn(flip)) + list(
             0.6 + 0.03 * rng.randn(280 - flip)
         )
-        series[f"d{k}"] = s
-        rows += [(f"d{k}", i, float(v)) for i, v in enumerate(s)]
+        det = f"d{k}" if k else None
+        series[det] = s
+        rows += [(det, i, float(v)) for i, v in enumerate(s)]
     df = spark.createDataFrame(
         rows, "detector_id string, seq_id long, error double"
     )

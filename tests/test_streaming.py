@@ -4,6 +4,7 @@ streaming DDM pipeline and require batch/stream parity; run the prequential
 
 from __future__ import annotations
 
+import math
 import tempfile
 
 import numpy as np
@@ -160,63 +161,13 @@ def test_prequential_lstm_loop(spark):
     assert all(f in {"N", "W", "D"} for _, _, f in res)
 
 
-def test_tws_stream_matches_batch(spark, error_rows):
-    """transformWithStateInPandas DDM == batch operator flag-for-flag (the
-    Spark 4.x stateful API next to the applyInPandasWithState path).
-    Skips where TWS's protobuf dependency is absent (this container)."""
-    from detecting_and_addressing_change_spark.streaming.ddm_stream import (
-        detect_drift_stream_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        import pytest
-
-        pytest.skip("google.protobuf absent: transformWithStateInPandas "
-                    "cannot initialize its state protocol here")
-    from detecting_and_addressing_change_spark.streaming.replay import (
-        read_replay_stream,
-        stage_replay_files,
-    )
-
-    df = spark.createDataFrame(
-        error_rows, "detector_id string, seq_id long, error double"
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        staged = f"{tmp}/staged"
-        stage_replay_files(df, "seq_id", staged, batch_size=200)
-        stream = read_replay_stream(
-            spark, staged, "detector_id string, seq_id long, error double"
-        )
-        out = detect_drift_stream_tws(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("ddm_tws_out")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.sql(
-            "SELECT * FROM ddm_tws_out ORDER BY detector_id, seq_id"
-        ).collect()
-
-    batch = {
-        (r["detector_id"], r["seq_id"]): r["flag"]
-        for r in detect_drift(df).collect()
-    }
-    assert len(got) == len(error_rows)
-    for r in got:
-        assert batch[(r["detector_id"], r["seq_id"])] == r["flag"]
-
-
 def test_fine_tune_lstm_adapts(spark):
     """U8 LSTM half: after drift (marker dimensions swapped), a bounded
     fine-tune replay on new-distribution batches recovers accuracy — the
     reference's adaptation (a) strategy on the LSTM classifier."""
     from detecting_and_addressing_change_spark.streaming.prequential import (
         PrequentialLSTM,
-        fine_tune_lstm,
+        fine_tune,
     )
 
     rng = np.random.RandomState(21)
@@ -251,7 +202,7 @@ def test_fine_tune_lstm_adapts(spark):
         "doc_id long, tokens array<array<double>>, label int",
     )
     n_before = len(loop.results())
-    fine_tune_lstm(
+    fine_tune(
         loop,
         drifted.withColumn("doc_id", F.col("doc_id") - 10_000),
         n_batches=24,
@@ -454,13 +405,15 @@ def test_quality_signals_stream_matches_batch(spark):
         assert batch[r["doc_id"]] == tuple(r)[1:], r["doc_id"]
 
 
-def test_detector_stream_restart_carries_state(spark, error_rows):
-    """Kill-and-restart for the streaming detector: half the series, a
-    completed availableNow run, then the REST staged and a NEW query on
+@pytest.mark.parametrize("split", [10, 400])
+def test_detector_stream_restart_carries_state(spark, error_rows, split):
+    """Kill-and-restart for the streaming detector: the head of the series,
+    a completed availableNow run, then the REST staged and a NEW query on
     the SAME checkpoint — the detector state (counts, p/s minima) must
     carry across the restart so the full flag sequence equals the batch
     operator. This is the S6 restart contract for the detector path, not
-    just the upsert sink."""
+    just the upsert sink. A split at 10 rows is below DDM's
+    min_num_instances, so the checkpointed minima are still +inf."""
     from detecting_and_addressing_change_spark.streaming.ddm_stream import (
         detect_drift_stream,
     )
@@ -472,9 +425,8 @@ def test_detector_stream_restart_carries_state(spark, error_rows):
     df = spark.createDataFrame(
         error_rows, "detector_id string, seq_id long, error double"
     )
-    half = 400
-    first = df.filter(F.col("seq_id") < half)
-    rest = df.filter(F.col("seq_id") >= half)
+    first = df.filter(F.col("seq_id") < split)
+    rest = df.filter(F.col("seq_id") >= split)
     schema = "detector_id string, seq_id long, error double"
     with tempfile.TemporaryDirectory() as tmp:
         staged = f"{tmp}/staged"
@@ -500,7 +452,14 @@ def test_detector_stream_restart_carries_state(spark, error_rows):
             return rows
 
         got1 = run_round()
-        assert len(got1) == half * 2  # two detectors
+        assert len(got1) == split * 2  # two detectors
+        if split < 30:  # below min_num_instances: stored as +inf, no sentinel
+            state = spark.read.format("statestore").load(f"{tmp}/ckpt")
+            assert {
+                r["value"]["groupState"][f]
+                for r in state.collect()
+                for f in ("miss_prob_sd_min", "miss_prob_min", "miss_sd_min")
+            } == {math.inf}
         stage_replay_files(
             rest, "seq_id", staged, batch_size=100, start_index=n1
         )
@@ -704,29 +663,6 @@ def test_x72_fleet_streams_with_restart_parity(spark):
     assert len(seen) == len(batch) == n_buckets * 3
     for key, val in seen.items():
         assert batch[key] == val, key
-
-
-def test_auto_selection_routes_by_capability(monkeypatch):
-    """detect_drift_stream_auto picks the TWS path iff the runtime probe
-    passes (and prefer_tws is set); no Spark session needed — routing is
-    decided before any plan is built."""
-    from detecting_and_addressing_change_spark.streaming import ddm_stream
-
-    calls = []
-    monkeypatch.setattr(
-        ddm_stream, "detect_drift_stream_tws",
-        lambda df, **kw: calls.append("tws"),
-    )
-    monkeypatch.setattr(
-        ddm_stream, "detect_drift_stream",
-        lambda df, **kw: calls.append("apiws"),
-    )
-    monkeypatch.setattr(ddm_stream, "tws_available", lambda: True)
-    ddm_stream.detect_drift_stream_auto(None)
-    monkeypatch.setattr(ddm_stream, "tws_available", lambda: False)
-    ddm_stream.detect_drift_stream_auto(None)
-    ddm_stream.detect_drift_stream_auto(None, prefer_tws=False)
-    assert calls == ["tws", "apiws", "apiws"]
 
 
 def test_scoped_state_partitions_restores_on_error(spark):
