@@ -14,8 +14,14 @@ Backends:
   functions of the text, which is what the drift experiments need (swapping
   the embedding space mid-stream IS the abrupt-drift simulation, SURVEY §0
   item 6a).
-- ``hf``    — real transformers, gated behind an import-try (not available
-  in this container; the interface is the contract).
+- ``mini``  — deterministic numpy attention encoder
+  (``operators/transformer.py``): contextual token states under hash
+  weights.
+- ``hf``    — real transformers, gated behind an import check (it raises
+  unless torch and transformers are installed).
+
+:func:`pooled_embed_documents_tagged` fuses the hash backend with mean
+pooling for the drift experiments and retrieval.
 """
 
 from __future__ import annotations
@@ -157,60 +163,6 @@ def embed_documents(
     raise ValueError(f"unknown backend {backend!r}")
 
 
-def embed_documents_tagged(
-    docs: DataFrame,
-    dim: int = 8,
-    max_seq_len: int = 512,
-    backend: str = "hash",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    model_col: str = "model",
-) -> DataFrame:
-    """Multi-model variant of :func:`embed_documents`: ``docs`` carries a
-    per-row ``model`` column (typically a union of model-tagged copies), so
-    N embedding spaces materialize in ONE mapInPandas job instead of N
-    sequential jobs — at 100 TB this halves the number of full-corpus
-    passes for the two-space drift experiments, and on local[32] it lets
-    both models' rows share the same task wave. Bit-identical per row to
-    the single-model path (same hash, same per-model memo)."""
-    if backend == "hf":
-        # raised FIRST (before any torch availability check): installing
-        # torch does NOT activate this entry point — the multi-model
-        # per-partition model cache is not wired. embed_documents has the
-        # live hf path; run it once per model instead.
-        raise NotImplementedError(
-            "hf backend: multi-model tagged embedding is not wired (a "
-            "per-partition model CACHE keyed by the row's model column); "
-            "run embed_documents(backend='hf') once per model instead"
-        )
-    elif backend != "hash":
-        raise ValueError(f"unknown backend {backend!r}")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memos: dict[str, dict[str, list[float]]] = {}
-        for pdf in batches:
-            toks = [
-                hash_embed_tokens(
-                    t or "", m, dim, max_seq_len, memos.setdefault(m, {})
-                )
-                for t, m in zip(pdf[text_col], pdf[model_col])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "model": pdf[model_col].values,
-                    "tokens": toks,
-                    "seq_len": [len(t) for t in toks],
-                }
-            )
-
-    from ..sources.tables import spread_small_input
-
-    return spread_small_input(
-        docs.select(id_col, text_col, model_col)
-    ).mapInPandas(fn, EMBED_SCHEMA)
-
-
 POOLED_SCHEMA = T.StructType(
     [
         T.StructField("model", T.StringType()),
@@ -224,14 +176,15 @@ def pooled_embed_documents_tagged(
     docs: DataFrame,
     dim: int = 8,
     max_seq_len: int = 512,
-    backend: str = "hash",
     text_col: str = "text",
     id_col: str = "doc_id",
     model_col: str = "model",
 ) -> DataFrame:
-    """Fused R3+R9: embed AND mean-pool inside one mapInPandas.
+    """Fused R3+R9 for the hash backend: embed AND mean-pool inside one
+    mapInPandas, for rows tagged with their model in ``model_col`` (a union
+    of model-tagged copies embeds N spaces in ONE job).
 
-    ``mean_pool_col(embed_documents_tagged(...))`` ships every ragged
+    ``mean_pool_col`` over ``embed_documents`` ships every ragged
     ``array<array<float>>`` token matrix through Arrow only for the JVM to
     immediately fold it away — for mean-pooled consumers (the q39/q59/q60
     drift pipelines, q61 mapping) that transfer dominates the embed stage.
@@ -244,16 +197,6 @@ def pooled_embed_documents_tagged(
     ``mean_pool_col``'s ``F.aggregate`` performs — and divided by the token
     count. Pinned by tests/test_arrays.py::test_fused_pooling_bit_identical.
     """
-    if backend == "hf":
-        # raised regardless of torch availability — install does not
-        # activate THIS entry point (only embed_documents is wired)
-        raise NotImplementedError(
-            "hf backend: fused pooled embedding is not wired (pool the "
-            "embed_documents(backend='hf') token vectors via "
-            "functions.arrays instead)"
-        )
-    elif backend != "hash":
-        raise ValueError(f"unknown backend {backend!r}")
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memos: dict[str, dict[str, np.ndarray]] = {}

@@ -7,25 +7,16 @@ keep-one-per-cluster step needs the connected components of the pair
 graph. This is the step that turns the x03/x04 candidate machinery into
 an actual "drop 30% of the corpus" pipeline.
 
-Algorithm: iterative hash-min label propagation — every node starts
-labeled with its own id; each round, every node takes the MIN of its own
-label and its neighbors' labels; converged when no label changes. Rounds
-= graph diameter (near-dup clusters are tiny and star-like, so 2-4
-rounds in practice). Each round is one join + one groupBy — both shuffle
-on the node id, so the partitioning is REUSED across rounds rather than
-recomputed. `localCheckpoint` truncates the growing lineage each round
-(without it, round N's plan contains all N-1 predecessors and planning
-time explodes).
-
-Hash-min's round count is the graph DIAMETER — right for the star-like
-dedup-cluster shape, wrong for 100 TB graphs with long chains. For those,
-:func:`connected_components_star` implements the large-star/small-star
-algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond", public algorithm): alternating rounds rewire every node to its
-neighborhood minimum, provably converging in O(log n) rounds on any
-topology with the same DataFrame primitives (one groupBy + one join per
-round, co-partitioned on the node key). ``dedup_clusters`` picks by an
-``algorithm`` switch; hash-min stays the default.
+Algorithm: large-star/small-star (Kiveris et al., "Connected Components
+in MapReduce and Beyond", public algorithm) in
+:func:`connected_components_star`: alternating rounds rewire every node to
+its neighborhood minimum, provably converging in O(log n) rounds on any
+topology (hash-min label propagation needs diameter-many rounds). Each
+round is one groupBy + one join co-partitioned on the node key, and
+`localCheckpoint` truncates the growing lineage (without it, round N's
+plan contains all N-1 predecessors and planning time explodes). A graph
+whose edge list fits on the driver skips the distributed loop:
+``dedup_clusters`` labels it with an in-memory union-find.
 
 Deterministic output (min node id per component) => DuckDB-oracle
 checkable via a recursive-CTE transitive closure (x23).
@@ -39,75 +30,6 @@ from pyspark.sql import functions as F
 from ..sources.tables import local_table
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    src_col: str,
-    dst_col: str,
-    max_iter: int = 30,
-) -> DataFrame:
-    """Label every node with the MIN node id of its connected component.
-
-    `nodes`: one row per node (isolated nodes keep their own id as
-    label). `edges`: undirected pairs (each stored once is fine).
-    Returns DataFrame[node, lbl]."""
-    # materialize the symmetrized edge list ONCE — without this, every
-    # hash-min round re-executes the upstream pipeline that produced the
-    # pairs (for dedup that is the whole MinHash band/join cascade)
-    sym = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .union(
-            edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = nodes.select(F.col(id_col).alias("node")).withColumn(
-        "lbl", F.col("node")
-    )
-    # labels only ever DECREASE, so the label sum is a strictly monotone
-    # convergence witness: unchanged sum <=> fixpoint. One scalar agg per
-    # round instead of a join+count. decimal accumulator so the witness
-    # cannot overflow at 1e9+-node graphs.
-    prev_sum = None
-    converged = False
-    # max_iter bounds PROPAGATION rounds; one extra round is allowed so a
-    # graph that converges exactly at round max_iter can still OBSERVE an
-    # unchanged witness sum (the confirmation round does no new work —
-    # labels are already at the fixpoint)
-    for _ in range(max_iter + 1):
-        # push each node's label to its neighbors, then take the min of
-        # {own label} ∪ {neighbor labels}
-        pushed = sym.join(
-            labels.withColumnRenamed("node", "a"), "a"
-        ).select(F.col("b").alias("node"), "lbl")
-        labels = (
-            labels.union(pushed)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = labels.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)"))
-        ).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # hash-min propagates the min one hop per round, so max_iter <
-        # diameter means the labels above are WRONG, not approximate —
-        # never return them silently (a >30-hop near-dup chain means the
-        # graph isn't the star-like shape this path is for)
-        raise RuntimeError(
-            f"hash-min connected components did not converge in "
-            f"{max_iter} rounds (graph diameter exceeds the budget); "
-            f"use algorithm='star' (O(log n) rounds on any topology)"
-        )
-    return labels
-
-
 def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
@@ -117,8 +39,7 @@ def connected_components_star(
     max_iter: int = 40,
 ) -> tuple[DataFrame, int]:
     """Large-star/small-star connected components (Kiveris et al. 2014):
-    O(log n) rounds on ANY topology — the scale path for long-chain graphs
-    where hash-min's diameter-many rounds are the bottleneck.
+    O(log n) rounds on ANY topology, long chains included.
 
     Large-star (keyed by every node u over its full neighborhood N):
     connect each neighbor v > u to m = min(N ∪ {u}). Small-star (keyed by
@@ -223,7 +144,7 @@ def connected_components_star(
 def _unionfind_min_labels(edge_rows) -> list[tuple[int, int]]:
     """Driver-side union-find over SMALL (a, b) edges: [(node, min-id of
     its component)] for every node that appears in an edge. Identical
-    labels to the distributed algorithms (min member per component)."""
+    labels to the distributed algorithm (min member per component)."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -254,22 +175,20 @@ def dedup_clusters(
     nodes: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    algorithm: str = "hash_min",
     small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
     """DataFrame[doc_id, cluster_id, is_canonical]: component label per
     document; the canonical survivor of each cluster is its min-id
-    member (deterministic, engine-portable). ``algorithm='star'`` switches
-    to large-star/small-star for long-chain graphs.
+    member (deterministic, engine-portable).
 
     Adaptive small-graph path: the deduped edge list is materialized and
-    counted ONCE (the distributed loops need it materialized anyway);
+    counted ONCE (the distributed loop needs it materialized anyway);
     when it is driver-small (<= ``small_graph_threshold`` edges, ~16 B
     each) the components come from an in-memory union-find and the label
     table broadcasts back onto the (possibly huge) node set — a dedup
     run whose candidate graph fits on the driver should not pay
     O(rounds) distributed jobs of fixed latency each. Above the
-    threshold the O(log n)-round distributed algorithms run unchanged,
+    threshold the O(log n)-round large-star/small-star loop runs,
     so the 100 TB path is the same code the property tests pin
     (``small_graph_threshold=0`` forces it). Both paths produce
     bit-identical labels (parity-tested)."""
@@ -277,7 +196,7 @@ def dedup_clusters(
     # whose cache is populated by the count LOOKS one job cheaper, but
     # the columnar cache write made the x23/x52 rows consistently
     # slower than the checkpoint + two trivial follow-up jobs — and the
-    # distributed loops want truncated lineage anyway.
+    # distributed loop wants truncated lineage anyway.
     norm = (
         pairs.select(
             F.least(F.col("a_id"), F.col("b_id")).alias("a_id"),
@@ -319,12 +238,10 @@ def dedup_clusters(
                 .alias("lbl"),
             )
         )
-    elif algorithm == "star":
+    else:
         labels, _ = connected_components_star(
             nodes, norm, id_col, "a_id", "b_id"
         )
-    else:
-        labels = connected_components(nodes, norm, id_col, "a_id", "b_id")
     return labels.select(
         F.col("node").alias(id_col),
         F.col("lbl").alias("cluster_id"),

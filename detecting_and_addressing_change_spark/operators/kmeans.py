@@ -75,7 +75,7 @@ def _cells_sql(
 
 
 # Route threshold between the two physically-different assign forms
-# (measured by tools/bench_assign_route.py, BENCH_NOTES r13):
+# (BENCH_NOTES "Round-13: k-means assign route crossover"):
 #
 # - UNROLLED (k < threshold): k separate `named_struct('d', <sqdist>,
 #   'cid', i)` expression TERMS. Analysis/codegen cost grows with k —

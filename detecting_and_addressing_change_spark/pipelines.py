@@ -12,11 +12,16 @@ across the seam' is a union with a CONTINUOUS seq_id feeding one DDM key;
 the classifier is the exact-sufficient-statistics Gaussian NB (A7); windowed
 accuracy is the count-bucket agg (A3). Everything except the tiny driver-side
 detector state is distributed.
+
+Every experiment is the same chain: :func:`_spaces` (embed and persist the
+spaces), :func:`_fit` (NB on space A), :func:`_windowed` (per-batch share of
+correct predictions) and :func:`_flagged` (DDM over ``1 - share``).
 """
 
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,45 +40,18 @@ def _round6(x: float) -> float:
     return math.floor(float(x) * 1e6 + 0.5) / 1e6
 
 
-def _collect_local(df: DataFrame) -> DataFrame:
-    """Materialize a small result eagerly, detached from its lineage.
-
-    The experiment results are per-batch accuracy series (n_docs /
-    batch_size rows — the same series DDM already pulls driver-side, so
-    this adds no new asymptotic cost). Cutting the lineage lets the
-    pipelines unpersist their cached feature tables deterministically in
-    a ``finally`` block instead of leaking cached RDDs across calls in a
-    long-lived session."""
-    return local_table(df.sparkSession, df.collect(), df.schema)
-
-
-def pooled_features(
-    docs: DataFrame, model: str, dim: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """text -> token embeddings (U7) -> mean pooling (R9):
-    DataFrame[doc_id, features]. Uses the fused embed+pool mapInPandas
-    (operators.embedder.pooled_embed_documents_tagged) — bit-identical to
-    mean_pool_col over embed_documents but transfers dim doubles per row
-    instead of the ragged token matrix."""
-    from .operators.embedder import pooled_embed_documents_tagged
-
-    tagged = docs.select(
-        F.lit(model).alias("model"), F.col(id_col), F.col("text")
-    )
-    return pooled_embed_documents_tagged(
-        tagged, dim=dim, id_col=id_col
-    ).select(id_col, "features")
-
-
 def pooled_features_models(
     docs: DataFrame, models: tuple[str, ...], dim: int, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Several embedding spaces in ONE pass: union of model-tagged copies
-    through one fused embed+pool mapInPandas
-    (operators.embedder.pooled_embed_documents_tagged).
+    """text -> token embeddings (U7) -> mean pooling (R9) for several
+    embedding spaces in ONE pass: union of model-tagged copies through one
+    fused embed+pool mapInPandas
+    (operators.embedder.pooled_embed_documents_tagged) — bit-identical to
+    mean_pool_col over embed_documents but transfers dim doubles per row
+    instead of the ragged token matrix.
     DataFrame[model, doc_id, features] — callers persist this and filter per
     model, so the corpus is scanned and embedded once instead of once per
-    model (bit-identical rows to N pooled_features calls)."""
+    model."""
     from .operators.embedder import pooled_embed_documents_tagged
 
     tagged = None
@@ -86,6 +64,83 @@ def pooled_features_models(
         )
         tagged = d if tagged is None else tagged.unionByName(d)
     return pooled_embed_documents_tagged(tagged, dim=dim, id_col=id_col)
+
+
+@contextmanager
+def _spaces(docs: DataFrame, models: tuple[str, ...], dim: int, id_col: str):
+    """Yields one DataFrame[doc_id, features] per model, unpersisted on exit.
+
+    Embedding is the dominant cost (SURVEY §4.3) and each feature table is
+    read by both fit and predict — every space materializes in ONE cached
+    job. The experiments return driver-built results detached from this
+    lineage, so the cache is released deterministically instead of leaking
+    cached RDDs across calls in a long-lived session."""
+    pooled = pooled_features_models(docs, models, dim, id_col).persist()
+    try:
+        yield [pooled.filter(F.col("model") == m).drop("model") for m in models]
+    finally:
+        pooled.unpersist()
+
+
+def _fit(feats: DataFrame, labels: DataFrame, id_col: str, dim: int) -> list:
+    """NB fit on ``feats`` joined to ``labels``, collected ONCE: the stats
+    table is tiny (n_classes x dim) and every later predict broadcasts it."""
+    return nb_collect_stats(
+        nb_fit(
+            feats.join(labels, id_col), features_col="features",
+            label_col="label", dim=dim,
+        )
+    )
+
+
+def _windowed(
+    preds: DataFrame,
+    truth: DataFrame,
+    id_col: str,
+    seq_col: str,
+    batch_size: int,
+    share: str,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """DataFrame[seq_id, *carry, share]: per count window of ``batch_size``
+    on ``seq_col``, the share of ``preds.pred`` equal to ``truth.label``
+    (joined on ``id_col``). ``carry`` columns are constant within a batch
+    and ride along through ``max``."""
+    scored = preds.join(truth, id_col).select(
+        F.col(seq_col).alias("seq_id"),
+        *carry,
+        (F.col("pred") == F.col("label")).cast("int").alias("correct"),
+    )
+    return count_window_agg(
+        scored,
+        seq_col="seq_id",
+        batch_size=batch_size,
+        aggs=[F.avg("correct").alias(share)]
+        + [F.max(c).alias(c) for c in carry],
+    ).select(F.col("bucket").cast("long").alias("seq_id"), *carry, share)
+
+
+def _flagged(per_batch: DataFrame, share: str) -> DataFrame:
+    """``per_batch`` plus a DDM ``flag`` over ``1 - share`` in seq_id order,
+    every double rounded like ``portable_round(col, 6)``.
+
+    The per-batch series is driver-small (n_docs / batch_size rows) and DDM
+    over ONE detector is inherently sequential — collect it once and finish
+    driver-side: one job total, where a distributed detect_drift + flag join
+    would cost three more 32-task stages on 150 rows."""
+    rows = sorted(per_batch.collect(), key=lambda r: r["seq_id"])
+    flags = ddm_scan([1.0 - float(r[share]) for r in rows])
+    ddl = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in per_batch.schema
+    )
+    return local_table(
+        per_batch.sparkSession,
+        [
+            tuple(_round6(v) if isinstance(v, float) else v for v in r) + (f,)
+            for r, f in zip(rows, flags)
+        ],
+        ddl + ", flag string",
+    )
 
 
 def abrupt_drift_experiment(
@@ -104,96 +159,41 @@ def abrupt_drift_experiment(
     prediction-correctness streams for A then B; per-print_every windowed
     accuracy; 1-accuracy into the shared detector."""
     labels = docs.select(id_col, F.col(label_col).alias("label"))
+    with _spaces(docs, (model_a, model_b), dim, id_col) as (feats_a, feats_b):
+        # both score() calls broadcast the collected stats, and sum(cnt)
+        # doubles as n_docs (train covers every doc) — two fewer jobs than
+        # collecting inside each predict plus a separate count()
+        stats = _fit(feats_a, labels, id_col, dim)
+        n_docs = sum(r["cnt"] for r in stats)
 
-    # embedding is the dominant cost (SURVEY §4.3) and each feature table is
-    # read by both fit and predict — materialize BOTH spaces in one job
-    pooled = pooled_features_models(docs, (model_a, model_b), dim, id_col)
-    pooled = pooled.persist()
-    feats_a = pooled.filter(F.col("model") == model_a).drop("model")
-    feats_b = pooled.filter(F.col("model") == model_b).drop("model")
-    try:
-        return _abrupt_drift_body(
-            docs, labels, feats_a, feats_b, batch_size, id_col, dim
-        )
-    finally:
-        pooled.unpersist()
-
-
-def _abrupt_drift_body(
-    docs: DataFrame,
-    labels: DataFrame,
-    feats_a: DataFrame,
-    feats_b: DataFrame,
-    batch_size: int,
-    id_col: str,
-    dim: int,
-) -> DataFrame:
-    train = feats_a.join(labels, id_col)
-    # collect the tiny fit-stats table ONCE: both score() calls broadcast it,
-    # and sum(cnt) doubles as n_docs (train covers every doc) — two fewer
-    # jobs than collecting inside each predict plus a separate count()
-    stats = nb_collect_stats(
-        nb_fit(train, features_col="features", label_col="label", dim=dim)
-    )
-
-    n_docs = sum(r["cnt"] for r in stats)
-
-    # ONE predict pass over the tagged union (continuous seq_id across the
-    # seam) instead of one per stream: per-row scoring is independent, so
-    # the union changes nothing numerically but halves the predict stages
-    both = feats_a.select(
-        id_col,
-        "features",
-        F.lit("trained").alias("stream"),
-        F.col(id_col).alias("seq_id"),
-    ).unionByName(
-        feats_b.select(
+        # ONE predict pass over the tagged union (continuous seq_id across
+        # the seam) instead of one per stream: per-row scoring is
+        # independent, so the union changes nothing numerically but halves
+        # the predict stages
+        both = feats_a.select(
             id_col,
             "features",
-            F.lit("untrained").alias("stream"),
-            (F.col(id_col) + F.lit(n_docs)).alias("seq_id"),
+            F.lit("trained").alias("stream"),
+            F.col(id_col).alias("seq_id"),
+        ).unionByName(
+            feats_b.select(
+                id_col,
+                "features",
+                F.lit("untrained").alias("stream"),
+                (F.col(id_col) + F.lit(n_docs)).alias("seq_id"),
+            )
         )
-    )
-    preds = nb_predict(
-        both, stats, features_col="features",
-        id_cols=(id_col, "stream", "seq_id"),
-    )
-    scored = preds.join(labels, id_col).select(
-        "seq_id",
-        "stream",
-        (F.col("pred") == F.col("label")).cast("int").alias("correct"),
-    )
-
-    per_batch = count_window_agg(
-        scored,
-        seq_col="seq_id",
-        batch_size=batch_size,
-        aggs=[
-            F.avg("correct").alias("accuracy"),
-            F.max("stream").alias("stream"),
-        ],
-    ).select(
-        F.lit("ddm").alias("detector_id"),
-        F.col("bucket").cast("long").alias("seq_id"),
-        (1.0 - F.col("accuracy")).alias("error"),
-        "accuracy",
-        "stream",
-    )
-
-    # the per-batch series is driver-small (n_docs / batch_size rows) and
-    # DDM over ONE detector is inherently sequential — collect it once and
-    # finish driver-side: one job total, where a distributed detect_drift +
-    # flag join would cost three more 32-task stages on 150 rows
-    per_rows = sorted(per_batch.collect(), key=lambda r: r["seq_id"])
-    flags = ddm_scan([float(r["error"]) for r in per_rows])
-    return local_table(
-        labels.sparkSession,
-        [
-            (r["seq_id"], r["stream"], _round6(r["accuracy"]), f)
-            for r, f in zip(per_rows, flags)
-        ],
-        "seq_id long, stream string, accuracy double, flag string",
-    )
+        preds = nb_predict(
+            both, stats, features_col="features",
+            id_cols=(id_col, "stream", "seq_id"),
+        )
+        return _flagged(
+            _windowed(
+                preds, labels, id_col, "seq_id", batch_size, "accuracy",
+                carry=("stream",),
+            ),
+            "accuracy",
+        )
 
 
 def mapping_experiment(
@@ -214,21 +214,6 @@ def mapping_experiment(
     mse_after): result rows are per-batch accuracies for the raw and mapped
     B streams; the MSEs are on the pair set (the reference's own logged
     check, adaptation/mapping.py:107-121)."""
-    labels = docs.select(id_col, F.col(label_col).alias("label"))
-    cached: list[DataFrame] = []
-    try:
-        return _mapping_experiment_body(
-            docs, labels, model_a, model_b, dim, batch_size, top_k,
-            id_col, cached,
-        )
-    finally:
-        for c in cached:
-            c.unpersist()
-
-
-def _mapping_experiment_body(
-    docs, labels, model_a, model_b, dim, batch_size, top_k, id_col, cached
-):
     from .operators.procrustes import (
         apply_mapping,
         mapping_mse,
@@ -236,63 +221,53 @@ def _mapping_experiment_body(
     )
     from .sources.pair_cache import build_adaptation_pairs
 
-    # both embedding spaces in ONE fused embed+pool pass (the corpus is
-    # scanned and embedded once, not once per model — same treatment the
-    # unsupervised experiment got in round 5)
-    pooled = pooled_features_models(
-        docs, (model_a, model_b), dim, id_col
-    ).persist()
-    cached.append(pooled)
-    feats_a = pooled.filter(F.col("model") == model_a).drop("model")
-    feats_b = pooled.filter(F.col("model") == model_b).drop("model")
-    stats = nb_collect_stats(
-        nb_fit(
-            feats_a.join(labels, id_col), features_col="features",
-            label_col="label", dim=dim,
-        )
-    )
+    labels = docs.select(id_col, F.col(label_col).alias("label"))
+    with _spaces(docs, (model_a, model_b), dim, id_col) as (feats_a, feats_b):
+        stats = _fit(feats_a, labels, id_col, dim)
 
-    # pair set: source = space B, target = space A (we adapt B into A)
-    pairs = build_adaptation_pairs(
-        docs, source_model=model_b, target_model=model_a, dim=dim, top_k=top_k
-    ).persist()
-    cached.append(pairs)
-    m = procrustes_solve(pairs)
-    mse_before = mapping_mse(pairs)
-    mapped_pairs = apply_mapping(pairs, m, vec_col="source", out_col="mapped")
-    mse_after = mapping_mse(
-        mapped_pairs.select("word", "mapped", "target"), "mapped", "target"
-    )
+        # pair set: source = space B, target = space A (we adapt B into A)
+        pairs = build_adaptation_pairs(
+            docs, source_model=model_b, target_model=model_a, dim=dim,
+            top_k=top_k,
+        ).persist()
+        try:
+            m = procrustes_solve(pairs)
+            mse_before = mapping_mse(pairs)
+            mapped_pairs = apply_mapping(
+                pairs, m, vec_col="source", out_col="mapped"
+            )
+            mse_after = mapping_mse(
+                mapped_pairs.select("word", "mapped", "target"),
+                "mapped", "target",
+            )
 
-    feats_b_mapped = apply_mapping(
-        feats_b, m, vec_col="features", out_col="mapped"
-    ).select(id_col, F.col("mapped").alias("features"))
+            feats_b_mapped = apply_mapping(
+                feats_b, m, vec_col="features", out_col="mapped"
+            ).select(id_col, F.col("mapped").alias("features"))
 
-    def accuracy_series(feats: DataFrame, tag: str) -> DataFrame:
-        preds = nb_predict(
-            feats, stats, features_col="features", id_cols=(id_col,)
-        )
-        scored = preds.join(labels, id_col).select(
-            F.col(id_col).alias("seq_id"),
-            (F.col("pred") == F.col("label")).cast("int").alias("correct"),
-        )
-        return count_window_agg(
-            scored,
-            seq_col="seq_id",
-            batch_size=batch_size,
-            aggs=[F.avg("correct").alias("accuracy")],
-        ).select(
-            F.col("bucket").cast("long").alias("seq_id"),
-            F.lit(tag).alias("stream"),
-            portable_round(F.col("accuracy"), 6).alias("accuracy"),
-        )
+            def accuracy_series(feats: DataFrame, tag: str) -> DataFrame:
+                preds = nb_predict(
+                    feats, stats, features_col="features", id_cols=(id_col,)
+                )
+                return _windowed(
+                    preds, labels, id_col, id_col, batch_size, "accuracy"
+                ).select(
+                    "seq_id",
+                    F.lit(tag).alias("stream"),
+                    portable_round(F.col("accuracy"), 6).alias("accuracy"),
+                )
 
-    result = _collect_local(
-        accuracy_series(feats_b, "untrained_raw").unionByName(
-            accuracy_series(feats_b_mapped, "untrained_mapped")
-        )
-    )
-    return result, mse_before, mse_after
+            series = accuracy_series(feats_b, "untrained_raw").unionByName(
+                accuracy_series(feats_b_mapped, "untrained_mapped")
+            )
+            # the series is n_docs / batch_size rows per stream: collected
+            # into a driver-built table, detached from the cached lineage
+            result = local_table(
+                series.sparkSession, series.collect(), series.schema
+            )
+            return result, mse_before, mse_after
+        finally:
+            pairs.unpersist()
 
 
 def unsupervised_drift_experiment(
@@ -311,63 +286,20 @@ def unsupervised_drift_experiment(
     run_stream_unsupervised.py:53-55,82-84). No true labels are consulted
     after training."""
     labels = docs.select(id_col, F.col(label_col).alias("label"))
-    pooled = pooled_features_models(docs, (model_a, model_b), dim, id_col)
-    pooled = pooled.persist()
-    feats_a = pooled.filter(F.col("model") == model_a).drop("model")
-    feats_b = pooled.filter(F.col("model") == model_b).drop("model")
-    try:
-        return _unsupervised_drift_body(
-            labels, feats_a, feats_b, batch_size, id_col, dim
+    with _spaces(docs, (model_a, model_b), dim, id_col) as (feats_a, feats_b):
+        stats = _fit(feats_a, labels, id_col, dim)
+        pseudo = nb_predict(
+            feats_a, stats, features_col="features", id_cols=(id_col,)
+        ).select(id_col, F.col("pred").alias("label"))
+        preds_b = nb_predict(
+            feats_b, stats, features_col="features", id_cols=(id_col,)
         )
-    finally:
-        pooled.unpersist()
-
-
-def _unsupervised_drift_body(
-    labels: DataFrame,
-    feats_a: DataFrame,
-    feats_b: DataFrame,
-    batch_size: int,
-    id_col: str,
-    dim: int,
-) -> DataFrame:
-    stats = nb_collect_stats(
-        nb_fit(
-            feats_a.join(labels, id_col), features_col="features",
-            label_col="label", dim=dim,
+        return _flagged(
+            _windowed(
+                preds_b, pseudo, id_col, id_col, batch_size, "agreement"
+            ),
+            "agreement",
         )
-    )
-    pseudo = nb_predict(
-        feats_a, stats, features_col="features", id_cols=(id_col,)
-    ).select(id_col, F.col("pred").alias("pseudo_label"))
-    preds_b = nb_predict(
-        feats_b, stats, features_col="features", id_cols=(id_col,)
-    ).select(id_col, "pred")
-    scored = preds_b.join(pseudo, id_col).select(
-        F.col(id_col).alias("seq_id"),
-        (F.col("pred") == F.col("pseudo_label")).cast("int").alias("agree"),
-    )
-    per_batch = count_window_agg(
-        scored,
-        seq_col="seq_id",
-        batch_size=batch_size,
-        aggs=[F.avg("agree").alias("agreement")],
-    ).select(
-        F.lit("unsup").alias("detector_id"),
-        F.col("bucket").cast("long").alias("seq_id"),
-        (1.0 - F.col("agreement")).alias("error"),
-        "agreement",
-    )
-    per_rows = sorted(per_batch.collect(), key=lambda r: r["seq_id"])
-    flags = ddm_scan([float(r["error"]) for r in per_rows])
-    return local_table(
-        labels.sparkSession,
-        [
-            (r["seq_id"], _round6(r["agreement"]), f)
-            for r, f in zip(per_rows, flags)
-        ],
-        "seq_id long, agreement double, flag string",
-    )
 
 
 def gradual_drift_experiment(
@@ -392,21 +324,11 @@ def gradual_drift_experiment(
     hash Box-Muller (the q33 construction) unrolled per dimension — the
     whole experiment is deterministic, no torch.randn non-reproducibility.
     Returns DataFrame[seq_id, sigma, accuracy, flag]."""
-    import math
-
     from .streaming.schedule import sigma_schedule
 
     labels = docs.select(id_col, F.col(label_col).alias("label"))
-    feats = pooled_features(docs, model, dim, id_col).persist()
-    try:
-        stats = nb_collect_stats(
-            nb_fit(
-                feats.join(labels, id_col),
-                features_col="features",
-                label_col="label",
-                dim=dim,
-            )
-        )
+    with _spaces(docs, (model,), dim, id_col) as (feats,):
+        stats = _fit(feats, labels, id_col, dim)
 
         bucketed = feats.withColumn(
             "bucket", F.floor(F.col(id_col) / batch_size).cast("int")
@@ -461,34 +383,10 @@ def gradual_drift_experiment(
         preds = nb_predict(
             noisy, stats, features_col="features", id_cols=(id_col, "sigma")
         )
-        scored = preds.join(labels, id_col).select(
-            F.col(id_col).alias("seq_id"),
-            "sigma",
-            (F.col("pred") == F.col("label")).cast("int").alias("correct"),
-        )
-        per_batch = count_window_agg(
-            scored,
-            seq_col="seq_id",
-            batch_size=batch_size,
-            aggs=[
-                F.avg("correct").alias("accuracy"),
-                F.max("sigma").alias("sigma"),
-            ],
-        ).select(
-            F.col("bucket").cast("long").alias("seq_id"),
-            (1.0 - F.col("accuracy")).alias("error"),
+        return _flagged(
+            _windowed(
+                preds, labels, id_col, id_col, batch_size, "accuracy",
+                carry=("sigma",),
+            ),
             "accuracy",
-            "sigma",
         )
-        per_rows = sorted(per_batch.collect(), key=lambda r: r["seq_id"])
-        flags = ddm_scan([float(r["error"]) for r in per_rows])
-        return local_table(
-            feats.sparkSession,
-            [
-                (r["seq_id"], _round6(r["sigma"]), _round6(r["accuracy"]), f)
-                for r, f in zip(per_rows, flags)
-            ],
-            "seq_id long, sigma double, accuracy double, flag string",
-        )
-    finally:
-        feats.unpersist()

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_table
 from .extensions17 import _X123_PACK, _x123_ctes, _x123_layout
 from .extensions18 import (
     _SHARD_TOKENS,
@@ -196,7 +196,8 @@ def x130(spark: SparkSession, sf_dir: str) -> DataFrame:
         for plan, steps in (("grow", grow), ("flip", flip))
         for i, s in enumerate(steps)
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows,
         "plan string, step_idx long, kind string, n_from long, "
         "n_to long, n_rows long, n_moved long",

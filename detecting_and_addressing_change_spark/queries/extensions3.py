@@ -294,7 +294,7 @@ def x22(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # X23 — dedup cluster resolution: connected components over the MinHash
-# candidate-pair graph (operators/graph.py, iterative hash-min), labeling
+# candidate-pair graph (operators/graph.py, dedup_clusters), labeling
 # every document with its cluster's min doc_id and flagging the canonical
 # survivor. Oracle: the same pair graph closed transitively with a
 # recursive CTE — fixpoint label = MIN over all reachable nodes.

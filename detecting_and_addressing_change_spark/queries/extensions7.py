@@ -470,12 +470,12 @@ def x52(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus's random-ish embeddings actually form a non-trivial graph —
     163 edges / 500 nodes at sf0.01 — so the component structure, not
     just singletons, is what the oracle checks) become edges, and connected
-    components — via the LARGE-STAR/SMALL-STAR algorithm (Kiveris et al.),
-    the O(log n)-round variant a 100 TB near-dup graph with chains needs —
-    label every vector with its cluster's min-id canonical survivor.
-    This makes the star CC path driver-attested, not just property-tested;
-    its labels are identical to hash-min propagation by construction
-    (both converge to per-component min ids)."""
+    components label every vector with its cluster's min-id canonical
+    survivor. At this scale the edge list fits on the driver, so
+    ``dedup_clusters`` labels it with a union-find; above its threshold it
+    runs large-star/small-star (Kiveris et al.), the O(log n)-round
+    algorithm a 100 TB near-dup graph with chains needs. Both converge to
+    per-component min ids."""
     from ..operators.graph import dedup_clusters
     from ..operators.similarity import embedding_near_dup_pairs
 
@@ -483,9 +483,7 @@ def x52(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = embedding_near_dup_pairs(emb, threshold=0.3, dim=64).select(
         "a_id", "b_id"
     )
-    return dedup_clusters(
-        emb.select("vec_id"), pairs, id_col="vec_id", algorithm="star"
-    )
+    return dedup_clusters(emb.select("vec_id"), pairs, id_col="vec_id")
 
 
 # --------------------------------------------------------------------------

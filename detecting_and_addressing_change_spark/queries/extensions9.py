@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import lcg_bucket
 from ..functions.rounding import portable_round, portable_round_sql
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_table
 from .extensions7 import _max_multiplicity, _word_grams
 from .registry import query
 
@@ -190,9 +190,7 @@ def x61(spark: SparkSession, sf_dir: str) -> DataFrame:
     in place — ZERO shuffle of the fact side before the final stats agg."""
     docs = load_table(spark, sf_dir, "documents")
     t = F.broadcast(
-        docs.sparkSession.createDataFrame(
-            _MIX_TARGETS, "lang string, tw double"
-        )
+        local_table(docs.sparkSession, _MIX_TARGETS, "lang string, tw double")
     )
     cnt = docs.groupBy("lang").agg(F.count("*").alias("n"))
     cap = (
@@ -818,7 +816,8 @@ def x68(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe_fit(docs, n_merges=12)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, left_sym string, right_sym string",
     ).orderBy("rank")
@@ -1369,9 +1368,7 @@ def x74(spark: SparkSession, sf_dir: str) -> DataFrame:
     final agg + a one-row total broadcast."""
     docs = load_table(spark, sf_dir, "documents")
     t = F.broadcast(
-        docs.sparkSession.createDataFrame(
-            _MIX_TARGETS, "lang string, tw double"
-        )
+        local_table(docs.sparkSession, _MIX_TARGETS, "lang string, tw double")
     )
     d = docs.select(
         "lang", "doc_id", F.size(F.split("text", " ")).alias("nw")

@@ -126,8 +126,8 @@ def test_linear_map_udf_bit_identical(spark):
 
 def test_fused_pooling_bit_identical(spark):
     """The fused embed+pool mapInPandas must be bit-identical to the
-    two-step mean_pool_col(embed_documents_tagged(...)) plan — the q39/q59/
-    q60/q61 oracle hashes pin the two-step fold's exact doubles."""
+    two-step plan, mean_pool_col over embed_documents once per model — the
+    q39/q59/q60/q61 oracle hashes pin the two-step fold's exact doubles."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -135,7 +135,7 @@ def test_fused_pooling_bit_identical(spark):
         mean_pool_col,
     )
     from detecting_and_addressing_change_spark.operators.embedder import (
-        embed_documents_tagged,
+        embed_documents,
         pooled_embed_documents_tagged,
     )
 
@@ -149,13 +149,21 @@ def test_fused_pooling_bit_identical(spark):
     rows.append(("BERT", 200, ""))  # empty text -> single ''-token doc
     docs = spark.createDataFrame(rows, "model string, doc_id long, text string")
 
-    two_step = (
-        embed_documents_tagged(docs, dim=8)
-        .select(
-            "model", "doc_id", mean_pool_col(F.col("tokens")).alias("features")
-        )
-        .orderBy("model", "doc_id")
-        .collect()
+    two_step = sorted(
+        (
+            r
+            for m in ("BERT", "SCIBERT")
+            for r in embed_documents(
+                docs.filter(F.col("model") == m), model=m, dim=8
+            )
+            .select(
+                "model",
+                "doc_id",
+                mean_pool_col(F.col("tokens")).alias("features"),
+            )
+            .collect()
+        ),
+        key=lambda r: (r["model"], r["doc_id"]),
     )
     fused = (
         pooled_embed_documents_tagged(docs, dim=8)

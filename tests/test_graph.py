@@ -5,9 +5,16 @@ result is identical across input partitionings."""
 from __future__ import annotations
 
 from detecting_and_addressing_change_spark.operators.graph import (
-    connected_components,
+    connected_components_star,
     dedup_clusters,
 )
+
+
+def _star_labels(nodes, edges):
+    labels, _ = connected_components_star(
+        nodes, edges, "doc_id", "a_id", "b_id"
+    )
+    return labels
 
 
 def test_chain_and_isolated(spark):
@@ -16,12 +23,7 @@ def test_chain_and_isolated(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (5, 6)], ["a_id", "b_id"]
     )
-    got = {
-        r.node: r.lbl
-        for r in connected_components(
-            nodes, edges, "doc_id", "a_id", "b_id"
-        ).collect()
-    }
+    got = {r.node: r.lbl for r in _star_labels(nodes, edges).collect()}
     assert got == {0: 0, 1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5}
 
 
@@ -45,10 +47,8 @@ def test_partitioning_invariance(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 18, 2)] + [(1, 19)], ["a_id", "b_id"]
     )
-    a = connected_components(nodes, edges, "doc_id", "a_id", "b_id")
-    b = connected_components(
-        nodes.repartition(7), edges.repartition(5), "doc_id", "a_id", "b_id"
-    )
+    a = _star_labels(nodes, edges)
+    b = _star_labels(nodes.repartition(7), edges.repartition(5))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -94,24 +94,15 @@ def test_cc_matches_union_find(spark, graph):
         edf = spark.createDataFrame(edges, ["a_id", "b_id"])
     else:
         edf = spark.createDataFrame([], "a_id long, b_id long")
-    got = {
-        r.node: r.lbl
-        for r in connected_components(
-            nodes, edf, "doc_id", "a_id", "b_id"
-        ).collect()
-    }
+    got = {r.node: r.lbl for r in _star_labels(nodes, edf).collect()}
     assert got == _union_find(n, edges)
 
 
 def test_star_cc_path_graph_olog_rounds(spark):
     """VERDICT r3 #7: a 64-node path (diameter 63) must converge in
-    O(log n) large/small-star rounds — the property hash-min lacks — with
+    O(log n) large/small-star rounds, not diameter-many, with
     every node labeled by the component minimum."""
     import math
-
-    from detecting_and_addressing_change_spark.operators.graph import (
-        connected_components_star,
-    )
 
     n = 64
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
@@ -128,36 +119,7 @@ def test_star_cc_path_graph_olog_rounds(spark):
     assert rounds <= 2 * (int(math.log2(n)) + 2), rounds
 
 
-def test_star_cc_matches_hash_min(spark):
-    """Both algorithms agree label-for-label on a mixed topology (chain +
-    triangle + pair + isolates)."""
-    from detecting_and_addressing_change_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    nodes = spark.createDataFrame([(i,) for i in range(12)], ["doc_id"])
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (5, 6), (6, 7), (7, 5), (9, 10)],
-        ["a_id", "b_id"],
-    )
-    hm = {
-        r.node: r.lbl
-        for r in connected_components(
-            nodes, edges, "doc_id", "a_id", "b_id"
-        ).collect()
-    }
-    star_labels, _ = connected_components_star(
-        nodes, edges, "doc_id", "a_id", "b_id"
-    )
-    star = {r.node: r.lbl for r in star_labels.collect()}
-    assert hm == star
-
-
 def test_star_cc_empty_edges(spark):
-    from detecting_and_addressing_change_spark.operators.graph import (
-        connected_components_star,
-    )
-
     nodes = spark.createDataFrame([(i,) for i in range(5)], ["doc_id"])
     edges = spark.createDataFrame([], "a_id long, b_id long")
     labels, rounds = connected_components_star(
@@ -169,12 +131,13 @@ def test_star_cc_empty_edges(spark):
 
 
 def test_dedup_clusters_star_algorithm(spark):
+    """Above the small-graph threshold dedup_clusters runs the star loop."""
     nodes = spark.createDataFrame([(i,) for i in range(4)], ["doc_id"])
     edges = spark.createDataFrame([(0, 2), (2, 3)], ["a_id", "b_id"])
     got = {
         (r.doc_id, r.cluster_id, r.is_canonical)
         for r in dedup_clusters(
-            nodes, edges, algorithm="star"
+            nodes, edges, small_graph_threshold=0
         ).collect()
     }
     assert got == {
@@ -186,8 +149,8 @@ def test_dedup_clusters_star_algorithm(spark):
 
 
 def test_small_graph_gate_matches_distributed(spark):
-    """The adaptive driver union-find path (default threshold) and both
-    forced-distributed paths (threshold=0) produce bit-identical
+    """The adaptive driver union-find path (default threshold) and the
+    forced-distributed path (threshold=0) produce bit-identical
     (cluster_id, is_canonical) labelings on a graph mixing chains, stars,
     and isolated nodes."""
     import random
@@ -211,25 +174,7 @@ def test_small_graph_gate_matches_distributed(spark):
         )
 
     gated = labels()
-    assert gated == labels(small_graph_threshold=0)  # hash-min
-    assert gated == labels(small_graph_threshold=0, algorithm="star")
-
-
-def test_hash_min_raises_on_diameter_exceeding_budget(spark):
-    """max_iter < diameter means hash-min's labels are wrong, not
-    approximate — it must raise (pointing at the star path), never
-    silently return unconverged labels."""
-    import pytest as _pytest
-
-    n = 12
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id bigint")
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "a_id bigint, b_id bigint"
-    )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            nodes, edges, "doc_id", "a_id", "b_id", max_iter=3
-        )
+    assert gated == labels(small_graph_threshold=0)
 
 
 def test_small_graph_route_boundary(spark):

@@ -17,7 +17,10 @@ import pytest
 from pyspark import SparkContext
 from pyspark.sql import functions as F
 
+from detecting_and_addressing_change_spark.queries import QUERIES
 from detecting_and_addressing_change_spark.sources.tables import local_table
+
+from .conftest import SF_SMOKE
 
 
 def _analyzed(df) -> str:
@@ -55,19 +58,6 @@ def test_local_table_keeps_null_nan_and_schema(spark, no_parallelize):
     assert _analyzed(empty) == "LocalRelation"
     assert empty.collect() == []
     assert empty.schema == df.schema
-
-
-def test_collect_local_is_a_local_relation(spark, no_parallelize):
-    from detecting_and_addressing_change_spark.pipelines import _collect_local
-
-    src = spark.range(3).selectExpr(
-        "id AS seq_id",
-        "CASE WHEN id = 1 THEN NULL ELSE CAST(id AS DOUBLE) END AS acc",
-    )
-    got = _collect_local(src)
-    assert _analyzed(got) == "LocalRelation"
-    assert got.schema == src.schema
-    assert [tuple(r) for r in got.collect()] == [(0, 0.0), (1, None), (2, 2.0)]
 
 
 def test_dedup_clusters_small_route_label_table_is_local(
@@ -254,3 +244,21 @@ def test_synth_media_is_local_and_keeps_null_meta(spark, no_parallelize):
     assert tuple(rows[1]["meta"]) == (None, None, 8000, 4)  # audio
     assert tuple(rows[2]["meta"]) == (None, None, None, 1074)  # video
     assert bytes(rows[5]["data"]) == hashlib.md5(b"media-5").digest() * 9
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "x61_source_mixing",
+        "x68_bpe_merges",
+        "x74_token_mixing",
+        "x130_shard_growth_plan",
+    ],
+)
+def test_query_driver_tables_are_local(spark, no_parallelize, name):
+    """The mixture targets (x61, x74), the BPE merge list (x68) and the
+    shard-growth steps (x130) are driver-built tables."""
+    out = QUERIES[name](spark, SF_SMOKE)
+    assert "LocalRelation" in _plan(out)
+    assert "LogicalRDD" not in _plan(out)
+    assert out.count() > 0

@@ -10,6 +10,9 @@ import pytest
 
 from detecting_and_addressing_change_spark.pipelines import (
     abrupt_drift_experiment,
+    gradual_drift_experiment,
+    mapping_experiment,
+    unsupervised_drift_experiment,
 )
 
 
@@ -53,10 +56,22 @@ def test_abrupt_drift_detected(spark, labeled_docs):
     assert all(r["stream"] == "untrained" for r in untrained)
 
 
-def test_no_cached_rdds_leak_across_runs(spark, labeled_docs):
+# mapping_experiment returns (result, mse_before, mse_after)
+_EXPERIMENTS = {
+    "abrupt": abrupt_drift_experiment,
+    "unsupervised": unsupervised_drift_experiment,
+    "gradual": gradual_drift_experiment,
+    "mapping": lambda docs, **kw: mapping_experiment(docs, top_k=50, **kw)[0],
+}
+
+
+@pytest.mark.parametrize("name", list(_EXPERIMENTS))
+def test_no_cached_rdds_leak_across_runs(spark, labeled_docs, name):
     """VERDICT r1 finding: repeated experiment runs in a long-lived
     session must not accumulate cached RDDs (persist without unpersist
-    degrades executor memory over a service lifetime)."""
+    degrades executor memory over a service lifetime). The result is a
+    driver-built table (a ``LocalRelation`` leaf), so it outlives the
+    cache it was computed from."""
     def persistent_ids(sc):
         it = sc._jsc.sc().getPersistentRDDs().keysIterator()
         ids = set()
@@ -64,25 +79,25 @@ def test_no_cached_rdds_leak_across_runs(spark, labeled_docs):
             ids.add(it.next())
         return ids
 
+    run = _EXPERIMENTS[name]
     # Id-set difference, not a count delta: the ContextCleaner may
     # concurrently reclaim an UNRELATED test's cached RDD mid-test (observed
     # as a -1 count in full-suite runs), so assert only that no NEW ids
     # survive our runs.
     before = persistent_ids(spark.sparkContext)
     for _ in range(2):
-        abrupt_drift_experiment(labeled_docs, dim=8, batch_size=32)
+        res = run(labeled_docs, dim=8, batch_size=32)
+        plan = res._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
     leaked = persistent_ids(spark.sparkContext) - before
     assert not leaked, f"cached RDDs leaked by experiment runs: {leaked}"
+    assert res.count() > 0
 
 
 def test_gradual_drift_detected(spark, labeled_docs):
     """Reference experiment 6b: sigma ramps after warm_start; accuracy is
     high in the warm period, decays on the ramp, and DDM fires on the ramp
     (never during warm-up). Deterministic: two runs agree row-for-row."""
-    from detecting_and_addressing_change_spark.pipelines import (
-        gradual_drift_experiment,
-    )
-
     # batch 8 -> 80 detector samples: DDM's 30-instance minimum sits well
     # inside the warm period, so the ramp is detectable
     res = (

@@ -37,20 +37,6 @@ def test_pooled_features_models_dedupes_repeated_model(spark):
     assert pooled.filter(F.col("model") == "BERT").count() == 8
 
 
-def test_tagged_embedder_unknown_backend_raises_value_error(spark):
-    import pytest
-
-    from detecting_and_addressing_change_spark.operators.embedder import (
-        embed_documents_tagged,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "a b", "BERT")], "doc_id long, text string, model string"
-    )
-    with pytest.raises(ValueError, match="unknown backend"):
-        embed_documents_tagged(docs, dim=4, backend="bogus")
-
-
 def test_lm_and_ngram_broadcast_guards_degrade_to_shuffle_join(spark):
     """ADVICE r5: the corpus-derived model tables in x60/x62 must be able
     to degrade from the forced broadcast to a co-partitioned shuffle join
