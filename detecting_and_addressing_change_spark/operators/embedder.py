@@ -26,6 +26,7 @@ pooling for the drift experiments and retrieval.
 
 from __future__ import annotations
 
+import itertools
 import math
 from collections.abc import Iterator
 
@@ -77,6 +78,42 @@ def _word_vec(
             v.append(math.modf(math.sin(h))[0] * 2 - 1)
         memo[word] = v
     return v
+
+
+def _word_vecs(words: list[str], model: str, dim: int) -> np.ndarray:
+    """``_word_vec`` for a batch of words: a ``(len(words), dim)`` float64
+    array, bit-identical to ``_hash31`` per entry.
+
+    The polyhash runs in int64 numpy over the UCS-4 code points of every
+    ``f"{word}:"`` at once, one step per character position (every value
+    stays below 31 * 2**31 + 0x110000), from the hash of the shared
+    ``f"{model}:"`` prefix, then one step per digit of ``d``. Each value
+    goes through ``math.sin``, not ``np.sin``: numpy may route float64
+    ``sin`` through SVML on AVX-512 hosts, and the q39/x36 SQL oracles pin
+    libm's values. ``modf`` and ``* 2 - 1`` are exact or correctly rounded
+    in both libraries."""
+    h0 = 7
+    for ch in f"{model}:":
+        h0 = (h0 * 31 + ord(ch)) % _M31
+    keys = [f"{w}:" for w in words]
+    if not keys:
+        return np.empty((0, dim))
+    lens = np.fromiter(map(len, keys), np.int64, len(keys))
+    width = int(lens.max())
+    # the trailing ':' keeps a word's NUL characters inside the buffer
+    cps = np.array(keys, dtype=f"U{width}").view(np.uint32)
+    cps = cps.reshape(len(keys), width).astype(np.int64)
+    h = np.full(len(keys), h0, dtype=np.int64)
+    for j in range(width):
+        h = np.where(lens > j, (h * 31 + cps[:, j]) % _M31, h)
+    hd = np.empty((len(keys), dim), dtype=np.int64)
+    for d in range(dim):
+        col = h
+        for ch in str(d):
+            col = (col * 31 + ord(ch)) % _M31
+        hd[:, d] = col
+    sins = np.fromiter(map(math.sin, hd.ravel().tolist()), np.float64, hd.size)
+    return np.modf(sins.reshape(hd.shape))[0] * 2 - 1
 
 
 def hash_embed_tokens(
@@ -172,6 +209,29 @@ POOLED_SCHEMA = T.StructType(
 )
 
 
+def _fold_mean(table: np.ndarray, ids: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Mean of each document's token rows of the float32 ``table``.
+    ``ids`` holds the documents' row ids back to back, ``lens`` each
+    document's token count.
+
+    A left-to-right float64 fold over float32 token vectors: numpy upcasts
+    each float32 addend exactly like ``x.cast("double")``, and one step per
+    token position keeps, within every document, the non-associative FP
+    order that the HOF fold (and the DuckDB oracle's list fold) uses. The
+    documents are visited longest first, so the documents still folding at
+    position ``p`` are a prefix."""
+    order = np.argsort(-lens, kind="stable")
+    sorted_lens = lens[order]
+    starts = (np.cumsum(lens) - lens)[order]
+    acc = np.zeros((len(lens), table.shape[1]))
+    for p in range(int(sorted_lens[0])):
+        k = np.count_nonzero(sorted_lens > p)
+        acc[:k] += table[ids[starts[:k] + p]]
+    out = np.empty_like(acc)
+    out[order] = acc
+    return out / lens[:, None]
+
+
 def pooled_embed_documents_tagged(
     docs: DataFrame,
     dim: int = 8,
@@ -196,39 +256,43 @@ def pooled_embed_documents_tagged(
     accumulated left-to-right in float64 per dimension — the same fold
     ``mean_pool_col``'s ``F.aggregate`` performs — and divided by the token
     count. Pinned by tests/test_arrays.py::test_fused_pooling_bit_identical.
+
+    Each model's word vectors sit in one float32 table that grows across
+    the task's Arrow batches; new words are embedded in one
+    :func:`_word_vecs` call per batch and model.
     """
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memos: dict[str, dict[str, np.ndarray]] = {}
-
-        def vec32(word: str, model: str) -> np.ndarray:
-            memo = memos.setdefault(model, {})
-            v = memo.get(word)
-            if v is None:
-                v = np.asarray(
-                    _word_vec(word, model, dim, {}), dtype=np.float32
-                )
-                memo[word] = v
-            return v
-
+        vocab: dict[str, dict[str, int]] = {}
+        tables: dict[str, np.ndarray] = {}
         for pdf in batches:
-            feats = []
-            for t, m in zip(pdf[text_col], pdf[model_col]):
-                words = (t or "").split(" ")[:max_seq_len]
-                # left-to-right float64 fold over float32 token vectors:
-                # numpy upcasts each float32 addend exactly like
-                # x.cast("double"), and the per-token loop preserves the
-                # non-associative FP order the HOF fold (and the DuckDB
-                # oracle's list fold) uses
-                acc = np.zeros(dim, dtype=np.float64)
-                for w in words:
-                    acc += vec32(w, m)
-                feats.append(acc / len(words))
+            texts = pdf[text_col].tolist()
+            by_model: dict[str, list[int]] = {}
+            for i, m in enumerate(pdf[model_col].tolist()):
+                by_model.setdefault(m, []).append(i)
+            feats = np.empty((len(texts), dim))
+            for m, rows in by_model.items():
+                index = vocab.setdefault(m, {})
+                known = len(index)
+                docs = [(texts[i] or "").split(" ")[:max_seq_len] for i in rows]
+                ids = np.array(
+                    [index.setdefault(w, len(index)) for ws in docs for w in ws],
+                    dtype=np.int64,
+                )
+                table = tables.get(m, np.empty((0, dim), dtype=np.float32))
+                if len(index) > known:
+                    new = list(itertools.islice(index, known, None))
+                    table = np.concatenate(
+                        [table, _word_vecs(new, m, dim).astype(np.float32)]
+                    )
+                    tables[m] = table
+                lens = np.fromiter(map(len, docs), np.int64, len(docs))
+                feats[rows] = _fold_mean(table, ids, lens)
             yield pd.DataFrame(
                 {
                     "model": pdf[model_col].values,
                     "doc_id": pdf[id_col].values,
-                    "features": feats,
+                    "features": list(feats),
                 }
             )
 

@@ -37,6 +37,19 @@ def get_spark(
       windows, whose plans are more varied. It is a static conf, so it
       can only be set here (or through ``extra_conf``) before the session
       starts.
+    - Streaming checkpoints through ``FileSystemBasedCheckpointFileManager``
+      instead of Spark's FileContext-based default. Without libhadoop,
+      Hadoop's local file system forks a ``readlink`` process for every
+      link-status check, and ``AbstractFileSystem.rename`` checks both
+      endpoints of every rename, for the file and again for its ``.crc``:
+      one 3-batch drain of 16 keys spawned 288 ``readlink`` processes,
+      most of them in the state-store commit. ``FileSystem.rename`` on
+      the local file system is ``File.renameTo`` and forks nothing.
+      What does not change: on ``file:`` both managers check that the
+      target does not exist and then rename, so the offset and commit
+      logs still fail loudly on a concurrent writer. On HDFS, an
+      overwrite-rename onto an existing state file keeps the old file,
+      which is Spark's own behaviour on object stores.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -50,6 +63,11 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -124,37 +124,23 @@ def test_linear_map_udf_bit_identical(spark):
     assert am == bm  # exact float equality, not approx
 
 
-def test_fused_pooling_bit_identical(spark):
-    """The fused embed+pool mapInPandas must be bit-identical to the
-    two-step plan, mean_pool_col over embed_documents once per model — the
-    q39/q59/q60/q61 oracle hashes pin the two-step fold's exact doubles."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from detecting_and_addressing_change_spark.functions.arrays import (
-        mean_pool_col,
-    )
+def _assert_fused_matches_two_step(docs, n, max_seq_len=512):
+    """Rows of ``pooled_embed_documents_tagged`` equal the two-step plan,
+    mean_pool_col over embed_documents once per model, bit for bit."""
     from detecting_and_addressing_change_spark.operators.embedder import (
         embed_documents,
         pooled_embed_documents_tagged,
     )
-
-    rng = np.random.RandomState(3)
-    vocab = [f"w{i}" for i in range(40)] + ["", "café", "a-b", "0"]
-    rows = []
-    for i in range(200):
-        n = int(rng.randint(1, 30))
-        model = ["BERT", "SCIBERT"][i % 2]
-        rows.append((model, i, " ".join(rng.choice(vocab, size=n))))
-    rows.append(("BERT", 200, ""))  # empty text -> single ''-token doc
-    docs = spark.createDataFrame(rows, "model string, doc_id long, text string")
 
     two_step = sorted(
         (
             r
             for m in ("BERT", "SCIBERT")
             for r in embed_documents(
-                docs.filter(F.col("model") == m), model=m, dim=8
+                docs.filter(F.col("model") == m),
+                model=m,
+                dim=8,
+                max_seq_len=max_seq_len,
             )
             .select(
                 "model",
@@ -166,12 +152,53 @@ def test_fused_pooling_bit_identical(spark):
         key=lambda r: (r["model"], r["doc_id"]),
     )
     fused = (
-        pooled_embed_documents_tagged(docs, dim=8)
+        pooled_embed_documents_tagged(docs, dim=8, max_seq_len=max_seq_len)
         .orderBy("model", "doc_id")
         .collect()
     )
-    assert len(two_step) == len(fused) == 201
+    assert len(two_step) == len(fused) == n
     for a, b in zip(two_step, fused):
         assert (a["model"], a["doc_id"]) == (b["model"], b["doc_id"])
         # bit-exact, not approx: the oracle gate hashes these doubles
         assert a["features"] == b["features"], a["doc_id"]
+
+
+def test_fused_pooling_bit_identical(spark):
+    """The fused embed+pool mapInPandas must be bit-identical to the
+    two-step plan, mean_pool_col over embed_documents once per model — the
+    q39/q59/q60/q61 oracle hashes pin the two-step fold's exact doubles."""
+    rng = np.random.RandomState(3)
+    vocab = [f"w{i}" for i in range(40)] + ["", "café", "a-b", "0"]
+    rows = []
+    for i in range(200):
+        n = int(rng.randint(1, 30))
+        model = ["BERT", "SCIBERT"][i % 2]
+        rows.append((model, i, " ".join(rng.choice(vocab, size=n))))
+    rows.append(("BERT", 200, ""))  # empty text -> single ''-token doc
+    docs = spark.createDataFrame(rows, "model string, doc_id long, text string")
+    _assert_fused_matches_two_step(docs, 201)
+
+
+def test_fused_pooling_bit_identical_across_arrow_batches(spark):
+    """Seven rows per Arrow batch: each task's per-model word table grows
+    over several batches, and words first met in a later batch must embed
+    and fold exactly as in the two-step plan. Null text embeds as the empty
+    string; a document longer than ``max_seq_len`` is truncated first."""
+    rng = np.random.RandomState(5)
+    rows = []
+    for i in range(120):
+        n = int(rng.randint(1, 12))
+        # the vocabulary widens with i, so later batches bring new words
+        words = [f"w{int(rng.randint(0, 5 + i))}" for _ in range(n)]
+        rows.append((["BERT", "SCIBERT"][i % 2], i, " ".join(words)))
+    rows.append(("SCIBERT", 120, None))
+    rows.append(("BERT", 121, " ".join(f"long{j}" for j in range(40))))
+    rows.append(("BERT", 122, "𝔘 café 0123 " + "x" * 30))
+    docs = spark.createDataFrame(rows, "model string, doc_id long, text string")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        _assert_fused_matches_two_step(docs, 123, max_seq_len=16)
+    finally:
+        spark.conf.set(key, prev)

@@ -129,3 +129,33 @@ def test_memoized_embedding_bit_exact_vs_original_formula():
         assert again == want
 
     check()
+
+
+def test_batch_word_vectors_bit_exact_vs_original_formula():
+    """The fused embedder's batch kernel ``_word_vecs`` (int64 polyhash over
+    UCS-4 code points, libm ``sin``) must give the per-(word, d) formula's
+    doubles bit for bit. ``dim=12`` makes ``d`` run to two digits; the
+    words cover the empty word, digits only, 30 characters, a non-ASCII
+    and an astral-plane character, and mixed lengths in one batch."""
+    import numpy as np
+
+    from detecting_and_addressing_change_spark.operators.embedder import (
+        _hash31,
+        _word_vecs,
+    )
+
+    words = ["", "0123", "x" * 30, "café", "𝔘", "w1", "naïve 𝔘x"]
+    for model in ("BERT", "SCIBERT"):
+        got = _word_vecs(words, model, 12)
+        want = np.array(
+            [
+                [
+                    math.modf(math.sin(_hash31(w, model, d)))[0] * 2 - 1
+                    for d in range(12)
+                ]
+                for w in words
+            ]
+        )
+        assert got.dtype == np.float64 and got.shape == (len(words), 12)
+        assert got.tobytes() == want.tobytes(), model
+    assert _word_vecs([], "BERT", 12).shape == (0, 12)

@@ -686,3 +686,60 @@ def test_scoped_state_partitions_restores_on_error(spark):
     with scoped_state_partitions(spark, 4):
         assert spark.conf.get(key) == "4"
     assert spark.conf.get(key) == prev
+
+
+def test_detector_stream_checkpoints_fork_no_readlink(spark, error_rows):
+    """A keyed detector drain commits its offset log, commit log and state
+    store without forking ``readlink``. Without libhadoop, Hadoop's local
+    file system shells out for every link-status check, and the
+    FileContext-based checkpoint manager checks both ends of every rename
+    (file and ``.crc``): hundreds of ``readlink`` processes per drain. The
+    session's FileSystem-based manager renames with ``File.renameTo``.
+    Spawns are counted with a JFR recording of ``jdk.ProcessStart`` over
+    py4j."""
+    from detecting_and_addressing_change_spark.streaming.ddm_stream import (
+        detect_drift_stream,
+    )
+    from detecting_and_addressing_change_spark.streaming.replay import (
+        read_replay_stream,
+        stage_replay_files,
+    )
+
+    jvm = spark._jvm
+    recorder = jvm.jdk.jfr.FlightRecorder.getFlightRecorder()
+    assert "jdk.ProcessStart" in {
+        t.getName() for t in recorder.getEventTypes()
+    }
+    schema = "detector_id string, seq_id long, error double"
+    df = spark.createDataFrame(error_rows, schema)
+    with tempfile.TemporaryDirectory() as tmp:
+        n = stage_replay_files(df, "seq_id", f"{tmp}/staged", batch_size=300)
+        assert n == 3
+        rec = jvm.jdk.jfr.Recording()
+        try:
+            rec.enable("jdk.ProcessStart")
+            rec.start()
+            q = (
+                detect_drift_stream(
+                    read_replay_stream(spark, f"{tmp}/staged", schema)
+                )
+                .writeStream.format("memory")
+                .queryName("ddm_fork_probe")
+                .option("checkpointLocation", f"{tmp}/ckpt")
+                .trigger(availableNow=True)
+                .start()
+            )
+            assert q.awaitTermination(120)
+            rec.stop()
+            path = jvm.java.io.File(f"{tmp}/spawns.jfr").toPath()
+            rec.dump(path)
+        finally:
+            rec.close()
+        commands = [
+            str(e.getString("command")).split(" ")[0].rsplit("/", 1)[-1]
+            for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path)
+        ]
+        assert spark.sql("SELECT * FROM ddm_fork_probe").count() == len(
+            error_rows
+        )
+    assert "readlink" not in commands, commands.count("readlink")
