@@ -79,10 +79,11 @@ def minhash_signatures(
     Shingles are word n-grams built with a higher-order function (no
     explode for the n-gram construction itself); ONE md5 per shingle is
     split into two 32-bit ints and expanded to k hashes with the
-    Kirsch-Mitzenmacher scheme h_j = (hx + j*hy) mod 2^32 — 1/k the digest
-    cost of k independent md5s, still engine-portable. The groupBy(id) agg
+    Kirsch-Mitzenmacher scheme h_j = mix32((hx + j*hy) mod 2^32)
+    (``functions.hashing.km_minhash_col``) — 1/k the digest cost of k
+    independent md5s, still engine-portable. The groupBy(id) agg
     is map-side combinable so the shuffle carries k ints per doc."""
-    from ..functions.hashing import M32, km_hash_pair_cols
+    from ..functions.hashing import km_hash_pair_cols, km_minhash_col
     from ..sources.tables import spread_small_input
 
     hx, hy = km_hash_pair_cols(F.col("sh"))
@@ -91,9 +92,7 @@ def minhash_signatures(
         F.explode(word_ngrams_col(F.col(text_col), shingle_size)).alias("sh"),
     ).select(F.col(id_col), hx.alias("hx"), hy.alias("hy"))
     aggs = [
-        F.min((F.col("hx") + F.lit(j) * F.col("hy")) % F.lit(M32)).alias(
-            f"h{j}"
-        )
+        F.min(km_minhash_col(F.col("hx"), F.col("hy"), j)).alias(f"h{j}")
         for j in range(num_hashes)
     ]
     return hashed.groupBy(id_col).agg(*aggs)
@@ -107,21 +106,19 @@ def minhash_signatures_from_tokens(
     :func:`minhash_signatures` over the same documents (MIN over a doc's
     distinct shingle set equals MIN over all occurrences, and the hash
     formula — one md5 per shingle, Kirsch-Mitzenmacher
-    h_j = (hx + j*hy) mod 2^32 — is the same), but callers that have
+    h_j = mix32((hx + j*hy) mod 2^32) — is the same), but callers that have
     already materialized the shingle table (the SSJoin family, the
     recall audits) skip a second corpus scan, the exact-dup collapse
     window re-run, and the re-explode (guide §1.2 step 1 — don't
     recompute what a sibling branch already produced; the x90-fallback
     precedent, extended to x88/x91 in r17)."""
-    from ..functions.hashing import M32, km_hash_pair_cols
+    from ..functions.hashing import km_hash_pair_cols, km_minhash_col
 
     hx, hy = km_hash_pair_cols(F.col("w"))
     hashed = toks.select(F.col(id_col), hx.alias("hx"), hy.alias("hy"))
     return hashed.groupBy(id_col).agg(
         *[
-            F.min((F.col("hx") + F.lit(j) * F.col("hy")) % F.lit(M32)).alias(
-                f"h{j}"
-            )
+            F.min(km_minhash_col(F.col("hx"), F.col("hy"), j)).alias(f"h{j}")
             for j in range(num_hashes)
         ]
     )

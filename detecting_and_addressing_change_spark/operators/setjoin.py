@@ -347,7 +347,7 @@ def _minhash_candidates(
     ``dedup.minhash_signatures`` over the raw text: MIN over distinct
     shingles equals MIN over all shingle occurrences, and the hash
     formula below is ``minhash_signatures``'s exactly (one md5 per
-    shingle, Kirsch-Mitzenmacher h_j = (hx + j*hy) mod 2^32), so the
+    shingle, Kirsch-Mitzenmacher h_j = mix32((hx + j*hy) mod 2^32)), so the
     signatures are bit-identical — but the fallback route skips a second
     corpus scan, the collapse window re-run, and the re-explode
     (measured ~2 s of x90's sf0.1 cost)."""

@@ -53,14 +53,20 @@ def _minhash_oracle(
     num_hashes: int = 8, rows_per_band: int = 2, source: str = "documents"
 ) -> str:
     """Shared oracle CTE text: word-3-gram shingles -> one md5 split into a
-    Kirsch-Mitzenmacher 32-bit pair -> k min-hashes -> band buckets. Mirrors
+    Kirsch-Mitzenmacher 32-bit pair -> k xorshift-multiply-mixed min-hashes
+    (73244475 = 0x45D9F3B) -> band buckets. Mirrors
     operators.dedup.minhash_signatures/minhash_bands computation exactly
     (integer arithmetic on md5 halves is engine-portable). ``source`` is the
     (doc_id, text) relation to sign — the guarded pipeline signs collapsed
     representatives, not the raw corpus. ``bands`` carries ``sig`` (the
     '|'-joined full signature) for the tier guard."""
+    def mix32(h: str) -> str:
+        return f"(xor({h} >> 16, {h}) * 73244475 % 4294967296)"
+
     hash_cols = ",\n             ".join(
-        f"MIN((hx + {j} * hy) % 4294967296) AS h{j}"
+        "MIN(xor({h} >> 16, {h})) AS h{j}".format(
+            h=mix32(mix32(f"((hx + {j} * hy) % 4294967296)")), j=j
+        )
         for j in range(num_hashes)
     )
     sig_concat = " || '|' || ".join(

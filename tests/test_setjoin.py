@@ -242,7 +242,7 @@ def test_default_budget_derives_from_shuffle_partitions(spark, corpus_rows):
 
 
 try:
-    from hypothesis import given, settings, strategies as st
+    from hypothesis import example, given, settings, strategies as st
 
     HAVE_HYP = True
 except ImportError:  # pragma: no cover
@@ -280,6 +280,9 @@ if HAVE_HYP:
 
     @settings(max_examples=6, deadline=None)
     @given(seed=st.integers(0, 10_000), n_docs=st.integers(6, 14))
+    # a shingle with a tiny Kirsch-Mitzenmacher step won 58 of 64 unmixed
+    # minima here, so the j=0.714 pair (12, 13) shared no band
+    @example(seed=2116, n_docs=7)
     def test_routing_never_changes_pairs_high_entropy(spark, seed, n_docs):
         """VERDICT r7 #1 done-criterion: on high-entropy corpora (per-doc
         vocabularies, near-dup pairs well above the banding knee) the
