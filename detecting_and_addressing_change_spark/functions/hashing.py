@@ -43,6 +43,12 @@ def km_hash_pair_cols(shingle: Column) -> tuple[Column, Column]:
 
 MIX32_C = 0x45D9F3B  # odd, < 2^27: h * MIX32_C stays below 2^59
 
+# The MinHash family km_hash_pair_cols + km_minhash_col compute. Stored
+# signatures only compare with signatures of the same family, so the
+# persisted MinHash index records this name and refuses any other; give
+# any change to either function a new name.
+HASH_FAMILY = "km-mix32-v1"
+
 
 def km_minhash_col(hx: Column, hy: Column, j: int) -> Column:
     """The j-th MinHash value of a shingle: mix32((hx + j*hy) mod 2^32).

@@ -37,6 +37,8 @@ the batch side so the index scan never shuffles.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,6 +48,7 @@ from ..sources.tables import (
     local_table,
     read_parquet_cached_schema,
 )
+from ..functions.hashing import HASH_FAMILY
 from .dedup import minhash_bands, minhash_candidate_pairs, minhash_signatures
 from .index_commit import commit_table_swap, recover_table_swap
 
@@ -56,6 +59,32 @@ _TABLES = ("docs", "sigs")
 # follows the current directory listing); declaring them skips the
 # footer-inference job a bare read pays per call (guide §1.2/§6).
 _DOCS_SCHEMA = "doc_id long, dgst string"
+
+
+# file at the index root naming the hash family its signatures come from;
+# table swaps (compaction, delete) rewrite docs/ and sigs/ and leave it
+_FAMILY_FILE = "_hash_family"
+
+
+def _record_family(path: str) -> None:
+    with open(os.path.join(path, _FAMILY_FILE), "w") as f:
+        f.write(HASH_FAMILY)
+
+
+def _check_family(path: str) -> None:
+    """Refuse an index signed by another MinHash family: its band buckets
+    never meet this build's, so probes and appends would silently find
+    no near match."""
+    try:
+        with open(os.path.join(path, _FAMILY_FILE)) as f:
+            found = f.read().strip()
+    except FileNotFoundError:
+        found = None
+    if found != HASH_FAMILY:
+        raise ValueError(
+            f"minhash index at {path!r} records hash family {found!r}; "
+            f"this build signs with {HASH_FAMILY!r} — rebuild the index"
+        )
 
 
 def _digests(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -137,6 +166,7 @@ def build_minhash_index(
     _sign_novel(
         docs, empty, text_col, id_col, num_hashes, shingle_size
     ).write.mode("overwrite").parquet(f"{path}/sigs")
+    _record_family(path)
 
 
 def append_to_minhash_index(
@@ -156,6 +186,7 @@ def append_to_minhash_index(
     import uuid
 
     spark = new_docs.sparkSession
+    _check_family(path)
     _check_sig_schema(spark, path, num_hashes)
     known = read_parquet_cached_schema(spark, f"{path}/sigs").select("dgst")
     novel_sigs = _sign_novel(
@@ -186,6 +217,7 @@ def minhash_index_edges(
       to each digest group's keeper id, then the same tier/cap guarded
       self-join as the batch path.
     """
+    _check_family(path)
     docs = spark.read.schema(_DOCS_SCHEMA).parquet(f"{path}/docs")
     sigs = read_parquet_cached_schema(spark, f"{path}/sigs")
     keeper = F.min("doc_id").over(Window.partitionBy("dgst"))
@@ -298,6 +330,7 @@ def init_minhash_index(
     local_table(spark, [], "doc_id long, dgst string").write.mode(
         "overwrite"
     ).parquet(f"{path}/docs/batch=-1")
+    _record_family(path)
 
 
 def append_minhash_batch(
@@ -325,6 +358,7 @@ def append_minhash_batch(
       ``_temporary``, so a mid-write crash leaves no partial state).
     """
     spark = batch_df.sparkSession
+    _check_family(path)
     _check_sig_schema(spark, path, num_hashes)
     known = read_parquet_cached_schema(spark, f"{path}/sigs").select("dgst")
     novel = _sign_novel(
@@ -357,6 +391,7 @@ def minhash_index_probe(
     index scan joins in place with no shuffle; indexed texts are never
     read or re-signed (index bands derive from the stored per-digest
     signatures, a narrow map)."""
+    _check_family(path)
     bdg = batch.select(
         F.md5(F.col(text_col)).alias("dgst"),
         F.col(id_col).alias("batch_id"),

@@ -31,28 +31,14 @@ from . import extensions19  # noqa: F401,E402
 from . import extensions20  # noqa: F401,E402
 from . import drift  # noqa: F401,E402
 
-# The external driver evaluates at most the first 50 registered queries per
-# round (CORRECTNESS_r01.json covered exactly the first 50 names).  Rotate the
-# registration order so queries without a driver-verified GREEN row yet come
-# first; queries already attested green in a prior round go to the back.
-# Relative order is preserved within each group.
-#
-# Round-5 policy (VERDICT r4 task #1): a driver-green row only counts as
-# *current* if the query's implementation has not changed since the round
-# that produced it.
-#
-# Round-7: CORRECTNESS_r06.json attested all 50 names in the r6 window
-# green, so those rows are folded in below — EXCEPT the queries whose
-# executed implementation changes again this round (ADVICE r6):
-#  - x76/x79 (minhash_index atomic compaction + id_col threading;
-#    extensions10 scratch-dir keyed by application id),
-#  - x78/x14 (decode_png bounded decompression),
-#  - x09 (r6 row was vacuous — 0 Spark rows == 0 oracle rows at the
-#    pinned sf; fixture/threshold densified this round so the guarded
-#    candidate path is attested on non-empty output).
-# These float to the front of the r7 window for fresh rows.
+# The external correctness harness evaluates at most the first 50
+# registered queries per round, so registration is rotated to put every
+# query without a green row first (relative order is kept within each
+# group). A name is listed only if some CORRECTNESS_r*.json round holds
+# a fully green row for it (tests/test_contract.py checks this). A change to what
+# a query returns or to its oracle takes its name off, so it floats
+# forward for a fresh row; a refactor that keeps both keeps it listed.
 _ATTESTED_PRIOR_ROUNDS = frozenset({
-    # green rows in CORRECTNESS_r01.json ∪ CORRECTNESS_r02.json
     "q01_scan_project_cast", "q02_filter_predicate", "q03_clean_text",
     "q04_word_count_topk", "q05_topk_tiebreak", "q06_inner_join",
     "q07_multi_join_agg", "q08_left_outer_join", "q09_semi_join",
@@ -61,278 +47,64 @@ _ATTESTED_PRIOR_ROUNDS = frozenset({
     "q16_window_rank", "q17_window_running_avg", "q18_window_lag",
     "q19a_intersect", "q19b_except", "q19c_union_all_count", "q20_case_flags",
     "q21_date_parts", "q22_hash_split", "q23_mse", "q24_count_window_mean",
-    "q26_json_extract", "q27_sessionize",
-    "q31_linear_map", "q32_poolings",
+    "q25_ddm_drift_flags", "q26_json_extract", "q27_sessionize",
+    "q28_nb_fit_predict", "q29_classification_metrics",
+    "q30_sigma_schedule_gate", "q31_linear_map", "q32_poolings",
     "q33_seeded_noise_gate", "q34_time_window", "q35_cube", "q36_percentiles",
     "q37_string_functions", "q38_conditional_scalars",
-    "q40_range_frame", "q41_first_last_nth",
+    "q39_abrupt_drift_experiment", "q40_range_frame", "q41_first_last_nth",
     "q42_array_functions", "q43_asof_join", "q44_range_join_bins", "q45_pivot",
-    "q46_grouping_sets", "q48_window_distribution", "q49_map_functions",
-    "q50_interval_arithmetic", "q51_stats_aggregates", "q52_lstm_infer",
-    "q53_correlated_subquery", "q54_unpivot", "q55_except_intersect_all",
-    "q56_array_lambdas", "q57_topk_per_group", "q58_global_rank",
-    "x01_dedup_exact", "x02_dedup_fingerprint",
-    "x05_simhash", "x06_ngram_jaccard",
-    # x07_similarity_topk de-registered round 16 (green r01-r15): its
-    # brute-force exact top-k runs inside x83 as the recall harness's
-    # ground truth — sweep-budget consolidation, VERDICT r15 #2.
-    "x08_similarity_ann_lsh",
-    "x10_text_stats", "x11_text_quality", "x12_lang_id",
-    "x13_rolling_fingerprint", "x15_similarity_ivf",
+    "q46_grouping_sets", "q47_session_window", "q48_window_distribution",
+    "q49_map_functions", "q50_interval_arithmetic", "q51_stats_aggregates",
+    "q52_lstm_infer", "q53_correlated_subquery", "q54_unpivot",
+    "q55_except_intersect_all", "q56_array_lambdas", "q57_topk_per_group",
+    "q58_global_rank", "q59_gradual_drift_experiment",
+    "q60_unsupervised_drift_experiment", "q61_mapping_experiment",
+    "x01_dedup_exact", "x02_dedup_fingerprint", "x03_minhash_bands",
+    "x04_minhash_pairs", "x05_simhash", "x06_ngram_jaccard",
+    "x08_similarity_ann_lsh", "x09_embedding_near_dup",
+    "x101_takedown_verdict", "x102_index_compaction_verdict",
+    "x103_finetune_adaptation_audit", "x105_ivf_compaction_verdict",
+    "x106_tsne_projection", "x107_mp4_metadata", "x108_lstm_finetune_session",
+    "x109_rag_retrieval", "x10_text_stats", "x116_mlp_mapping_session",
+    "x117_shard_export", "x118_leakage_safe_split", "x11_text_quality",
+    "x120_shard_layout_verdict", "x121_epoch_composition",
+    "x122_two_level_reshard", "x123_training_build_materialized",
+    "x124_shard_stream_loader", "x125_train_from_shards_nb",
+    "x126_train_from_shards_lstm", "x127_shard_stream_resume",
+    "x128_epoch_reshard_training", "x129_multi_epoch_training", "x12_lang_id",
+    "x13_rolling_fingerprint", "x14_multimodal_features", "x15_similarity_ivf",
     "x16_regex_tokens", "x17_tfidf_topk", "x18_bloom_join_filter",
     "x19_cms_heavy_hitters", "x20_stratified_sample", "x21_salted_skew_join",
-    "x22_table_profile", "x24_vocab_encode",
+    "x22_table_profile", "x23_dedup_clusters", "x24_vocab_encode",
     "x25_changelog_upsert", "x26_pii_scrub", "x27_length_histogram",
-    "x28_bigram_topk", "x29_vector_quantize",
-    "x34_mad_outliers", "x36_lstm_sequence",
-    "x38_weighted_sample", "x41_table_diff",
-    # green rows in CORRECTNESS_r03.json
-    "q47_session_window",
-    "x30_time_rollup", "x31_event_funnel",
-    "x32_cohort_retention", "x33_fuzzy_join", "x39_sliding_window",
-    "x40_ewma",
-    "x45_similarity_ivf_multiprobe",
-    # green rows in CORRECTNESS_r04.json (post-cap sigma semantics q30/q59;
-    # literal-oracle upgrades x42/q61; the x46–x57 curation family)
-    "q30_sigma_schedule_gate", "x42_pca_project",
-    "x47_repetition_signals", "x48_decontaminate",
+    "x28_bigram_topk", "x29_vector_quantize", "x30_time_rollup",
+    "x31_event_funnel", "x32_cohort_retention", "x33_fuzzy_join",
+    "x34_mad_outliers", "x36_lstm_sequence", "x37_bm25_topk",
+    "x38_weighted_sample", "x39_sliding_window", "x40_ewma", "x41_table_diff",
+    "x42_pca_project", "x43_audio_frames", "x44_image_resize",
+    "x45_similarity_ivf_multiprobe", "x46_quality_filter",
+    "x47_repetition_signals", "x48_decontaminate", "x49_containment_pairs",
     "x50_centroid_shift", "x51_quality_drift_monitor",
-    "x53_sequence_packing",
-    "x54_model_quality_filter",
-    "x57_page_hinkley",
-    # green rows in CORRECTNESS_r05.json (NB/metrics/graph/binary_ops
-    # re-attests + the x58-x75 families), minus the queries refactored in
-    # round 6 (see policy note above)
-    "q25_ddm_drift_flags", "q28_nb_fit_predict",
-    "q29_classification_metrics", "q39_abrupt_drift_experiment",
-    "q60_unsupervised_drift_experiment",
-    # x03/x14 deliberately NOT listed (round-6 close sweep): x03's
-    # minhash_bands gained the carry_sig parameter and x14's 'auto'
-    # decoder closure now routes png — executed paths changed, so both
-    # float forward for fresh rows even though behavior is unchanged.
-    "x37_bm25_topk", "x43_audio_frames", "x44_image_resize",
-    "x58_kmeans_cells", "x59_kmeans_ivf_topk",
-    "x61_source_mixing", "x63_doc_chunking",
-    "x64_mmd_drift", "x65_ks_drift", "x66_chunk_dedup",
-    # x67_zorder_key deliberately NOT listed (round-7): norm16_col gained
-    # long casts on its bounds (ANSI int-overflow fix) — executed
-    # expression changed, floats forward for a fresh row.
-    "x68_bpe_merges", "x69_oov_rate", "x70_data_expectations",
-    "x71_textrank", "x73_quantile_drift",
-    "x74_token_mixing",
-    # green rows in CORRECTNESS_r07.json (the r7 refactor re-attests
-    # x09/x14/x67/x76/x79 + the new x83-x89 families + filler window),
-    # minus x78: decode_png's executed body changes again in round 8
-    # (trailing-byte strictness, ADVICE r7) so it floats for a fresh row.
-    # x76/x79/x83/x55 legitimately STAY attested through the round-8
-    # index_commit extraction: only compact/delete/takedown call the
-    # shared protocol; their executed paths (build/append/probe/edges,
-    # batch curate) are byte-identical.
-    # x84/x88 deliberately NOT listed (round-8): prefix_jaccard_join's
-    # body was factored into the shared helpers the adaptive route also
-    # uses, and x88's truth side gains the sample_frac parameter —
-    # executed paths changed, both float forward for fresh rows.
-    # x76/x79 deliberately NOT listed (round-9): they now share the
-    # build-or-reuse base-index fixture (_minhash_base_index; x76 clones
-    # it before appending) — executed paths changed, both float forward
-    # for fresh rows.
-    "x09_embedding_near_dup", "x14_multimodal_features", "x67_zorder_key",
-    "x83_ann_recall",
-    # x85_hll_distinct de-registered round 16 (green r07-r15): its
-    # est/rel_err/zero_regs columns folded into x89, whose direct
-    # estimate is the same p=6 register arithmetic (VERDICT r15 #2).
-    # x89 deliberately NOT listed (round 16): it gains the folded x85
-    # columns — executed path changed, floats forward for a fresh row.
+    "x52_semantic_dedup_clusters", "x53_sequence_packing",
+    "x54_model_quality_filter", "x55_curation_pipeline", "x56_winsorize",
+    "x57_page_hinkley", "x58_kmeans_cells", "x59_kmeans_ivf_topk",
+    "x60_lm_perplexity", "x61_source_mixing", "x62_crossdoc_ngrams",
+    "x63_doc_chunking", "x64_mmd_drift", "x65_ks_drift", "x66_chunk_dedup",
+    "x67_zorder_key", "x68_bpe_merges", "x69_oov_rate",
+    "x70_data_expectations", "x71_textrank", "x72_drift_dashboard",
+    "x73_quantile_drift", "x74_token_mixing", "x75_dedup_savings",
+    "x76_incremental_dedup", "x77_source_cap", "x78_png_features",
+    "x79_index_probe", "x80_neardup_decontam", "x81_boilerplate_strip",
+    "x82_cdc_chunks", "x83_ann_recall", "x84_prefix_jaccard_join",
     "x86_join_size_estimate", "x87_quantized_recall",
-    # green rows in CORRECTNESS_r06.json (hot-bucket-guarded dedup family,
-    # r5-refactor re-attests, and the round-6 x77-x82 additions), minus
-    # x09/x14/x76/x78/x79 which change again in round 7 (see policy note)
-    # green rows in CORRECTNESS_r08.json (the r8 additions + the x78/x84/
-    # x88 re-attests; the 40 filler rows in that window were already
-    # listed above), minus the queries whose executed paths change in
-    # round 9: x94/x95 (ivf_index gains the all-staging recovery sweep on
-    # every mutation AND read — ADVICE r8), x84/x90 (setjoin._verify now
-    # takes id_col explicitly — ADVICE r8). Those four float forward for
-    # fresh rows. x78/x88/x91/x92/x93/x96 are untouched by the r9 diff
-    # (x92's operator files gained only docstrings/comments — the
-    # executed forward, pooling and rounding are byte-identical).
-    "x78_png_features", "x88_minhash_recall_audit",
-    "x91_sampled_recall_audit", "x92_transformer_embed",
-    # x96_approx_distinct_audit de-registered round 16 (green r08-r15):
-    # its exact_distinct/within_rsd_bound columns folded into x93's
-    # grouped scan (VERDICT r15 #2). x93 deliberately NOT listed
-    # (round 16): it gains the folded x96 columns — executed path
-    # changed, floats forward for a fresh row.
-    # green rows in CORRECTNESS_r09.json (the r9 re-attests + the x97-x102
-    # streaming/verdict additions; the 38 filler rows in that window were
-    # already listed above), minus the queries whose executed paths change
-    # in round 10: x90 (adaptive_jaccard_join derives its default
-    # budget_rows from cluster shape — VERDICT r9 #6), x98 (curate_batch /
-    # curated_corpus / curation_stats gain the all-staging recovery sweep
-    # — ADVICE r9 — and the replay drops to 3 epochs — VERDICT r9 #3),
-    # x100 (micro-batch size floor so the replay is ~4 batches at every
-    # scale — ADVICE r9), x101/x102 (precondition asserts so fixture
-    # drift fails loudly instead of flipping a pinned verdict — ADVICE
-    # r9; both also execute commit_table_swap, which gains the payload
-    # fsync fence). Those five float forward for fresh rows.
-    "x76_incremental_dedup", "x79_index_probe", "x84_prefix_jaccard_join",
+    "x88_minhash_recall_audit", "x89_hll_rollup",
+    "x90_adaptive_similarity_join", "x91_sampled_recall_audit",
+    "x92_transformer_embed", "x93_winsorize_approx_audit",
     "x94_ivf_index_lifecycle", "x95_ivf_occupancy_audit",
-    "x97_transformer_semantic_shift", "x99_upsert_stream_verdict",
-    # green rows in CORRECTNESS_r10.json (the r10 re-attests x90/x98/
-    # x100-x102 + the new x103-x107), minus the queries whose executed
-    # paths change in round 11: x106 (the KL raise-guard relaxes to the
-    # operator contract `<=` and tsne_fit/tsne_project change — ADVICE
-    # r10), x107 (parse_mp4_metadata gains per-box fixed-field bounds
-    # checks — ADVICE r10), x100/x104 (the streaming twins now share one
-    # staged replay layout — VERDICT r10 #6), and x98/x101 (curate_batch
-    # materializes `graded` once instead of recomputing the probe chain
-    # for the audit stats, and x98's replay drops to the 2-epoch
-    # originals/clones split with a mid-stream re-delivery — VERDICT r10
-    # #7). Those six float forward for fresh rows. x92 stays listed: its
-    # operator module only LOST the unused pure-Python twin (moved to
-    # tools/pure_kernels.py) — the executed forward is byte-identical.
-    "x90_adaptive_similarity_join",
-    "x102_index_compaction_verdict", "x103_finetune_adaptation_audit",
-    "x105_ivf_compaction_verdict",
-    # green rows in CORRECTNESS_r11.json (the r11 re-attests x98/x100/
-    # x101/x104/x106/x107 + the new x108-x112), minus the queries whose
-    # executed paths change in round 12: x109 (the sweep-cost trim,
-    # VERDICT r11 #3 — the index shard shrinks to doc_id % 4), and
-    # x100/x104/x110/x111/x112 (their streaming runs now execute under
-    # scoped_state_partitions — the state-store commit-overhead trim,
-    # streaming/replay.py). All six float forward for fresh rows. x98,
-    # x99 and x101 stay listed: stage_replay_files/read_replay_stream
-    # themselves are byte-identical (replay.py only GAINED the new
-    # context manager) and their foreachBatch bodies are untouched.
-    "x98_curation_stream_verdict",
-    "x101_takedown_verdict",
-    "x106_tsne_projection", "x107_mp4_metadata",
-    "x108_lstm_finetune_session",
-    # green rows in CORRECTNESS_r12.json (the r12 re-attests x100/x104/
-    # x109-x112 + the new checkpoint-recovery trio x113-x115), minus the
-    # queries whose executed paths change in round 13:
-    # x100/x104/x110/x111/x112 (their awaitTermination(300) results are
-    # now checked — timeout raises instead of reading a partially-drained
-    # sink, ADVICE r12). Those five float forward for fresh rows.
-    # x109/x113/x114/x115 stay listed: their bodies and the replay.py
-    # functions they execute (stage_replay_files / read_replay_stream /
-    # scoped_state_partitions) are byte-identical this round (replay.py
-    # only gained a module-level comment ABOVE the scoping helper).
-    "x109_rag_retrieval",
-    # x114_join_recovery_verdict / x115_dedup_recovery_verdict
-    # de-registered round 17 (green r12-r16 each): their synthesis,
-    # preconditions, raise-guards and oracle emission arithmetic moved
-    # verbatim into x113_checkpoint_recovery_verdict, which now kills
-    # and resumes all three built-in state shapes with each phase's
-    # incarnations drained CONCURRENTLY — six sequential streaming
-    # drains became two drain windows (VERDICT r16 #2 sweep
-    # consolidation). x113 deliberately NOT listed: its executed path
-    # (the merged suite, new fingerprint-row output) changed this
-    # round, so it floats forward for a fresh r17 row.
-    # green rows in CORRECTNESS_r13.json (the r13 re-attests of the
-    # five timeout-hardened streaming verdicts and the seven
-    # kmeans-route rows, plus the new x116-x120), minus the queries
-    # whose executed paths change in round 14: x117-x120 float forward
-    # because operators/sharding.py is rewritten this round (the
-    # xor-injected epoch key — VERDICT r13 #1 plus the r14 rotation
-    # finding —, the transform-over-sequence rendezvous route — VERDICT
-    # r13 #2 —, the integer-div shard cut and the manifest-first
-    # write_shards — ADVICE r13) and x120 additionally gains the JSONL
-    # round-trip verdict column (VERDICT r13 #7). x118 also floats: its
-    # split side rides epoch_order_col, whose executed expression
-    # changed. The new x121 two-epoch composition audit (VERDICT r13
-    # #4) starts unattested. x116 stays: operators/mapping.py and its
-    # query body are untouched this round.
-    # x100_ddm_stream_verdict / x104_ph_stream_verdict de-registered
-    # round 17 (green r09-r16 each): both detectors now verdict off ONE
-    # staged replay as x100_detector_stream_verdicts — concurrent
-    # availableNow drains of the DDM and PH keyed operators over the
-    # shared layout (VERDICT r16 #2 sweep consolidation). The merged
-    # name starts unattested and leads the r17 window.
-    # x110_watermark_window_verdict / x111_stream_dedup_horizon_verdict /
-    # x112_stream_join_verdict de-registered round 17 (green r13-r16
-    # each): the same consolidation mechanism applied to the
-    # UNINTERRUPTED stateful trio — their syntheses, preconditions,
-    # raise-guards and closed-form oracles moved verbatim into
-    # x110_stateful_stream_verdicts, which drains all three shapes
-    # concurrently (three streaming floors became one drain window; the
-    # r17 sweep regen measured the registry 0.2 s under its 480 s
-    # ceiling, forcing the next fold the r16 VERDICT's mechanism names).
-    "x116_mlp_mapping_session",
-    # green rows in CORRECTNESS_r14.json: the whole sharding family
-    # x117-x124 plus q01-q53 re-greens. The relational re-greens were
-    # already listed above; x117-x124 are deliberately NOT folded —
-    # operators/sharding.py's executed expressions change AGAIN in
-    # round 15 (the fourth epoch-key slice round over id bits 60+ and
-    # the folded seed mask — VERDICT r14 #4 / ADVICE r14; the adaptive
-    # two-level route + n_shards>=1 guards inside rendezvous_shard_col
-    # — VERDICT r14 #3 / ADVICE r14; write_shards' max_id+1 write
-    # parallelism — ADVICE r14), x123 additionally moves onto the
-    # shared _x123_layout build fixture, and x124 gains TRUE in-batch
-    # arrival-time verification (ADVICE r14). All eight float forward
-    # for fresh rows, alongside the four new trainer-seam queries
-    # x125/x126/x127/x128 (ADVICE r15: the earlier form of this note
-    # named only x125/x126; x127/x128 landed in later r15 commits).
-    # green rows in CORRECTNESS_r15.json: the whole x117-x128 family
-    # plus q01-q44 re-greens (the relational re-greens were already
-    # listed above). Folded: x117/x118/x120/x121/x124 — their executed
-    # paths are untouched by the r16 diff (sharding.py's r16 changes are
-    # additive planner functions plus the rendezvous flat-branch
-    # extraction, which only x122 executes among these; assign_shards /
-    # write_shards / read_shards* / epoch_order_col are byte-identical).
-    # Deliberately NOT folded, floating forward for fresh r16 rows:
-    #  - x122: gains the folded x119 flat-regime columns AND executes
-    #    rendezvous_shard_col, whose flat branch now delegates to the
-    #    extracted _flat_shard_col (expression identical, parity-tested,
-    #    but the executed path changed);
-    #  - x123: curation.build_training_shards gains the sized shard cut
-    #    (packs_per_shard None-default + the sizing-parameter check runs
-    #    in its call path — behavior identical for its explicit
-    #    parameters, executed path changed);
-    #  - x125/x126/x127: their oracles move to the populated shard
-    #    count and x127 gains the exact-set redelivery capture (ADVICE
-    #    r15); x125/x127 also consume the extracted _nb_stats_ctes;
-    #  - x128: the epoch-2 build moves onto the shared
-    #    _x128_epoch2_layout fixture (consumed by the new x129);
-    #  - x129: new this round (the multi-epoch training session).
-    "x117_shard_export", "x118_leakage_safe_split",
-    "x120_shard_layout_verdict", "x121_epoch_composition",
-    "x124_shard_stream_loader",
-    # green rows in CORRECTNESS_r16.json: the nine r16-window names
-    # (x89/x93/x122/x123/x125-x129) plus 41 relational re-greens (the
-    # relational names were already listed above). All nine fold — none
-    # of their executed paths change in round 17:
-    #  - x89/x93: untouched by the r17 diff;
-    #  - x122: sharding.py's r17 changes are plan_shard_growth's
-    #    full_reshuffle fraction comment/docstring (x122 does not call
-    #    the planner) — rendezvous_shard_col/_flat_shard_col are
-    #    byte-identical;
-    #  - x123: curation.py's r17 change (the ADVICE r16 localCheckpoint
-    #    before the sizing agg) lives inside the packs_per_shard-None
-    #    branch, which x123's explicit packs_per_shard=4 never enters —
-    #    its executed statements are byte-identical (the x92 r9
-    #    precedent); the sized default is driver-attested by the NEW
-    #    x131, which rides the same layout fixture;
-    #  - x125-x129: extensions18/19 untouched (the new x132 imports
-    #    their fixtures read-only).
-    "x89_hll_rollup", "x93_winsorize_approx_audit",
-    "x122_two_level_reshard", "x123_training_build_materialized",
-    "x125_train_from_shards_nb", "x126_train_from_shards_lstm",
-    "x127_shard_stream_resume", "x128_epoch_reshard_training",
-    "x129_multi_epoch_training",
-    # green rows in CORRECTNESS_r06.json continue below
-    "q59_gradual_drift_experiment", "q61_mapping_experiment",
-    "x03_minhash_bands", "x04_minhash_pairs", "x23_dedup_clusters",
-    "x46_quality_filter", "x49_containment_pairs",
-    "x52_semantic_dedup_clusters", "x55_curation_pipeline", "x56_winsorize",
-    "x60_lm_perplexity", "x62_crossdoc_ngrams", "x72_drift_dashboard",
-    "x75_dedup_savings", "x77_source_cap", "x80_neardup_decontam",
-    "x81_boilerplate_strip", "x82_cdc_chunks",
+    "x97_transformer_semantic_shift", "x98_curation_stream_verdict",
+    "x99_upsert_stream_verdict",
 })
-
-# (The round-13 kmeans-route de-list — x58/x59/x83/x94/x95/x105/x109 —
-# was re-attested green in CORRECTNESS_r13.json with the table-route
-# branch live, so those rows fold back into the listing above.)
 
 
 def _rotate_unattested_first() -> None:

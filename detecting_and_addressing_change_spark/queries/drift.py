@@ -15,6 +15,11 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round
 from ..sources.tables import load_table
+from .fragments import (
+    _NB_EMBEDDINGS_CTES,
+    _NB_PIPELINE_CTES,
+    _ddm_scan_cte,
+)
 from .registry import query
 
 
@@ -34,86 +39,34 @@ def ddm_scan_oracle(seq_body: str) -> str:
     the pluggable form of the q25 oracle, reused by the corpus-quality
     drift monitor (x51). ``seq_body`` must select ``bucket`` and
     ``error`` columns."""
-    return (
-        """
+    return f"""
 WITH RECURSIVE seq AS MATERIALIZED (
   SELECT ROW_NUMBER() OVER (ORDER BY bucket) AS rn, bucket AS seq_id, error
   FROM (
-"""
-        + seq_body
-        + """
+{seq_body}
   )
-),"""
-        + _DDM_SCAN_TAIL
-    )
-
-
-_DDM_SCAN_TAIL = """
-scan AS (
-  SELECT 0::BIGINT AS rn, CAST(NULL AS BIGINT) AS seq_id,
-         CAST(NULL AS DOUBLE) AS error, CAST(NULL AS VARCHAR) AS flag,
-         1::BIGINT AS n, 1.0::DOUBLE AS p,
-         'infinity'::DOUBLE AS psmin, 'infinity'::DOUBLE AS pmin,
-         'infinity'::DOUBLE AS smin, FALSE AS in_change
-  UNION ALL
-  SELECT rn, seq_id, error,
-         CASE WHEN n1 < 30 THEN 'N'
-              WHEN p1 + s1 > pmin1 + 3.0 * smin1 THEN 'D'
-              WHEN p1 + s1 > pmin1 + 2.0 * smin1 THEN 'W'
-              ELSE 'N' END AS flag,
-         n1 AS n, p1 AS p, psmin1 AS psmin, pmin1 AS pmin, smin1 AS smin,
-         (n1 >= 30 AND p1 + s1 > pmin1 + 3.0 * smin1) AS in_change
-  FROM (
-    SELECT rn, seq_id, error, n1, p1, s1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN p1 + s1 ELSE psmin0 END AS psmin1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN p1 ELSE pmin0 END AS pmin1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN s1 ELSE smin0 END AS smin1
-    FROM (
-      SELECT rn, seq_id, error, n0 + 1 AS n1, p1,
-             SQRT(GREATEST(p1 * (1.0 - p1), 0.0) / n0) AS s1,
-             psmin0, pmin0, smin0
-      FROM (
-        SELECT scan.rn + 1 AS rn, seq.seq_id, seq.error,
-               CASE WHEN scan.in_change THEN 1 ELSE scan.n END AS n0,
-               (CASE WHEN scan.in_change THEN 1.0 ELSE scan.p END)
-                 + (seq.error
-                    - (CASE WHEN scan.in_change THEN 1.0 ELSE scan.p END))
-                   / (CASE WHEN scan.in_change THEN 1 ELSE scan.n END) AS p1,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.psmin END AS psmin0,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.pmin END AS pmin0,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.smin END AS smin0
-        FROM scan JOIN seq ON seq.rn = scan.rn + 1
-      )
-    )
-  )
-)
-SELECT seq_id, error, flag FROM scan WHERE rn >= 1
+),
+{_ddm_scan_cte(True)}SELECT seq_id, error, flag FROM scan WHERE rn >= 1
 """
 
 
-_DDM_ORACLE = ddm_scan_oracle(
-    """
+# The events table as a per-batch error series, 32 events a batch: the
+# DDM (q25), Page-Hinkley (x57) and streamed-detector (x100) input.
+_EVENTS_ERROR_SQL = """
     SELECT CAST(FLOOR(event_id / 32) AS BIGINT) AS bucket,
            AVG(CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END) AS error
     FROM events
     GROUP BY bucket
 """
-)
 
 
-@query("q25_ddm_drift_flags", oracle=_DDM_ORACLE)
-def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ddm import detect_drift
+def _events_error_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:data:`_EVENTS_ERROR_SQL` in Spark, as (detector_id, seq_id,
+    error) detector input."""
     from ..operators.windows import count_window_agg
 
     ev = load_table(spark, sf_dir, "events")
-    per_batch = count_window_agg(
+    return count_window_agg(
         ev,
         seq_col="event_id",
         batch_size=32,
@@ -125,7 +78,18 @@ def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").cast("long").alias("seq_id"),
         "error",
     )
-    return detect_drift(per_batch).select("seq_id", "error", "flag")
+
+
+_DDM_ORACLE = ddm_scan_oracle(_EVENTS_ERROR_SQL)
+
+
+@query("q25_ddm_drift_flags", oracle=_DDM_ORACLE)
+def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.ddm import detect_drift
+
+    return detect_drift(_events_error_series(spark, sf_dir)).select(
+        "seq_id", "error", "flag"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -135,38 +99,7 @@ def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "q28_nb_fit_predict",
-    oracle="""
-    WITH e AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings
-    ),
-    ex AS (
-      SELECT vec_id, label, UNNEST(emb) AS v,
-             GENERATE_SUBSCRIPTS(emb, 1) AS d
-      FROM e
-    ),
-    stats AS (
-      SELECT label, d, COUNT(*) AS n, SUM(v)/COUNT(*) AS mean,
-             SUM(v*v)/COUNT(*) - (SUM(v)/COUNT(*))*(SUM(v)/COUNT(*)) AS var
-      FROM ex GROUP BY label, d
-    ),
-    mv AS (SELECT MAX(var) AS maxvar FROM stats),
-    priors AS (SELECT label, COUNT(*) AS cnt FROM e GROUP BY label),
-    total AS (SELECT COUNT(*) AS n_total FROM e),
-    scored AS (
-      SELECT ex.vec_id, s.label AS cls,
-             SUM(-0.5*LN(2*PI()*(s.var + 1e-9*mv.maxvar))
-                 - (ex.v - s.mean)*(ex.v - s.mean)
-                   / (2*(s.var + 1e-9*mv.maxvar))) AS ll
-      FROM ex JOIN stats s ON ex.d = s.d
-      CROSS JOIN mv
-      GROUP BY ex.vec_id, s.label
-    ),
-    post AS (
-      SELECT scored.vec_id, cls,
-             ll + LN(p.cnt::DOUBLE / t.n_total) AS lp
-      FROM scored JOIN priors p ON scored.cls = p.label CROSS JOIN total t
-    ),
-    best AS (
+    oracle=_NB_EMBEDDINGS_CTES + """    best AS (
       SELECT vec_id, cls,
              ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY lp DESC, cls) AS r
       FROM post
@@ -274,93 +207,6 @@ def q29(spark: SparkSession, sf_dir: str) -> DataFrame:
 # iteration. Semantics additionally pinned by tests/test_pipeline.py on
 # separable synthetic classes.
 # --------------------------------------------------------------------------
-# Shared CTE prefix: the full relational NB drift pipeline (hash embed
-# both spaces -> ordered-fold mean pool -> NB sufficient stats on space A
-# -> score BOTH spaces), ending at ``preds(model, doc_id, pred)``. q39
-# appends the windowed-accuracy + DDM-scan tail; x103 (the fine-tune
-# session audit, queries/extensions14.py) appends a merged-stats second
-# scoring pass. Splitting the literal changes NEITHER oracle's text —
-# _Q39_ORACLE is byte-identical to its round-3 form.
-_NB_PIPELINE_CTES = """
-WITH RECURSIVE
-langcode AS (
-  SELECT lang, CAST(ROW_NUMBER() OVER (ORDER BY lang) - 1 AS INT) AS label
-  FROM (SELECT DISTINCT lang FROM documents)
-),
-docs AS (
-  SELECT d.doc_id, COALESCE(d.text, '') AS text, lc.label
-  FROM documents d JOIN langcode lc ON d.lang = lc.lang
-),
-n_docs AS (SELECT COUNT(*) AS n FROM docs),
-doc_words AS (
-  SELECT doc_id, UNNEST(string_split(text, ' ')) AS word,
-         GENERATE_SUBSCRIPTS(string_split(text, ' '), 1) AS pos
-  FROM docs
-),
-doc_words_t AS (SELECT * FROM doc_words WHERE pos <= 512),
-words AS (SELECT DISTINCT word FROM doc_words_t),
-dims AS (SELECT UNNEST(GENERATE_SERIES(0, 7)) AS d),
-models AS (SELECT UNNEST(['BERT', 'SCIBERT']) AS model),
-word_pre AS (
-  -- hash the 'model:word:' prefix once; each dim appends one digit char
-  SELECT w.word, m.model,
-         list_reduce(
-             [7::BIGINT] || list_transform(
-               string_split_regex(m.model || ':' || w.word || ':', ''),
-               c -> ord(c)::BIGINT),
-             (a, b) -> (a * 31 + b) % 2147483647) AS hpre
-  FROM words w CROSS JOIN models m
-),
-word_emb AS (
-  SELECT wp.word, wp.model, dm.d,
-         CAST(sin((wp.hpre * 31 + 48 + dm.d) % 2147483647) * 2 - 1
-              AS REAL) AS v32
-  FROM word_pre wp CROSS JOIN dims dm
-),
--- ordered-fold mean pooling: sum float32 tokens (as double) in pos order
-pooled AS (
-  SELECT dw.doc_id, we.model, we.d,
-         list_reduce([0.0::DOUBLE] || LIST(we.v32::DOUBLE ORDER BY dw.pos),
-                     (a, b) -> a + b) / COUNT(*) AS v
-  FROM doc_words_t dw JOIN word_emb we ON dw.word = we.word
-  GROUP BY dw.doc_id, we.model, we.d
-),
-train AS (
-  SELECT p.doc_id, p.d, p.v, dc.label
-  FROM pooled p JOIN docs dc ON p.doc_id = dc.doc_id
-  WHERE p.model = 'BERT'
-),
-stats AS (
-  SELECT label, d, COUNT(*) AS n, SUM(v)/COUNT(*) AS mean,
-         SUM(v*v)/COUNT(*) - (SUM(v)/COUNT(*))*(SUM(v)/COUNT(*)) AS var
-  FROM train GROUP BY label, d
-),
-mv AS (SELECT MAX(var) AS maxvar FROM stats),
-priors AS (SELECT label, COUNT(*) AS cnt FROM train WHERE d = 0 GROUP BY label),
-total AS (SELECT COUNT(*) AS n_total FROM docs),
-scored AS (
-  SELECT p.model, p.doc_id, s.label AS cls,
-         SUM(-0.5*LN(2*PI()*(s.var + 1e-9*mv.maxvar))
-             - (p.v - s.mean)*(p.v - s.mean)
-               / (2*(s.var + 1e-9*mv.maxvar))) AS ll
-  FROM pooled p JOIN stats s ON p.d = s.d
-  CROSS JOIN mv
-  GROUP BY p.model, p.doc_id, s.label
-),
-post AS (
-  SELECT sc.model, sc.doc_id, sc.cls,
-         sc.ll + LN(pr.cnt::DOUBLE / t.n_total) AS lp
-  FROM scored sc JOIN priors pr ON sc.cls = pr.label CROSS JOIN total t
-),
-best AS (
-  SELECT model, doc_id, cls,
-         ROW_NUMBER() OVER (PARTITION BY model, doc_id
-                            ORDER BY lp DESC, cls) AS r
-  FROM post
-),
-preds AS (SELECT model, doc_id, cls AS pred FROM best WHERE r = 1),
-"""
-
 _Q39_ORACLE = _NB_PIPELINE_CTES + """correct AS (
   SELECT CASE WHEN p.model = 'BERT' THEN p.doc_id
               ELSE p.doc_id + (SELECT n FROM n_docs) END AS seq_id,
@@ -378,67 +224,21 @@ seq AS MATERIALIZED (
          1.0 - accuracy AS error, accuracy, stream
   FROM buckets
 ),
-scan AS (
-  SELECT 0::BIGINT AS rn, CAST(NULL AS BIGINT) AS seq_id,
-         CAST(NULL AS VARCHAR) AS flag,
-         1::BIGINT AS n, 1.0::DOUBLE AS p,
-         'infinity'::DOUBLE AS psmin, 'infinity'::DOUBLE AS pmin,
-         'infinity'::DOUBLE AS smin, FALSE AS in_change
-  UNION ALL
-  SELECT rn, seq_id,
-         CASE WHEN n1 < 30 THEN 'N'
-              WHEN p1 + s1 > pmin1 + 3.0 * smin1 THEN 'D'
-              WHEN p1 + s1 > pmin1 + 2.0 * smin1 THEN 'W'
-              ELSE 'N' END AS flag,
-         n1 AS n, p1 AS p, psmin1 AS psmin, pmin1 AS pmin, smin1 AS smin,
-         (n1 >= 30 AND p1 + s1 > pmin1 + 3.0 * smin1) AS in_change
-  FROM (
-    SELECT rn, seq_id, n1, p1, s1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN p1 + s1 ELSE psmin0 END AS psmin1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN p1 ELSE pmin0 END AS pmin1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN s1 ELSE smin0 END AS smin1
-    FROM (
-      SELECT rn, seq_id, n0 + 1 AS n1, p1,
-             SQRT(GREATEST(p1 * (1.0 - p1), 0.0) / n0) AS s1,
-             psmin0, pmin0, smin0
-      FROM (
-        SELECT scan.rn + 1 AS rn, seq.seq_id,
-               CASE WHEN scan.in_change THEN 1 ELSE scan.n END AS n0,
-               (CASE WHEN scan.in_change THEN 1.0 ELSE scan.p END)
-                 + (seq.error
-                    - (CASE WHEN scan.in_change THEN 1.0 ELSE scan.p END))
-                   / (CASE WHEN scan.in_change THEN 1 ELSE scan.n END) AS p1,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.psmin END AS psmin0,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.pmin END AS pmin0,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.smin END AS smin0
-        FROM scan JOIN seq ON seq.rn = scan.rn + 1
-      )
-    )
-  )
-)
-SELECT sq.seq_id, sq.stream,
+""" + _ddm_scan_cte(False) + """SELECT sq.seq_id, sq.stream,
        FLOOR(sq.accuracy * 1000000.0 + 0.5) / 1000000.0 AS accuracy,
        sc.flag
 FROM seq sq JOIN scan sc ON sq.seq_id = sc.seq_id
 """
 
 
-@query("q39_abrupt_drift_experiment", oracle=_Q39_ORACLE)
-def q39(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _labeled_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``documents`` as (doc_id, text, label), the label being the
+    document's language dense-coded IN-PLAN: the tiny distinct-lang set
+    is ranked and broadcast-joined back — the coding sorted(collect())
+    would give, with no driver-side job."""
     from pyspark.sql import Window
 
-    from ..pipelines import abrupt_drift_experiment
-
     docs = load_table(spark, sf_dir, "documents")
-    # language as the class label, dense-coded deterministically IN-PLAN:
-    # rank the tiny distinct-lang set and broadcast-join it back — same
-    # coding as sorted(collect()) but no driver-side job (VERDICT r2 #10)
     lang_codes = (
         docs.select("lang")
         .distinct()
@@ -447,10 +247,18 @@ def q39(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.dense_rank().over(Window.orderBy("lang")) - 1).cast("int"),
         )
     )
-    labeled = docs.join(F.broadcast(lang_codes), "lang").select(
+    return docs.join(F.broadcast(lang_codes), "lang").select(
         "doc_id", "text", "label"
     )
-    return abrupt_drift_experiment(labeled, batch_size=32)
+
+
+@query("q39_abrupt_drift_experiment", oracle=_Q39_ORACLE)
+def q39(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..pipelines import abrupt_drift_experiment
+
+    return abrupt_drift_experiment(
+        _labeled_documents(spark, sf_dir), batch_size=32
+    )
 
 
 # --------------------------------------------------------------------------
@@ -557,14 +365,7 @@ SELECT seq_id, error, flag FROM scan WHERE rn >= 1
 
 @query(
     "x57_page_hinkley",
-    oracle=ph_scan_oracle(
-        """
-    SELECT CAST(FLOOR(event_id / 32) AS BIGINT) AS bucket,
-           AVG(CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END) AS error
-    FROM events
-    GROUP BY bucket
-"""
-    ),
+    oracle=ph_scan_oracle(_EVENTS_ERROR_SQL),
 )
 def x57(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page-Hinkley flags over the same per-batch error series q25 feeds
@@ -574,22 +375,10 @@ def x57(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential scan is confined to one detector key's (tiny) bucket
     series; fleets of detectors parallelize across keys."""
     from ..operators.ph import detect_drift_ph
-    from ..operators.windows import count_window_agg
 
-    ev = load_table(spark, sf_dir, "events")
-    per_batch = count_window_agg(
-        ev,
-        seq_col="event_id",
-        batch_size=32,
-        aggs=[
-            F.avg((F.col("event_type") == "error").cast("int")).alias("error")
-        ],
-    ).select(
-        F.lit("events").alias("detector_id"),
-        F.col("bucket").cast("long").alias("seq_id"),
-        "error",
+    return detect_drift_ph(_events_error_series(spark, sf_dir)).select(
+        "seq_id", "error", "flag"
     )
-    return detect_drift_ph(per_batch).select("seq_id", "error", "flag")
 
 
 def ph_scan_oracle_keyed(

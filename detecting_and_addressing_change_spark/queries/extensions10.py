@@ -7,9 +7,7 @@ production lifecycle of the x04 near-dup machinery on a growing corpus.
 
 from __future__ import annotations
 
-import atexit
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,38 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import portable_round
 from ..sources.tables import load_table
 from .extensions import _minhash_guarded_edges_oracle, _minhash_oracle
-from .registry import query
-
-
-_SCRATCH_DIRS: list[str] = []
-
-
-def _sweep_scratch_dirs() -> None:
-    while _SCRATCH_DIRS:
-        shutil.rmtree(_SCRATCH_DIRS.pop(), ignore_errors=True)
-
-
-atexit.register(_sweep_scratch_dirs)
-
-
-def _scratch_index_dir(spark: SparkSession, prefix: str) -> str:
-    """Fresh scratch dir for a query-local index build. Each invocation
-    gets its OWN empty dir (append semantics would double rows on reuse),
-    named with this session's Spark application id, and NOTHING is swept
-    at invocation time — cleanup happens at process exit (atexit). The
-    previous design rmtree-swept ``{prefix}*`` on every call (ADVICE r6),
-    which deleted the live index out from under (a) a concurrent
-    session's lazy reader — parallel bench/correctness runs, pytest-xdist
-    — and (b) this session's own earlier still-lazy DataFrame when the
-    query was constructed twice before executing the first. With
-    per-invocation dirs and exit-time sweep, both are safe; within-process
-    accumulation is bounded (a handful of small signature tables per
-    run), and dirs leaked by a crashed process fall to the OS /tmp
-    lifecycle, same as Spark's own scratch dirs."""
-    app_id = spark.sparkContext.applicationId.replace("-", "_")
-    d = tempfile.mkdtemp(prefix=f"{prefix}{app_id}_")
-    _SCRATCH_DIRS.append(d)
-    return d
+from .registry import query, scratch_index_dir, session_fixture
 
 
 # --------------------------------------------------------------------------
@@ -64,21 +31,16 @@ def _scratch_index_dir(spark: SparkSession, prefix: str) -> str:
 # fixture read-only; x76 clones it (driver-side copytree of the tiny
 # docs/sigs tables) before appending, so the fixture itself stays the
 # pristine base state whatever the run order.
-_MINHASH_BASE_FIXTURE: dict = {}
-
-
 def _minhash_base_index(spark: SparkSession, sf_dir: str) -> str:
     from ..operators.minhash_index import build_minhash_index
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MINHASH_BASE_FIXTURE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    path = _scratch_index_dir(spark, "mhbase_")
-    build_minhash_index(docs.filter(F.col("doc_id") % 5 != 4), path)
-    _MINHASH_BASE_FIXTURE[key] = path
-    return path
+    def build() -> str:
+        docs = load_table(spark, sf_dir, "documents")
+        path = scratch_index_dir(spark, "mhbase_")
+        build_minhash_index(docs.filter(F.col("doc_id") % 5 != 4), path)
+        return path
+
+    return session_fixture(spark, sf_dir, "minhash_base", build)
 
 
 @query(
@@ -107,7 +69,7 @@ def x76(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _minhash_base_index(spark, sf_dir)
     # clone the shared base fixture before mutating it: the append below
     # must not turn x79's pristine-base probe into a post-append probe
-    path = _scratch_index_dir(spark, "mhidx_x76_")
+    path = scratch_index_dir(spark, "mhidx_x76_")
     shutil.rmtree(path)
     shutil.copytree(base, path)
     append_to_minhash_index(docs.filter(F.col("doc_id") % 5 == 4), path)

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round, portable_round_sql
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, scratch_index_dir, session_fixture
 
 # --------------------------------------------------------------------------
 # X90 — adaptive similarity-join routing: the pre-flight exact
@@ -427,81 +427,33 @@ def x93(spark: SparkSession, sf_dir: str) -> DataFrame:
 # content is deterministic so run order cannot change either result, and
 # x95's audit now covers the POST-APPEND index, which is the state the
 # refit monitor actually watches in production.
-_IVF_LIFECYCLE_FIXTURE: dict = {}
-
-
 def _ivf_lifecycle_index(spark: SparkSession, sf_dir: str):
     """Build-or-reuse the shared x94/x95 index state. Returns
     (path, centroids)."""
     from ..operators.ivf_index import append_to_ivf_index, build_ivf_index
     from .extensions8 import N_CENTROIDS, N_ITER
-    from .extensions10 import _scratch_index_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_LIFECYCLE_FIXTURE.get(key)
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _scratch_index_dir(spark, "ivf9x_")
-    cents = build_ivf_index(
-        emb.filter(F.col("vec_id") % 10 != 9),
-        path,
-        n_centroids=N_CENTROIDS,
-        n_iter=N_ITER,
-    )
-    append_to_ivf_index(
-        emb.filter(F.col("vec_id") % 10 == 9), path, centroids=cents
-    )
-    _IVF_LIFECYCLE_FIXTURE[key] = (path, cents)
-    return path, cents
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings")
+        path = scratch_index_dir(spark, "ivf9x_")
+        cents = build_ivf_index(
+            emb.filter(F.col("vec_id") % 10 != 9),
+            path,
+            n_centroids=N_CENTROIDS,
+            n_iter=N_ITER,
+        )
+        append_to_ivf_index(
+            emb.filter(F.col("vec_id") % 10 == 9), path, centroids=cents
+        )
+        return path, cents
+
+    return session_fixture(spark, sf_dir, "ivf_lifecycle", build)
 
 
 def _x94_oracle() -> str:
-    from .extensions8 import N_CENTROIDS, N_ITER, _kmeans_ctes
+    from .extensions8 import _IVF_TOP3, _ivf_ranked_ctes
 
-    return f"""
-    WITH {_kmeans_ctes(N_CENTROIDS, N_ITER, fit_where="WHERE vec_id % 10 <> 9")},
-    q AS (
-      SELECT vec_id AS query_id, cent_id AS cell FROM (
-        SELECT vec_id, cent_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY vec_id ORDER BY dist, cent_id) AS r
-        FROM dF WHERE vec_id BETWEEN 100 AND 109) t
-      WHERE r <= 2
-    ),
-    cand AS (
-      SELECT DISTINCT q.query_id, a.vec_id AS cand_id
-      FROM q JOIN aF a ON q.cell = a.cell AND a.vec_id <> q.query_id
-    ),
-    ex AS (
-      SELECT vec_id, GENERATE_SUBSCRIPTS(emb, 1) AS d, UNNEST(emb) AS v
-      FROM (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)
-    ),
-    norms AS (SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM ex GROUP BY vec_id),
-    dots AS (
-      SELECT cand.query_id, cand.cand_id, SUM(a.v * b.v) AS dot
-      FROM cand
-      JOIN ex a ON a.vec_id = cand.query_id
-      JOIN ex b ON b.vec_id = cand.cand_id AND a.d = b.d
-      GROUP BY cand.query_id, cand.cand_id
-    ),
-    scored AS (
-      SELECT query_id, cand_id, dot / (nq.nrm * nc.nrm) AS cos_raw
-      FROM dots
-      JOIN norms nq ON query_id = nq.vec_id
-      JOIN norms nc ON cand_id = nc.vec_id
-    ),
-    ranked AS (
-      SELECT query_id, cand_id, cos_raw,
-             ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY cos_raw DESC, cand_id) AS rnk
-      FROM scored
-    )
-    SELECT query_id, cand_id,
-           FLOOR(cos_raw * 10000.0 + 0.5) / 10000.0 AS cosine,
-           CAST(rnk AS INT) AS rnk
-    FROM ranked WHERE rnk <= 3
-"""
+    return _ivf_ranked_ctes(100, fit_where="WHERE vec_id % 10 <> 9") + _IVF_TOP3
 
 
 @query("x94_ivf_index_lifecycle", oracle=_x94_oracle())

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, scratch_index_dir, session_fixture
 
 
 # --------------------------------------------------------------------------
@@ -210,7 +210,6 @@ def x98(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import quality_score_col
     from ..operators.minhash_index import init_minhash_index
     from ..streaming.curation_stream import curate_batch, curated_corpus
-    from .extensions10 import _scratch_index_dir
 
     base = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base_max = int(base.agg(F.max("doc_id")).collect()[0][0])
@@ -222,7 +221,7 @@ def x98(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + F.lit(base_max + 1)).alias("doc_id"), "text"
     )
     docs = base.unionByName(clones)
-    tmp = _scratch_index_dir(spark, "cur98_")
+    tmp = scratch_index_dir(spark, "cur98_")
     index, out = f"{tmp}/idx", f"{tmp}/out"
     init_minhash_index(spark, index)
 
@@ -336,7 +335,6 @@ def x99(spark: SparkSession, sf_dir: str) -> DataFrame:
     state from disk). Returns the snapshot fingerprint + verdicts."""
     from ..operators.upsert import apply_changelog
     from ..streaming.upsert_stream import ChangelogSnapshot
-    from .extensions10 import _scratch_index_dir
 
     orders = load_table(spark, sf_dir, "orders")
 
@@ -355,7 +353,7 @@ def x99(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v3 = slice_v(3, F.lit(0.0), F.col("o_orderkey") % 17 == 0)
 
-    state = f"{_scratch_index_dir(spark, 'cdc99_')}/state"
+    state = f"{scratch_index_dir(spark, 'cdc99_')}/state"
     snap = ChangelogSnapshot(spark, state, ["k"])
     snap.process_batch(v1, 0)
     snap.process_batch(v2, 1)
@@ -452,35 +450,13 @@ _X100_TAIL_ERR = 0.9
 # checkpoint dir, sink and batch twin — the staged input is static and
 # read-only, so two concurrent streaming queries consuming it cannot
 # interact, and drain order cannot change either result.
-_ERROR_SERIES_STAGING: dict = {}
-
-
-def _error_series_staging(spark: SparkSession, sf_dir: str):
-    """Build-or-reuse the staged error-series replay layout shared by
-    the streaming detector twins. Returns (staged_path, per_batch_df)."""
-    from ..operators.windows import count_window_agg
+def _stage_error_series(spark: SparkSession, sf_dir: str):
+    """Stage the error-series replay layout the streaming detector twins
+    read. Returns (staged_path, per_batch_df)."""
     from ..streaming.replay import stage_replay_files
-    from .extensions10 import _scratch_index_dir
+    from .drift import _events_error_series
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ERROR_SERIES_STAGING.get(key)
-    if hit is not None:
-        return hit
-    ev = load_table(spark, sf_dir, "events")
-    per_batch = count_window_agg(
-        ev,
-        seq_col="event_id",
-        batch_size=32,
-        aggs=[
-            F.avg((F.col("event_type") == "error").cast("int")).alias(
-                "error"
-            )
-        ],
-    ).select(
-        F.lit("events").alias("detector_id"),
-        F.col("bucket").cast("long").alias("seq_id"),
-        F.col("error").cast("double").alias("error"),
-    )
+    per_batch = _events_error_series(spark, sf_dir)
     tail = spark.range(_X100_TAIL_N).select(
         F.lit("events").alias("detector_id"),
         (F.lit(_X100_TAIL_SEQ0) + F.col("id")).cast("long").alias("seq_id"),
@@ -494,7 +470,7 @@ def _error_series_staging(spark: SparkSession, sf_dir: str):
     # entry itself (a ~n_buckets-row two-column table).
     per_batch = per_batch.unionByName(tail).persist()
 
-    tmp = _scratch_index_dir(spark, "ddmseries_")
+    tmp = scratch_index_dir(spark, "ddmseries_")
     staged = f"{tmp}/staged"
     # 3 micro-batches at EVERY scale — 2 data buckets plus the elevated
     # tail (seq 10M), which always lands in its own final bucket: what
@@ -516,19 +492,13 @@ def _error_series_staging(spark: SparkSession, sf_dir: str):
     n_rows = per_batch.count()
     batch_size = max(32, -(-n_rows // 2))
     stage_replay_files(per_batch, "seq_id", staged, batch_size=batch_size)
-    _ERROR_SERIES_STAGING[key] = (staged, per_batch)
     return staged, per_batch
 
 
 def _x100_oracle() -> str:
-    from .drift import ddm_scan_oracle, ph_scan_oracle
+    from .drift import _EVENTS_ERROR_SQL, ddm_scan_oracle, ph_scan_oracle
 
-    body = f"""
-    SELECT CAST(FLOOR(event_id / 32) AS BIGINT) AS bucket,
-           AVG(CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END) AS error
-    FROM events
-    GROUP BY bucket
-    UNION ALL
+    body = _EVENTS_ERROR_SQL + f"""    UNION ALL
     SELECT {_X100_TAIL_SEQ0} + i AS bucket, {_X100_TAIL_ERR} AS error
     FROM generate_series(0, {_X100_TAIL_N - 1}) AS t(i)
 """
@@ -575,13 +545,18 @@ def x100(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ddm_stream import detect_drift_stream
     from ..streaming.ph_stream import detect_drift_ph_stream
     from ..streaming.replay import (
+        drain_all,
         read_replay_stream,
         scoped_state_partitions,
     )
-    from .extensions10 import _scratch_index_dir
 
-    staged, per_batch = _error_series_staging(spark, sf_dir)
-    tmp = _scratch_index_dir(spark, "det100_")
+    staged, per_batch = session_fixture(
+        spark,
+        sf_dir,
+        "error_series",
+        lambda: _stage_error_series(spark, sf_dir),
+    )
+    tmp = scratch_index_dir(spark, "det100_")
     schema = "detector_id string, seq_id long, error double"
     base = os.path.basename(tmp)  # unique per invocation
     sinks = {"ddm": f"x100d_{base}", "ph": f"x100p_{base}"}
@@ -608,15 +583,7 @@ def x100(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-        for kind, q in queries.items():
-            if not q.awaitTermination(300):
-                for qq in queries.values():
-                    qq.stop()
-                raise AssertionError(
-                    f"x100 {kind} replay did not drain in 300s"
-                )
-            if q.exception() is not None:
-                raise q.exception()
+        drain_all(queries, "x100 replay")
 
     # the streamed==batch mismatch counts stay IN-PLAN (1-row aggs
     # cross-joined into the verdict row) instead of two eager .count()
@@ -735,14 +702,13 @@ def x101(spark: SparkSession, sf_dir: str) -> DataFrame:
         curated_corpus,
         takedown_from_curation,
     )
-    from .extensions10 import _scratch_index_dir
 
     sample = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 0)
         .select("doc_id", "text")
     )
-    tmp = _scratch_index_dir(spark, "td101_")
+    tmp = scratch_index_dir(spark, "td101_")
     index, out = f"{tmp}/idx", f"{tmp}/out"
     init_minhash_index(spark, index)
     mid = int(sample.agg(F.max("doc_id")).collect()[0][0]) // 2
@@ -861,14 +827,11 @@ def x102(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_minhash_index,
         minhash_index_edges,
     )
-    from .extensions10 import (
-        _minhash_base_index,
-        _scratch_index_dir,
-    )
+    from .extensions10 import _minhash_base_index
 
     docs = load_table(spark, sf_dir, "documents")
     base = _minhash_base_index(spark, sf_dir)
-    path = _scratch_index_dir(spark, "mhidx_x102_")
+    path = scratch_index_dir(spark, "mhidx_x102_")
     _sh.rmtree(path)
     _sh.copytree(base, path)
     append_to_minhash_index(docs.filter(F.col("doc_id") % 5 == 4), path)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, scratch_index_dir
 
 
 # --------------------------------------------------------------------------
@@ -72,7 +72,7 @@ _X103_BATCH = 32
 
 
 def _x103_oracle() -> str:
-    from .drift import _NB_PIPELINE_CTES
+    from .fragments import _NB_PIPELINE_CTES
 
     cut = _X103_FT_DOCS
     return _NB_PIPELINE_CTES + f"""ftset AS (
@@ -160,24 +160,12 @@ def x103(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine_tune session over B's first 4 batches), plus the exact
     held-out correct counts both ways and the improvement boolean —
     all recomputed by the oracle, nothing pinned."""
-    from pyspark.sql import Window
-
     from ..operators.nb import nb_collect_stats, nb_fit, nb_predict
     from ..pipelines import pooled_features_models
     from ..streaming.prequential import PrequentialNB, fine_tune
+    from .drift import _labeled_documents
 
-    docs = load_table(spark, sf_dir, "documents")
-    lang_codes = (
-        docs.select("lang")
-        .distinct()
-        .withColumn(
-            "label",
-            (F.dense_rank().over(Window.orderBy("lang")) - 1).cast("int"),
-        )
-    )
-    labeled = docs.join(F.broadcast(lang_codes), "lang").select(
-        "doc_id", "text", "label"
-    )
+    labeled = _labeled_documents(spark, sf_dir)
     labels = labeled.select("doc_id", "label")
     pooled = pooled_features_models(
         labeled, ("BERT", "SCIBERT"), dim=8
@@ -312,46 +300,9 @@ def x103(spark: SparkSession, sf_dir: str) -> DataFrame:
 # documented at the operator and plan-asserted in tests/test_ivf_index).
 # --------------------------------------------------------------------------
 def _x105_oracle() -> str:
-    from .extensions8 import N_CENTROIDS, N_ITER, _kmeans_ctes
+    from .extensions8 import _ivf_ranked_ctes
 
-    return f"""
-    WITH {_kmeans_ctes(N_CENTROIDS, N_ITER, fit_where="WHERE vec_id % 10 <> 9")},
-    q AS (
-      SELECT vec_id AS query_id, cent_id AS cell FROM (
-        SELECT vec_id, cent_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY vec_id ORDER BY dist, cent_id) AS r
-        FROM dF WHERE vec_id BETWEEN 200 AND 209) t
-      WHERE r <= 2
-    ),
-    cand AS (
-      SELECT DISTINCT q.query_id, a.vec_id AS cand_id
-      FROM q JOIN aF a ON q.cell = a.cell AND a.vec_id <> q.query_id
-    ),
-    ex AS (
-      SELECT vec_id, GENERATE_SUBSCRIPTS(emb, 1) AS d, UNNEST(emb) AS v
-      FROM (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)
-    ),
-    norms AS (SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM ex GROUP BY vec_id),
-    dots AS (
-      SELECT cand.query_id, cand.cand_id, SUM(a.v * b.v) AS dot
-      FROM cand
-      JOIN ex a ON a.vec_id = cand.query_id
-      JOIN ex b ON b.vec_id = cand.cand_id AND a.d = b.d
-      GROUP BY cand.query_id, cand.cand_id
-    ),
-    scored AS (
-      SELECT query_id, cand_id, dot / (nq.nrm * nc.nrm) AS cos_raw
-      FROM dots
-      JOIN norms nq ON query_id = nq.vec_id
-      JOIN norms nc ON cand_id = nc.vec_id
-    ),
-    ranked AS (
-      SELECT query_id, cand_id, cos_raw,
-             ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY cos_raw DESC, cand_id) AS rnk
-      FROM scored
-    ),
+    return _ivf_ranked_ctes(200, fit_where="WHERE vec_id % 10 <> 9") + """,
     top AS (
       SELECT query_id, cand_id,
              FLOOR(cos_raw * 10000.0 + 0.5) / 10000.0 AS cosine
@@ -378,12 +329,11 @@ def x105(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _sh
 
     from ..operators.ivf_index import compact_ivf_index, ivf_index_search
-    from .extensions10 import _scratch_index_dir
     from .extensions12 import _ivf_lifecycle_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     base, cents = _ivf_lifecycle_index(spark, sf_dir)
-    path = _scratch_index_dir(spark, "ivf_x105_")
+    path = scratch_index_dir(spark, "ivf_x105_")
     _sh.rmtree(path)
     _sh.copytree(base, path)
 

@@ -21,11 +21,14 @@ are the genuinely non-SQL-expressible part; the x106 shape).
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, scratch_index_dir, session_fixture
 from ..sources.tables import read_parquet_cached_schema
 
 
@@ -350,35 +353,29 @@ _X109_STRIDE = 12
 _X109_ID_BASE = 1 << 20
 _X109_SHARD_MOD = 4  # index the doc_id % 4 == 0 corpus shard
 
-_RAG_INDEX_FIXTURE: dict = {}
-
-
 def _rag_text_index(spark: SparkSession, sf_dir: str) -> str:
     """Build-or-reuse the session's retrieval index over the documents
     table (the x94/x95 shared-fixture pattern: content is deterministic,
     whichever caller runs first builds)."""
     from ..retrieval import build_text_index
-    from .extensions10 import _scratch_index_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _RAG_INDEX_FIXTURE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % _X109_SHARD_MOD == 0
-    )
-    path = _scratch_index_dir(spark, "rag_x109_")
-    build_text_index(
-        docs,
-        path,
-        dim=8,
-        model="BERT",
-        size=_X109_CHUNK,
-        stride=_X109_STRIDE,
-        n_centroids=_X109_CENTROIDS,
-    )
-    _RAG_INDEX_FIXTURE[key] = path
-    return path
+    def build() -> str:
+        docs = load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % _X109_SHARD_MOD == 0
+        )
+        path = scratch_index_dir(spark, "rag_x109_")
+        build_text_index(
+            docs,
+            path,
+            dim=8,
+            model="BERT",
+            size=_X109_CHUNK,
+            stride=_X109_STRIDE,
+            n_centroids=_X109_CENTROIDS,
+        )
+        return path
+
+    return session_fixture(spark, sf_dir, "rag_x109", build)
 
 
 def _x109_oracle() -> str:
@@ -631,9 +628,12 @@ _X110_CASE_T = """
 """
 
 
-def _x110_oracle() -> str:
+def _x110_shape_ctes() -> tuple[str, str, str, str]:
+    """The closed forms x110 and x113 share, as CTE text: the window
+    replay rows, then the emission sets of the window, dedup and join
+    shapes. Each oracle puts its own comments between them."""
     b, w = _X110_BASE, _X110_WIN
-    return f"""
+    rows = f"""
     WITH w_rows AS (
       SELECT event_id, event_type,
              {_X110_CASE_T} AS t,
@@ -645,11 +645,8 @@ def _x110_oracle() -> str:
                   ELSE 0 END AS batch
       FROM events
     ),
-    -- window_agg shape: the late batch lands at watermark
-    -- 1240 - {_X110_DELAY} = 940: dropped iff t < 900 (⇔ window end <=
-    -- 940). The final watermark is 2440 - {_X110_DELAY} = 2140: emitted
-    -- windows end <= 2140 ⇔ start <= 2080.
-    w_accepted AS (
+"""
+    window = f"""    w_accepted AS (
       SELECT * FROM w_rows WHERE batch <> 3 OR t >= 900
     ),
     w_emitted AS (
@@ -662,9 +659,8 @@ def _x110_oracle() -> str:
       SELECT win_start, event_type, COUNT(*) AS n
       FROM w_emitted GROUP BY win_start, event_type
     ),
-    -- dedup shape (the x111 closed form): every key's first occurrence
-    -- plus the beyond-horizon redeliveries bounded state cannot remember
-    d_e AS (
+"""
+    dedup = """    d_e AS (
       SELECT event_id AS k, event_id % 100 AS m100, event_id % 20 AS m20
       FROM events
     ),
@@ -676,9 +672,8 @@ def _x110_oracle() -> str:
       UNION ALL
       SELECT k, 1900 FROM d_e WHERE m100 = 43
     ),
-    -- join shape (the x112 closed form): in-batch pairs + the
-    -- cross-batch pair served from buffered state
-    j_e AS (
+"""
+    join = """    j_e AS (
       SELECT event_id AS k, event_id % 100 AS m100,
              event_id % 20 AS m20, event_id % 10 AS m10
       FROM events
@@ -690,7 +685,29 @@ def _x110_oracle() -> str:
       UNION ALL
       SELECT k, 830, 860 FROM j_e WHERE m100 = 83
     ),
-    fp AS (
+"""
+    return rows, window, dedup, join
+
+
+def _x110_oracle() -> str:
+    rows, window, dedup, join = _x110_shape_ctes()
+    return (
+        rows
+        + f"""    -- window_agg shape: the late batch lands at watermark
+    -- 1240 - {_X110_DELAY} = 940: dropped iff t < 900 (⇔ window end <=
+    -- 940). The final watermark is 2440 - {_X110_DELAY} = 2140: emitted
+    -- windows end <= 2140 ⇔ start <= 2080.
+"""
+        + window
+        + """    -- dedup shape (the x111 closed form): every key's first occurrence
+    -- plus the beyond-horizon redeliveries bounded state cannot remember
+"""
+        + dedup
+        + """    -- join shape (the x112 closed form): in-batch pairs + the
+    -- cross-batch pair served from buffered state
+"""
+        + join
+        + """    fp AS (
       SELECT 'window_agg' AS state_shape,
              CAST(COUNT(*) AS BIGINT) AS n_rows,
              CAST(SUM(win_start) AS BIGINT) AS fp_key_sum,
@@ -714,43 +731,30 @@ def _x110_oracle() -> str:
            TRUE AS late_discipline_ok
     FROM fp
 """
-
-
-def _await_all_x110(started: dict) -> None:
-    """Drain the concurrently-started availableNow queries; a timeout or
-    error in any of them stops the rest and raises."""
-    for shape, q in started.items():
-        if not q.awaitTermination(300):
-            for qq in started.values():
-                qq.stop()
-            raise AssertionError(
-                f"x110 {shape} replay did not drain in 300s"
-            )
-        if q.exception() is not None:
-            raise q.exception()
-
-
-@query("x110_stateful_stream_verdicts", oracle=_x110_oracle())
-def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All three built-in stateful operators driven UNINTERRUPTED
-    through real watermarked streaming queries drained concurrently off
-    their staged replays (the r17 fold of x110/x111/x112 — every
-    synthesis, precondition and raise-guard preserved; see the three
-    block comments): event-time windowed aggregation with late
-    drop/accept and open windows withheld; dropDuplicatesWithinWatermark
-    with both horizon halves visible; the two-sided-watermark
-    stream-stream join with a cross-batch pair served from buffered
-    state and a late leg yielding nothing. One oracle-recomputed
-    fingerprint row per shape."""
-    import os
-
-    from ..streaming.replay import (
-        read_replay_stream,
-        scoped_state_partitions,
-        stage_replay_files,
     )
-    from .extensions10 import _scratch_index_dir
 
+
+class _Replays(NamedTuple):
+    """The three checkpointed replays x110 and x113 stream, with the
+    census figures their verdicts compare against."""
+
+    w_rows: DataFrame  # window_agg rows, event offset kept as __t
+    n_accepted_late: int  # late rows inside the watermark
+    d_rows: DataFrame  # dedup_map rows
+    d_legs: dict  # dedup rows per replay batch
+    j_left: DataFrame  # join_buffer left source
+    j_right: DataFrame  # join_buffer right source
+    n_cross: int  # left rows whose partner arrives a batch later
+    n_a: int  # left rows paired within their own batch
+
+
+def _replay_syntheses(spark: SparkSession, sf_dir: str, qid: str) -> _Replays:
+    """Synthesize and checkpoint the three replays (see the x110, x111
+    and x112 block comments for each construction), then assert their
+    non-vacuousness preconditions BEFORE any streaming: the verdicts are
+    oracle-pinned TRUE, so a testdata shape that empties a leg must fail
+    here, naming ``qid``. One grouped agg per replay serves its leg
+    census and its split counts."""
     # ---------------- window_agg synthesis (the original x110)
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     e = F.col("event_id")
@@ -775,13 +779,6 @@ def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         t.alias("__t"),
     ).localCheckpoint(eager=True)
-
-    # non-vacuousness preconditions, asserted loudly BEFORE streaming:
-    # the verdicts are oracle-pinned TRUE, so a testdata shape that
-    # empties any leg must fail here at generation time. ONE grouped
-    # agg serves the leg census AND the late split (r18, guide §1.2 —
-    # was a groupBy collect plus a separate filter count over the same
-    # checkpointed rows).
     w_pre = w_rows.groupBy("replay_batch").agg(
         F.count("*").alias("n"),
         F.sum((F.col("__t") < 900).cast("long")).alias("n_lt900"),
@@ -793,11 +790,11 @@ def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_accepted_late = w_legs.get(3, 0) - n_dropped_late
     if not all(w_legs.get(i, 0) for i in (0, 1, 2, 4, 5)):
         raise AssertionError(
-            f"x110 fixture drift: empty window replay leg {w_legs}"
+            f"{qid} fixture drift: empty window-agg replay leg {w_legs}"
         )
     if not (n_dropped_late > 0 and n_accepted_late > 0):
         raise AssertionError(
-            f"x110 fixture drift: late split dropped={n_dropped_late} "
+            f"{qid} fixture drift: late split dropped={n_dropped_late} "
             f"accepted={n_accepted_late} — a leg is vacuous"
         )
 
@@ -830,7 +827,7 @@ def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("replay_batch").cast("long").alias("replay_batch"),
             "k",
             F.timestamp_seconds(
-                F.lit(_X111_BASE) + F.col("t")
+                F.lit(_X110_BASE) + F.col("t")
             ).alias("ts"),
         )
         .localCheckpoint(eager=True)
@@ -844,20 +841,18 @@ def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     if not all(d_legs.get(i, 0) for i in range(5)):
         raise AssertionError(
-            f"x110 fixture drift: empty dedup replay leg {d_legs}"
+            f"{qid} fixture drift: empty dedup replay leg {d_legs}"
         )
 
     # ---------------- join synthesis (the original x112)
-    is_a = (
-        ~m20.isin(9, 19) & (m10 != 7) & ~m100.isin(11, 31, 51, 83)
-    )
+    is_a = ~m20.isin(9, 19) & (m10 != 7) & ~m100.isin(11, 31, 51, 83)
 
     def leg(cond, b, t_expr):
         return ev_k.filter(cond).select(
             F.lit(b).cast("long").alias("replay_batch"),
             e.alias("k"),
             F.timestamp_seconds(
-                F.lit(_X112_BASE) + t_expr.cast("long")
+                F.lit(_X110_BASE) + t_expr.cast("long")
             ).alias("ts"),
         )
 
@@ -872,16 +867,13 @@ def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
         leg(is_a | (m10 == 7), 0, m100 * 10 + 30)
         .unionByName(
             leg(m20 == 19, 1, F.lit(2000) + (e % 5) * 10).unionByName(
-                leg(m100 == 83, 1, F.lit(860))
+                leg(m100 == 83, 1, F.lit(860))  # the cross-batch partner
             )
         )
         .unionByName(leg(m100 == 31, 2, F.lit(2040)))
         .unionByName(leg(m100 == 51, 3, F.lit(2040)))
         .localCheckpoint(eager=True)
     )
-    # ONE grouped agg per side serves the leg census and the cross/late
-    # counts (r18, guide §1.2 — was four separate jobs: two filter
-    # counts plus two distinct collects over the checkpointed legs)
     l_pre = j_left.groupBy("replay_batch").agg(
         F.count("*").alias("n"),
         F.sum((F.col("k") % 100 == 83).cast("long")).alias("n83"),
@@ -890,135 +882,167 @@ def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_late = sum(
         int(r["n"]) for r in l_pre if int(r["replay_batch"]) == 3
     )
-    if not (n_cross > 0 and n_late > 0):
+    n_a = (
+        sum(int(r["n"]) for r in l_pre if int(r["replay_batch"]) == 0)
+        - n_cross
+    )
+    if not (n_cross > 0 and n_late > 0 and n_a > 0):
         raise AssertionError(
-            f"x110 fixture drift: join cross-batch leg {n_cross}, late "
-            f"leg {n_late} — a verdict would be vacuous"
+            f"{qid} fixture drift: join cross leg {n_cross}, late leg "
+            f"{n_late}, in-batch leg {n_a} — a verdict would be vacuous"
         )
     r_pre = j_right.groupBy("replay_batch").count().collect()
     for rows, nm in ((l_pre, "left"), (r_pre, "right")):
         side_legs = sorted(int(r["replay_batch"]) for r in rows)
         if side_legs != [0, 1, 2, 3]:
             raise AssertionError(
-                f"x110 fixture drift: join {nm} legs "
+                f"{qid} fixture drift: join {nm} legs "
                 f"{side_legs} != 4 files"
             )
+    return _Replays(
+        w_rows, n_accepted_late, d_rows, d_legs, j_left, j_right, n_cross, n_a
+    )
+
+
+def _window_counts(stream: DataFrame) -> DataFrame:
+    """The window_agg operator: per-type counts over 60 s event-time
+    windows under the 300 s watermark."""
+    return (
+        stream.withWatermark("ts", f"{_X110_DELAY} seconds")
+        .groupBy(F.window("ts", f"{_X110_WIN} seconds"), "event_type")
+        .agg(F.count("*").alias("n"))
+        .select(
+            F.col("window.start").cast("long").alias("win_start"),
+            "event_type",
+            F.col("n").cast("long").alias("n"),
+        )
+    )
+
+
+def _dedup_within_horizon(stream: DataFrame) -> DataFrame:
+    """The dedup operator: bounded-state key dedup under the watermark."""
+    return (
+        stream.withWatermark("ts", f"{_X110_DELAY} seconds")
+        .dropDuplicatesWithinWatermark(["k"])
+        .select("k", (F.col("ts").cast("long") - _X110_BASE).alias("t"))
+    )
+
+
+def _band_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """The join operator: two-sided-watermark inner join on the key with
+    the right row 0-60 s after the left."""
+    ls = left.withWatermark("ts", f"{_X110_DELAY} seconds").select(
+        F.col("k").alias("lk"), F.col("ts").alias("lts")
+    )
+    rs = right.withWatermark("ts", f"{_X110_DELAY} seconds").select(
+        F.col("k").alias("rk"), F.col("ts").alias("rts")
+    )
+    return ls.join(
+        rs,
+        (F.col("lk") == F.col("rk"))
+        & (F.col("rts") >= F.col("lts"))
+        & (F.col("rts") <= F.col("lts") + F.expr("INTERVAL 60 SECONDS")),
+        "inner",
+    ).select(
+        F.col("lk").alias("k"),
+        (F.col("lts").cast("long") - _X110_BASE).alias("lt"),
+        (F.col("rts").cast("long") - _X110_BASE).alias("rt"),
+    )
+
+
+def _fingerprint_rows(shapes: dict, verdicts: tuple) -> DataFrame:
+    """One row per state shape (``name -> (sink, key column, value
+    sum)``): row count, key sum and value sum, all recomputed by the
+    oracle from scratch, then the raise-guarded ``verdicts`` pinned
+    TRUE."""
+    rows = [
+        sink.agg(
+            F.count("*").cast("long").alias("n_rows"),
+            F.sum(key).cast("long").alias("fp_key_sum"),
+            val.cast("long").alias("fp_val_sum"),
+        ).select(F.lit(name).alias("state_shape"), "*")
+        for name, (sink, key, val) in shapes.items()
+    ]
+    return reduce(DataFrame.unionByName, rows).select(
+        "*", *(F.lit(True).alias(v) for v in verdicts)
+    )
+
+
+@query("x110_stateful_stream_verdicts", oracle=_x110_oracle())
+def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All three built-in stateful operators driven UNINTERRUPTED
+    through real watermarked streaming queries drained concurrently off
+    their staged replays (the r17 fold of x110/x111/x112 — every
+    synthesis, precondition and raise-guard preserved; see the three
+    block comments): event-time windowed aggregation with late
+    drop/accept and open windows withheld; dropDuplicatesWithinWatermark
+    with both horizon halves visible; the two-sided-watermark
+    stream-stream join with a cross-batch pair served from buffered
+    state and a late leg yielding nothing. One oracle-recomputed
+    fingerprint row per shape."""
+    import os
+
+    from ..streaming.replay import (
+        drain_all,
+        read_replay_stream,
+        scoped_state_partitions,
+        stage_replay_files,
+    )
+
+    rp = _replay_syntheses(spark, sf_dir, "x110")
 
     # ---------------- stage everything, then start the three queries
     # CONCURRENTLY (separate staged dirs, checkpoints and memory sinks
     # over read-only inputs — they share nothing but the wall clock)
-    tmp = _scratch_index_dir(spark, "sfs110_")
+    tmp = scratch_index_dir(spark, "sfs110_")
     base = os.path.basename(tmp)
     w_staged, d_staged = f"{tmp}/w/staged", f"{tmp}/d/staged"
     l_staged, r_staged = f"{tmp}/j/left", f"{tmp}/j/right"
     stage_replay_files(
-        w_rows.drop("__t"), "replay_batch", w_staged, batch_size=1
+        rp.w_rows.drop("__t"), "replay_batch", w_staged, batch_size=1
     )
-    stage_replay_files(d_rows, "replay_batch", d_staged, batch_size=1)
-    stage_replay_files(j_left, "replay_batch", l_staged, batch_size=1)
-    stage_replay_files(j_right, "replay_batch", r_staged, batch_size=1)
+    stage_replay_files(rp.d_rows, "replay_batch", d_staged, batch_size=1)
+    stage_replay_files(rp.j_left, "replay_batch", l_staged, batch_size=1)
+    stage_replay_files(rp.j_right, "replay_batch", r_staged, batch_size=1)
     sinks = {
         "window_agg": f"x110w_{base}",
         "dedup_horizon": f"x110d_{base}",
         "stream_join": f"x110j_{base}",
     }
-
-    def start_window():
-        stream = read_replay_stream(
-            spark,
-            w_staged,
-            "replay_batch long, ts timestamp, event_type string",
-        )
-        return (
-            stream.withWatermark("ts", f"{_X110_DELAY} seconds")
-            .groupBy(F.window("ts", f"{_X110_WIN} seconds"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(
-                F.col("window.start").cast("long").alias("win_start"),
-                "event_type",
-                F.col("n").cast("long").alias("n"),
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sinks["window_agg"])
-            .option("checkpointLocation", f"{tmp}/w/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def start_dedup():
-        stream = read_replay_stream(
-            spark, d_staged, "replay_batch long, k long, ts timestamp"
-        )
-        return (
-            stream.withWatermark("ts", f"{_X111_DELAY} seconds")
-            .dropDuplicatesWithinWatermark(["k"])
-            .select(
-                "k", (F.col("ts").cast("long") - _X111_BASE).alias("t")
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sinks["dedup_horizon"])
-            .option("checkpointLocation", f"{tmp}/d/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def start_join():
-        schema = "replay_batch long, k long, ts timestamp"
-        ls = (
-            read_replay_stream(spark, l_staged, schema)
-            .withWatermark("ts", f"{_X112_DELAY} seconds")
-            .select(F.col("k").alias("lk"), F.col("ts").alias("lts"))
-        )
-        rs = (
-            read_replay_stream(spark, r_staged, schema)
-            .withWatermark("ts", f"{_X112_DELAY} seconds")
-            .select(F.col("k").alias("rk"), F.col("ts").alias("rts"))
-        )
-        return (
-            ls.join(
-                rs,
-                (F.col("lk") == F.col("rk"))
-                & (F.col("rts") >= F.col("lts"))
-                & (
-                    F.col("rts")
-                    <= F.col("lts") + F.expr("INTERVAL 60 SECONDS")
-                ),
-                "inner",
-            )
-            .select(
-                F.col("lk").alias("k"),
-                (F.col("lts").cast("long") - _X112_BASE).alias("lt"),
-                (F.col("rts").cast("long") - _X112_BASE).alias("rt"),
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sinks["stream_join"])
-            .option("checkpointLocation", f"{tmp}/j/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
+    w_schema = "replay_batch long, ts timestamp, event_type string"
+    key_schema = "replay_batch long, k long, ts timestamp"
 
     # scoped state partitions (streaming/replay.py): handfuls of state
     # keys through 32 state-store commits per batch was pure overhead;
     # the join commits PER SIDE per batch — the heaviest case
     with scoped_state_partitions(spark):
-        _await_all_x110(
+        outs = {
+            "window_agg": _window_counts(
+                read_replay_stream(spark, w_staged, w_schema)
+            ),
+            "dedup_horizon": _dedup_within_horizon(
+                read_replay_stream(spark, d_staged, key_schema)
+            ),
+            "stream_join": _band_join(
+                read_replay_stream(spark, l_staged, key_schema),
+                read_replay_stream(spark, r_staged, key_schema),
+            ),
+        }
+        drain_all(
             {
-                "window_agg": start_window(),
-                "dedup_horizon": start_dedup(),
-                "stream_join": start_join(),
-            }
+                shape: out.writeStream.outputMode("append")
+                .format("memory")
+                .queryName(sinks[shape])
+                .option("checkpointLocation", f"{tmp}/ckpt_{shape}")
+                .trigger(availableNow=True)
+                .start()
+                for shape, out in outs.items()
+            },
+            "x110 replay",
         )
-        w_final = spark.table(sinks["window_agg"]).localCheckpoint(
-            eager=True
-        )
-        d_final = spark.table(sinks["dedup_horizon"]).localCheckpoint(
-            eager=True
-        )
-        j_final = spark.table(sinks["stream_join"]).localCheckpoint(
-            eager=True
+        w_final, d_final, j_final = (
+            spark.table(sinks[shape]).localCheckpoint(eager=True)
+            for shape in outs
         )
 
     # ---------------- raise-guarded verdicts (the originals — same
@@ -1032,7 +1056,7 @@ def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.max("win_start"), F.lit(0)).alias("max_start"),
         )
         .crossJoin(
-            w_rows.filter(
+            rp.w_rows.filter(
                 ((F.col("replay_batch") != 3) | (F.col("__t") >= 900))
                 & (F.floor(F.col("__t") / _X110_WIN) * _X110_WIN <= 2080)
             ).agg(F.count("*").alias("expected_emitted"))
@@ -1087,16 +1111,16 @@ def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"redeliveries were re-emitted"
         )
     b_got = int(g["b_got"] or 0)
-    if b_got != d_legs[4]:
+    if b_got != rp.d_legs[4]:
         raise AssertionError(
-            f"x110 horizon regression: {b_got}/{d_legs[4]} beyond-horizon"
+            f"x110 horizon regression: {b_got}/{rp.d_legs[4]} beyond-horizon"
             f" redeliveries re-emitted"
         )
     # stream_join: cross-batch pair served from buffer, late leg empty
     got_cross = int(g["got_cross"] or 0)
-    if got_cross != n_cross:
+    if got_cross != rp.n_cross:
         raise AssertionError(
-            f"x110 buffering regression: {got_cross}/{n_cross} "
+            f"x110 buffering regression: {got_cross}/{rp.n_cross} "
             f"cross-batch pairs emitted"
         )
     got_late = int(g["got_late"] or 0)
@@ -1106,32 +1130,15 @@ def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"emitted"
         )
 
-    # ---------------- fingerprint rows (the x113-suite shape: counts
-    # and sums recomputed by the oracle from scratch, booleans
-    # raise-guarded above then pinned TRUE)
-    def _verdicts(row: DataFrame) -> DataFrame:
-        return row.select(
-            "*",
-            F.lit(True).alias("state_behavior_ok"),
-            F.lit(True).alias("late_discipline_ok"),
-        )
-
-    w_fp = w_final.agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.sum("win_start").cast("long").alias("fp_key_sum"),
-        F.sum("n").cast("long").alias("fp_val_sum"),
-    ).select(F.lit("window_agg").alias("state_shape"), "*")
-    d_fp = d_final.agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.sum("k").cast("long").alias("fp_key_sum"),
-        F.sum("t").cast("long").alias("fp_val_sum"),
-    ).select(F.lit("dedup_horizon").alias("state_shape"), "*")
-    j_fp = j_final.agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.sum("k").cast("long").alias("fp_key_sum"),
-        (F.sum("lt") + F.sum("rt")).cast("long").alias("fp_val_sum"),
-    ).select(F.lit("stream_join").alias("state_shape"), "*")
-    return _verdicts(w_fp.unionByName(d_fp).unionByName(j_fp))
+    # ---------------- fingerprint rows (the x113-suite shape)
+    return _fingerprint_rows(
+        {
+            "window_agg": (w_final, "win_start", F.sum("n")),
+            "dedup_horizon": (d_final, "k", F.sum("t")),
+            "stream_join": (j_final, "k", F.sum("lt") + F.sum("rt")),
+        },
+        ("state_behavior_ok", "late_discipline_ok"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1173,9 +1180,6 @@ def x110(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row in closed form; the two booleans are raise-guarded in-query.
 # Driver-gated, not benched (streaming floor, budget policy).
 # --------------------------------------------------------------------------
-_X111_BASE = 1_749_999_960
-_X111_DELAY = 300
-
 # X111 (folded into x110_stateful_stream_verdicts, round 17): the
 # standalone dropDuplicatesWithinWatermark horizon verdict (green
 # r13-r16) — synthesis, preconditions, raise-guards and closed-form
@@ -1222,14 +1226,10 @@ _X111_DELAY = 300
 # join emits nothing for them. Driver-gated, not benched (streaming
 # floor, budget policy).
 # --------------------------------------------------------------------------
-_X112_BASE = 1_749_999_960
-_X112_DELAY = 300
-
 # X112 (folded into x110_stateful_stream_verdicts, round 17): the
 # standalone two-sided-watermark stream-stream join verdict (green
 # r13-r16) — synthesis, preconditions, raise-guards and closed-form
-# pair arithmetic moved verbatim into the merged query above (the
-# construction is ALSO consumed inline by x113's kill/resume join
-# shape, extensions16). Its drain — the heaviest of the three, join
+# pair arithmetic moved into the merged query above (x113's kill/resume
+# join shape replays the same construction, extensions16). Its drain — the heaviest of the three, join
 # state committing per side per batch — now overlaps the other two
 # shapes' instead of paying its own streaming floor.

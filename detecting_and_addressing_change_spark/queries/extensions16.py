@@ -14,12 +14,13 @@ all three state shapes with the incarnations of a phase started
 CONCURRENTLY: each shape keeps its own staged layout, checkpoint and
 parquet file sink (the three queries share nothing but the wall
 clock), run 1 of every shape drains in one window, then run 2 of every
-shape resumes from its own checkpoint in a second window. Every
-synthesis, precondition and raise-guarded verdict of the three
-original queries is preserved verbatim below; only the returned row
-shape changed — one FINGERPRINT row per state shape (the x100/x104
-pattern: count + key/value sums the oracle recomputes from scratch,
-verdict booleans raise-guarded in-query then pinned TRUE).
+shape resumes from its own checkpoint in a second window. The replay
+syntheses, their preconditions and the three streaming operators are
+x110's own (extensions15), and every raise-guarded verdict of the
+three original queries is preserved below; only the returned row shape
+changed — one FINGERPRINT row per state shape (the x100/x104 pattern:
+count + key/value sums the oracle recomputes from scratch, verdict
+booleans raise-guarded in-query then pinned TRUE).
 
 x99 attested restart-safety for the foreachBatch/CDC upsert path, but
 the built-in stateful operators the r11 round closed (x110 watermarked
@@ -104,9 +105,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
-from .extensions15 import _X110_BASE, _X110_CASE_T, _X110_DELAY, _X110_WIN
-from .registry import query
+from .extensions15 import (
+    _X110_BASE,
+    _X110_DELAY,
+    _X110_WIN,
+    _band_join,
+    _dedup_within_horizon,
+    _fingerprint_rows,
+    _replay_syntheses,
+    _window_counts,
+    _x110_shape_ctes,
+)
+from .registry import query, scratch_index_dir
 from ..sources.tables import read_parquet_cached_schema
 
 
@@ -128,66 +138,25 @@ from ..sources.tables import read_parquet_cached_schema
 
 
 def _x113_oracle() -> str:
-    b, w = _X110_BASE, _X110_WIN
-    return f"""
-    WITH w_rows AS (
-      SELECT event_id, event_type,
-             {_X110_CASE_T} AS t,
-             CASE WHEN event_id % 20 = 9 THEN 1
-                  WHEN event_id % 20 = 19 THEN 4
-                  WHEN event_id % 100 = 11 THEN 2
-                  WHEN event_id % 100 = 31 THEN 5
-                  WHEN event_id % 10 = 7 THEN 3
-                  ELSE 0 END AS batch
-      FROM events
-    ),
-    -- window_agg shape: identical emission arithmetic to x110's oracle;
+    rows, window, dedup, join = _x110_shape_ctes()
+    return (
+        rows
+        + f"""    -- window_agg shape: identical emission arithmetic to x110's oracle;
     -- the late batch is filtered at watermark 1240 - {_X110_DELAY} = 940
     -- (RESTORED from the checkpoint rather than carried in memory), and
     -- the final watermark 2440 - {_X110_DELAY} = 2140 emits windows with
     -- start <= 2080
-    w_accepted AS (
-      SELECT * FROM w_rows WHERE batch <> 3 OR t >= 900
-    ),
-    w_emitted AS (
-      SELECT CAST({b} + FLOOR(t / {w}) * {w} AS BIGINT) AS win_start,
-             event_type
-      FROM w_accepted
-      WHERE FLOOR(t / {w}) * {w} <= 2080
-    ),
-    w_grouped AS (
-      SELECT win_start, event_type, COUNT(*) AS n
-      FROM w_emitted GROUP BY win_start, event_type
-    ),
-    -- join_buffer shape: the uninterrupted x112 emission set (in-batch
+"""
+        + window
+        + """    -- join_buffer shape: the uninterrupted x112 emission set (in-batch
     -- pairs + the cross-restart pair served from the restored buffer)
-    j_e AS (
-      SELECT event_id AS k, event_id % 100 AS m100,
-             event_id % 20 AS m20, event_id % 10 AS m10
-      FROM events
-    ),
-    j_pairs AS (
-      SELECT k, m100 * 10 AS lt, m100 * 10 + 30 AS rt FROM j_e
-      WHERE m20 NOT IN (9, 19) AND m10 <> 7
-        AND m100 NOT IN (11, 31, 51, 83)
-      UNION ALL
-      SELECT k, 830, 860 FROM j_e WHERE m100 = 83
-    ),
-    -- dedup_map shape: every key's FIRST occurrence plus the
+"""
+        + join
+        + """    -- dedup_map shape: every key's FIRST occurrence plus the
     -- beyond-horizon redeliveries the evicted state cannot remember
-    d_e AS (
-      SELECT event_id AS k, event_id % 100 AS m100, event_id % 20 AS m20
-      FROM events
-    ),
-    d_emitted AS (
-      SELECT k, CASE WHEN m20 = 9 THEN 2000 + (k % 5) * 10
-                     WHEN m100 = 11 THEN 2040
-                     ELSE m100 * 10 END AS t
-      FROM d_e
-      UNION ALL
-      SELECT k, 1900 FROM d_e WHERE m100 = 43
-    ),
-    fp AS (
+"""
+        + dedup
+        + """    fp AS (
       SELECT 'window_agg' AS state_shape,
              CAST(COUNT(*) AS BIGINT) AS n_rows,
              CAST(SUM(win_start) AS BIGINT) AS fp_key_sum,
@@ -212,20 +181,7 @@ def _x113_oracle() -> str:
            TRUE AS exactly_once_resume
     FROM fp
 """
-
-
-def _await_all(started: dict, phase: str) -> None:
-    """Drain a phase's concurrently-started availableNow queries; a
-    timeout or error in any of them stops the rest and raises."""
-    for shape, q in started.items():
-        if not q.awaitTermination(300):
-            for qq in started.values():
-                qq.stop()
-            raise AssertionError(
-                f"x113 {shape} incarnation ({phase}) did not drain in 300s"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+    )
 
 
 @query("x113_checkpoint_recovery_verdict", oracle=_x113_oracle())
@@ -239,183 +195,16 @@ def x113(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission sets, which the oracle recomputes — returned as one
     fingerprint row per shape."""
     from ..streaming.replay import (
+        drain_all,
         read_replay_stream,
         scoped_state_partitions,
         stage_replay_files,
     )
-    from .extensions10 import _scratch_index_dir
-    from .extensions15 import (
-        _X111_BASE,
-        _X111_DELAY,
-        _X112_BASE,
-        _X112_DELAY,
-    )
 
-    # ---------------- shape 1: window_agg synthesis (x110's, verbatim —
-    # kept inline rather than factored so x110's attested executed path
-    # is untouched) ----------------
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    e = F.col("event_id")
-    t = (
-        F.when(e % 20 == 9, F.lit(1200) + (e % 5) * 10)
-        .when(e % 20 == 19, F.lit(2400) + (e % 5) * 10)
-        .when(e % 100 == 11, F.lit(1240))
-        .when(e % 100 == 31, F.lit(2440))
-        .otherwise((e % 100) * 10)
-    ).cast("long")
-    batch = (
-        F.when(e % 20 == 9, 1)
-        .when(e % 20 == 19, 4)
-        .when(e % 100 == 11, 2)
-        .when(e % 100 == 31, 5)
-        .when(e % 10 == 7, 3)
-        .otherwise(0)
-    ).cast("long")
-    w_rows = ev.select(
-        batch.alias("replay_batch"),
-        F.timestamp_seconds(F.lit(_X110_BASE) + t).alias("ts"),
-        "event_type",
-        t.alias("__t"),
-    ).localCheckpoint(eager=True)
-
-    # non-vacuousness preconditions (x110's, asserted BEFORE streaming;
-    # r18: one grouped agg serves the leg census and the late split —
-    # was two jobs over the same checkpointed rows)
-    w_pre = w_rows.groupBy("replay_batch").agg(
-        F.count("*").alias("n"),
-        F.sum((F.col("__t") < 900).cast("long")).alias("n_lt900"),
-    ).collect()
-    w_legs = {int(r["replay_batch"]): int(r["n"]) for r in w_pre}
-    n_dropped_late = sum(
-        int(r["n_lt900"]) for r in w_pre if int(r["replay_batch"]) == 3
-    )
-    n_accepted_late = w_legs.get(3, 0) - n_dropped_late
-    if not all(w_legs.get(i, 0) for i in (0, 1, 2, 4, 5)):
-        raise AssertionError(
-            f"x113 fixture drift: empty window-agg replay leg {w_legs}"
-        )
-    if not (n_dropped_late > 0 and n_accepted_late > 0):
-        raise AssertionError(
-            f"x113 fixture drift: late split dropped={n_dropped_late} "
-            f"accepted={n_accepted_late} — a leg is vacuous"
-        )
-
-    # ---------------- shape 2: join_buffer synthesis (x112's, verbatim)
-    ev_k = load_table(spark, sf_dir, "events").select("event_id")
-    m100, m20, m10 = e % 100, e % 20, e % 10
-    is_a = ~m20.isin(9, 19) & (m10 != 7) & ~m100.isin(11, 31, 51, 83)
-
-    def leg(cond, b, t_expr, base):
-        return ev_k.filter(cond).select(
-            F.lit(b).cast("long").alias("replay_batch"),
-            e.alias("k"),
-            F.timestamp_seconds(
-                F.lit(base) + t_expr.cast("long")
-            ).alias("ts"),
-        )
-
-    j_left = (
-        leg(is_a | (m100 == 83), 0, m100 * 10, _X112_BASE)
-        .unionByName(
-            leg(m20 == 9, 1, F.lit(2000) + (e % 5) * 10, _X112_BASE)
-        )
-        .unionByName(leg(m100 == 11, 2, F.lit(2040), _X112_BASE))
-        .unionByName(leg(m10 == 7, 3, m100 * 10, _X112_BASE))  # LATE leg
-        .localCheckpoint(eager=True)
-    )
-    j_right = (
-        leg(is_a | (m10 == 7), 0, m100 * 10 + 30, _X112_BASE)
-        .unionByName(
-            leg(
-                m20 == 19, 1, F.lit(2000) + (e % 5) * 10, _X112_BASE
-            ).unionByName(
-                # cross-RESTART partner
-                leg(m100 == 83, 1, F.lit(860), _X112_BASE)
-            )
-        )
-        .unionByName(leg(m100 == 31, 2, F.lit(2040), _X112_BASE))
-        .unionByName(leg(m100 == 51, 3, F.lit(2040), _X112_BASE))
-        .localCheckpoint(eager=True)
-    )
-
-    # non-vacuousness preconditions (x112's, asserted BEFORE streaming;
-    # r18: one grouped agg per side serves the leg census and the
-    # cross/late/in-batch counts — was five jobs over the same
-    # checkpointed legs)
-    l_pre = j_left.groupBy("replay_batch").agg(
-        F.count("*").alias("n"),
-        F.sum((F.col("k") % 100 == 83).cast("long")).alias("n83"),
-    ).collect()
-    n_cross = sum(int(r["n83"]) for r in l_pre)
-    n_late = sum(
-        int(r["n"]) for r in l_pre if int(r["replay_batch"]) == 3
-    )
-    n_a = (
-        sum(int(r["n"]) for r in l_pre if int(r["replay_batch"]) == 0)
-        - n_cross
-    )
-    if not (n_cross > 0 and n_late > 0 and n_a > 0):
-        raise AssertionError(
-            f"x113 fixture drift: join cross leg {n_cross}, late leg "
-            f"{n_late}, in-batch leg {n_a} — a verdict would be vacuous"
-        )
-    r_pre = j_right.groupBy("replay_batch").count().collect()
-    for rows, nm in ((l_pre, "left"), (r_pre, "right")):
-        side_legs = sorted(int(r["replay_batch"]) for r in rows)
-        if side_legs != [0, 1, 2, 3]:
-            raise AssertionError(
-                f"x113 fixture drift: join {nm} legs "
-                f"{side_legs} != 4 files"
-            )
-
-    # ---------------- shape 3: dedup_map synthesis (x111's, verbatim)
-    originals = ev_k.filter((m20 != 9) & (m100 != 11)).select(
-        F.lit(0).alias("replay_batch"), e.alias("k"), (m100 * 10).alias("t")
-    )
-    dup_a = ev_k.filter(m100 == 93).select(
-        F.lit(1).alias("replay_batch"), e.alias("k"), F.lit(980).alias("t")
-    )
-    jump = ev_k.filter(m20 == 9).select(
-        F.lit(2).alias("replay_batch"),
-        e.alias("k"),
-        (F.lit(2000) + (e % 5) * 10).alias("t"),
-    )
-    spacer = ev_k.filter(m100 == 11).select(
-        F.lit(3).alias("replay_batch"), e.alias("k"), F.lit(2040).alias("t")
-    )
-    dup_b = ev_k.filter(m100 == 43).select(
-        F.lit(4).alias("replay_batch"), e.alias("k"), F.lit(1900).alias("t")
-    )
-    d_rows = (
-        originals.unionByName(dup_a)
-        .unionByName(jump)
-        .unionByName(spacer)
-        .unionByName(dup_b)
-        .select(
-            F.col("replay_batch").cast("long").alias("replay_batch"),
-            "k",
-            F.timestamp_seconds(
-                F.lit(_X111_BASE) + F.col("t")
-            ).alias("ts"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    # non-vacuousness preconditions (x111's)
-    d_legs = {
-        int(r["replay_batch"]): int(r["n"])
-        for r in d_rows.groupBy("replay_batch")
-        .count()
-        .withColumnRenamed("count", "n")
-        .collect()
-    }
-    if not all(d_legs.get(i, 0) for i in range(5)):
-        raise AssertionError(
-            f"x113 fixture drift: empty dedup replay leg {d_legs}"
-        )
+    rp = _replay_syntheses(spark, sf_dir, "x113")
 
     # ---------------- staging dirs, sinks, checkpoints (per shape)
-    tmp = _scratch_index_dir(spark, "ckpt113_")
+    tmp = scratch_index_dir(spark, "ckpt113_")
     w_staged, w_sink, w_ckpt = f"{tmp}/w/staged", f"{tmp}/w/sink", f"{tmp}/w/ckpt"
     l_staged, r_staged = f"{tmp}/j/left", f"{tmp}/j/right"
     j_sink, j_ckpt = f"{tmp}/j/sink", f"{tmp}/j/ckpt"
@@ -436,86 +225,42 @@ def x113(spark: SparkSession, sf_dir: str) -> DataFrame:
             start_index=start_index,
         )
 
-    def start_window(lo: int, hi: int, start_index: int):
-        """Stage window-agg batches [lo, hi], then start an incarnation
-        on the SHARED checkpoint + sink (NOT awaited here)."""
-        _stage(w_rows.drop("__t"), w_staged, lo, hi, start_index)
+    def start(out: DataFrame, sink: str, ckpt: str):
+        """Start an incarnation on a shape's SHARED checkpoint + parquet
+        sink (NOT awaited here)."""
         return (
-            read_replay_stream(spark, w_staged, w_schema)
-            .withWatermark("ts", f"{_X110_DELAY} seconds")
-            .groupBy(F.window("ts", f"{_X110_WIN} seconds"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(
-                F.col("window.start").cast("long").alias("win_start"),
-                "event_type",
-                F.col("n").cast("long").alias("n"),
-            )
-            .writeStream.outputMode("append")
+            out.writeStream.outputMode("append")
             .format("parquet")
-            .option("path", w_sink)
-            .option("checkpointLocation", w_ckpt)
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
+
+    def start_window(lo: int, hi: int, start_index: int):
+        """Stage window-agg batches [lo, hi], then start an incarnation."""
+        _stage(rp.w_rows.drop("__t"), w_staged, lo, hi, start_index)
+        stream = read_replay_stream(spark, w_staged, w_schema)
+        return start(_window_counts(stream), w_sink, w_ckpt)
 
     def start_join(lo: int, hi: int, start_index: int):
         """Stage join batches [lo, hi] on BOTH sources (equal file
         counts per phase, so triggers pair deterministically across the
         restart exactly as in x112's single run), then start an
         incarnation."""
-        _stage(j_left, l_staged, lo, hi, start_index)
-        _stage(j_right, r_staged, lo, hi, start_index)
-        ls = (
-            read_replay_stream(spark, l_staged, j_schema)
-            .withWatermark("ts", f"{_X112_DELAY} seconds")
-            .select(F.col("k").alias("lk"), F.col("ts").alias("lts"))
+        _stage(rp.j_left, l_staged, lo, hi, start_index)
+        _stage(rp.j_right, r_staged, lo, hi, start_index)
+        out = _band_join(
+            read_replay_stream(spark, l_staged, j_schema),
+            read_replay_stream(spark, r_staged, j_schema),
         )
-        rs = (
-            read_replay_stream(spark, r_staged, j_schema)
-            .withWatermark("ts", f"{_X112_DELAY} seconds")
-            .select(F.col("k").alias("rk"), F.col("ts").alias("rts"))
-        )
-        return (
-            ls.join(
-                rs,
-                (F.col("lk") == F.col("rk"))
-                & (F.col("rts") >= F.col("lts"))
-                & (
-                    F.col("rts")
-                    <= F.col("lts") + F.expr("INTERVAL 60 SECONDS")
-                ),
-                "inner",
-            )
-            .select(
-                F.col("lk").alias("k"),
-                (F.col("lts").cast("long") - _X112_BASE).alias("lt"),
-                (F.col("rts").cast("long") - _X112_BASE).alias("rt"),
-            )
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", j_sink)
-            .option("checkpointLocation", j_ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return start(out, j_sink, j_ckpt)
 
     def start_dedup(lo: int, hi: int, start_index: int):
         """Stage dedup batches [lo, hi], then start an incarnation."""
-        _stage(d_rows, d_staged, lo, hi, start_index)
-        return (
-            read_replay_stream(spark, d_staged, d_schema)
-            .withWatermark("ts", f"{_X111_DELAY} seconds")
-            .dropDuplicatesWithinWatermark(["k"])
-            .select(
-                "k", (F.col("ts").cast("long") - _X111_BASE).alias("t")
-            )
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", d_sink)
-            .option("checkpointLocation", d_ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        _stage(rp.d_rows, d_staged, lo, hi, start_index)
+        stream = read_replay_stream(spark, d_staged, d_schema)
+        return start(_dedup_within_horizon(stream), d_sink, d_ckpt)
 
     # Scoped state partitions (see streaming/replay.py — join state is
     # committed PER SIDE per batch, the heaviest case of the commit
@@ -528,13 +273,13 @@ def x113(spark: SparkSession, sf_dir: str) -> DataFrame:
         # state), join batch 0 of both sources (leaves the cross pair's
         # left row in the buffer), dedup batch 0 (the originals — whole
         # key map enters state at watermark 690). Graceful stops.
-        _await_all(
+        drain_all(
             {
                 "window_agg": start_window(0, 2, 0),
                 "join_buffer": start_join(0, 0, 0),
                 "dedup_map": start_dedup(0, 0, 0),
             },
-            "run 1",
+            "x113 run 1",
         )
         # the run-1 snapshot scalars MUST be taken eagerly here (run 2
         # appends to the same sinks), but they ride ONE collect of
@@ -569,13 +314,13 @@ def x113(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the SAME checkpoints (start_index keeps the new staged buckets
         # behind the already-consumed ones in both name and mtime
         # order) — watermark/buffer/key-map recovery happens here.
-        _await_all(
+        drain_all(
             {
                 "window_agg": start_window(3, 5, 3),
                 "join_buffer": start_join(1, 3, 1),
                 "dedup_map": start_dedup(1, 4, 1),
             },
-            "run 2",
+            "x113 run 2",
         )
         w_final = read_parquet_cached_schema(spark, w_sink).localCheckpoint(eager=True)
         j_final = read_parquet_cached_schema(spark, j_sink).localCheckpoint(eager=True)
@@ -606,7 +351,7 @@ def x113(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("w_n_keys"),
         )
         .crossJoin(
-            w_rows.agg(
+            rp.w_rows.agg(
                 F.coalesce(
                     F.sum(
                         (
@@ -707,13 +452,13 @@ def x113(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"rows, expected {expected_emitted} — the restored watermark "
             f"did not filter the late batch at 940"
         )
-    expected_straggler = int(g["straggler_run1"]) + n_accepted_late
+    expected_straggler = int(g["straggler_run1"]) + rp.n_accepted_late
     got_straggler = int(g["got_straggler"])
     if got_straggler != expected_straggler:
         raise AssertionError(
             f"x113 state-recovery regression: straggler window counts "
             f"{got_straggler}, expected {expected_straggler} (run-1 rows "
-            f"+ {n_accepted_late} accepted late) — the window state did "
+            f"+ {rp.n_accepted_late} accepted late) — the window state did "
             f"not survive the restart"
         )
 
@@ -730,9 +475,9 @@ def x113(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{j_n_final}"
         )
     got_cross = int(g["got_cross"])
-    if got_cross != n_cross:
+    if got_cross != rp.n_cross:
         raise AssertionError(
-            f"x113 buffer-recovery regression: {got_cross}/{n_cross} "
+            f"x113 buffer-recovery regression: {got_cross}/{rp.n_cross} "
             f"cross-restart pairs emitted — the join buffer did not "
             f"survive the restart"
         )
@@ -749,18 +494,18 @@ def x113(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"over {j_n_keys} distinct (k, lt, rt) triples — a pair was "
             f"re-emitted across the restart"
         )
-    if j_n_final != n_a + n_cross:
+    if j_n_final != rp.n_a + rp.n_cross:
         raise AssertionError(
             f"x113 join emission regression: {j_n_final} pairs, expected "
-            f"{n_a} in-batch + {n_cross} cross-restart"
+            f"{rp.n_a} in-batch + {rp.n_cross} cross-restart"
         )
 
     # shape 3 (x115's originals)
     d_n_final = int(g["d_n_final"])
-    if d_n_run1 != d_legs[0]:
+    if d_n_run1 != rp.d_legs[0]:
         raise AssertionError(
             f"x113 dedup split vacuous: run1 emitted {d_n_run1}, "
-            f"expected the {d_legs[0]} originals exactly"
+            f"expected the {rp.d_legs[0]} originals exactly"
         )
     a_keys = int(g["a_keys"])
     if a_keys != 0:
@@ -770,43 +515,25 @@ def x113(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"survive the restart"
         )
     b_got = int(g["b_got"])
-    if b_got != d_legs[4]:
+    if b_got != rp.d_legs[4]:
         raise AssertionError(
-            f"x113 horizon regression: {b_got}/{d_legs[4]} beyond-horizon"
+            f"x113 horizon regression: {b_got}/{rp.d_legs[4]} beyond-horizon"
             f" redeliveries re-emitted after the resume"
         )
     d_n_keys = int(g["d_n_keys"])
-    d_expected_total = d_legs[0] + d_legs[2] + d_legs[3] + d_legs[4]
+    d_expected_total = sum(rp.d_legs[i] for i in (0, 2, 3, 4))
     if not (d_n_keys == d_n_final == d_expected_total):
         raise AssertionError(
             f"x113 dedup exactly-once regression: {d_n_final} rows, "
             f"{d_n_keys} distinct (k, t), expected {d_expected_total}"
         )
 
-    # ---------------- fingerprint rows (one per shape; every count and
-    # sum recomputed by the oracle from scratch, booleans raise-guarded
-    # above then pinned TRUE — the x100/x104 consolidation shape)
-    def _verdicts(row: DataFrame) -> DataFrame:
-        return row.select(
-            "*",
-            F.lit(True).alias("state_restored"),
-            F.lit(True).alias("late_discipline_ok"),
-            F.lit(True).alias("exactly_once_resume"),
-        )
-
-    w_fp = w_final.agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.sum("win_start").cast("long").alias("fp_key_sum"),
-        F.sum("n").cast("long").alias("fp_val_sum"),
-    ).select(F.lit("window_agg").alias("state_shape"), "*")
-    j_fp = j_final.agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.sum("k").cast("long").alias("fp_key_sum"),
-        (F.sum("lt") + F.sum("rt")).cast("long").alias("fp_val_sum"),
-    ).select(F.lit("join_buffer").alias("state_shape"), "*")
-    d_fp = d_final.agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.sum("k").cast("long").alias("fp_key_sum"),
-        F.sum("t").cast("long").alias("fp_val_sum"),
-    ).select(F.lit("dedup_map").alias("state_shape"), "*")
-    return _verdicts(w_fp.unionByName(j_fp).unionByName(d_fp))
+    # ---------------- fingerprint rows (the x100/x104 consolidation shape)
+    return _fingerprint_rows(
+        {
+            "window_agg": (w_final, "win_start", F.sum("n")),
+            "join_buffer": (j_final, "k", F.sum("lt") + F.sum("rt")),
+            "dedup_map": (d_final, "k", F.sum("t")),
+        },
+        ("state_restored", "late_discipline_ok", "exactly_once_resume"),
+    )

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, scratch_index_dir, session_fixture
 
 
 # --------------------------------------------------------------------------
@@ -651,7 +651,6 @@ def x120(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_shards,
         write_shards,
     )
-    from .extensions10 import _scratch_index_dir
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -661,7 +660,7 @@ def x120(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
         )
     )
-    path = _scratch_index_dir(spark, "shard120_")
+    path = scratch_index_dir(spark, "shard120_")
     assigned = assign_shards(
         docs, "doc_id", "n_tokens", budget=_X120_BUDGET, seed=_X120_SEED
     )
@@ -714,7 +713,7 @@ def x120(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # JSONL interchange: same assignment, json layout, manifest-verified
     # read-back must reproduce the parquet layout's exact fingerprints
-    jpath = _scratch_index_dir(spark, "shard120j_")
+    jpath = scratch_index_dir(spark, "shard120j_")
     write_shards(assigned, jpath, "doc_id", "n_tokens",
                  data_format="json")
     jback = read_shards(spark, jpath, "doc_id", "n_tokens",
@@ -1270,31 +1269,26 @@ def _x123_oracle() -> str:
 # the same materialized layout — one build feeds all three (the x76/x79
 # shared-fixture precedent under the bench/sweep budget policy). All
 # consumers are read-only; the scratch dir lives until process exit.
-_X123_LAYOUTS: dict[tuple[str, str], str] = {}
-
-
 def _x123_layout(spark: SparkSession, sf_dir: str) -> str:
     """Path of the materialized x123 training-shard layout (building it
     on first use in this session): curation.build_training_shards with
     the x123 parameters (word vocab 64, pack 32, 4 packs/shard, epoch
     seed 5) over the documents table."""
     from ..curation import build_training_shards
-    from .extensions10 import _scratch_index_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _X123_LAYOUTS:
-        docs = load_table(spark, sf_dir, "documents")
-        path = _scratch_index_dir(spark, "shards123_")
+    def build() -> str:
+        path = scratch_index_dir(spark, "shards123_")
         build_training_shards(
-            docs,
+            load_table(spark, sf_dir, "documents"),
             path,
             vocab_size=_X123_VOCAB,
             pack_size=_X123_PACK,
             packs_per_shard=_X123_PPS,
             epoch_seed=_X123_SEED,
         )
-        _X123_LAYOUTS[key] = path
-    return _X123_LAYOUTS[key]
+        return path
+
+    return session_fixture(spark, sf_dir, "x123_layout", build)
 
 
 @query("x123_training_build_materialized", oracle=_x123_oracle())
@@ -1388,7 +1382,6 @@ def x124(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_shards_stream,
         write_shards,
     )
-    from .extensions10 import _scratch_index_dir
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -1398,7 +1391,7 @@ def x124(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
         )
     )
-    path = _scratch_index_dir(spark, "shard124_")
+    path = scratch_index_dir(spark, "shard124_")
     assigned = assign_shards(
         docs, "doc_id", "n_tokens", budget=_X124_BUDGET, seed=_X124_SEED
     )

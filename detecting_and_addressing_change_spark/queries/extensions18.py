@@ -42,7 +42,7 @@ from .extensions17 import (
     _x123_ctes,
     _x123_layout,
 )
-from .registry import query
+from .registry import query, scratch_index_dir, session_fixture
 from ..sources.tables import read_parquet_cached_schema
 
 _LAYOUT_SCHEMA = (
@@ -361,11 +361,9 @@ def x125(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             b.unpersist()
 
-    from .extensions10 import _scratch_index_dir
-
     # fresh checkpoint per invocation: a reused file-source checkpoint
     # would mark every shard already-consumed and deliver ZERO batches
-    ckpt = _scratch_index_dir(spark, "x125ckpt_")
+    ckpt = scratch_index_dir(spark, "x125ckpt_")
     q = (
         read_shards_stream(
             spark,
@@ -771,7 +769,6 @@ def x127(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from ..operators.sharding import read_shards_stream
-    from .extensions10 import _scratch_index_dir
 
     path = _x123_layout(spark, sf_dir)
     layout = read_parquet_cached_schema(spark, f"{path}/shards")
@@ -793,7 +790,7 @@ def x127(spark: SparkSession, sf_dir: str) -> DataFrame:
     phase1_shards: list[set[int]] = []
     phase2_shards: list[set[int]] = []
     crashed_shards: list[set[int]] = []
-    ckpt = _scratch_index_dir(spark, "x127ckpt_")
+    ckpt = scratch_index_dir(spark, "x127ckpt_")
 
     def _batch_shards(bdf) -> set[int]:
         return {
@@ -975,9 +972,6 @@ _X128_SEED2 = 7
 # (extensions19) REPLAYS the same epoch-2 layout through the real
 # multi-epoch trainer — one re-shard build feeds both (the _x123_layout
 # fixture discipline applied one layer up; sweep-budget policy).
-_X128_EPOCH2: dict[tuple[str, str], tuple[str, int]] = {}
-
-
 def _x128_epoch2_layout(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, int]:
@@ -989,13 +983,11 @@ def _x128_epoch2_layout(
     notion). The written data keeps assign_shards' epoch_key column —
     x129's replay-order evidence."""
     from ..operators.sharding import assign_shards, write_shards
-    from .extensions10 import _scratch_index_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _X128_EPOCH2:
+    def build() -> tuple[str, int]:
         path = _x123_layout(spark, sf_dir)
         layout = read_parquet_cached_schema(spark, f"{path}/shards")
-        e2path = _scratch_index_dir(spark, "x128epoch2_")
+        e2path = scratch_index_dir(spark, "x128epoch2_")
         assigned = assign_shards(
             layout.select("doc_id", "token_ids", "n_tokens"),
             "doc_id",
@@ -1007,8 +999,9 @@ def _x128_epoch2_layout(
         span = int(
             manifest.agg(F.max("shard_id").alias("m")).collect()[0]["m"]
         ) + 1
-        _X128_EPOCH2[key] = (e2path, span)
-    return _X128_EPOCH2[key]
+        return e2path, span
+
+    return session_fixture(spark, sf_dir, "x128_epoch2", build)
 
 
 def _x128_oracle() -> str:

@@ -18,6 +18,12 @@ from pyspark.sql import functions as F
 from ..functions.rounding import portable_round
 from ..sources.tables import load_table
 from ._golden_oracles import Q61_MAPPING_ORACLE, X42_PCA_ORACLE
+from .fragments import (
+    _NB_DOCS_CTES,
+    _NB_TWO_MODEL_BARE,
+    _NB_WORDS_CTES,
+    _ddm_scan_cte,
+)
 from .registry import query
 
 
@@ -279,25 +285,7 @@ def x45(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NB sufficient stats, recursive-CTE DDM) with the abrupt union swapped
 # for q33's portable Box-Muller noise scaled by the schedule.
 # --------------------------------------------------------------------------
-_Q59_ORACLE = """
-WITH RECURSIVE
-langcode AS (
-  SELECT lang, CAST(ROW_NUMBER() OVER (ORDER BY lang) - 1 AS INT) AS label
-  FROM (SELECT DISTINCT lang FROM documents)
-),
-docs AS (
-  SELECT d.doc_id, COALESCE(d.text, '') AS text, lc.label
-  FROM documents d JOIN langcode lc ON d.lang = lc.lang
-),
-doc_words AS (
-  SELECT doc_id, UNNEST(string_split(text, ' ')) AS word,
-         GENERATE_SUBSCRIPTS(string_split(text, ' '), 1) AS pos
-  FROM docs
-),
-doc_words_t AS (SELECT * FROM doc_words WHERE pos <= 512),
-words AS (SELECT DISTINCT word FROM doc_words_t),
-dims AS (SELECT UNNEST(GENERATE_SERIES(0, 7)) AS d),
-word_pre AS (
+_Q59_ORACLE = _NB_DOCS_CTES + _NB_WORDS_CTES + """word_pre AS (
   SELECT w.word,
          list_reduce(
              [7::BIGINT] || list_transform(
@@ -382,51 +370,7 @@ seq AS MATERIALIZED (
               ELSE LEAST((seq_id - 30) * (2.0 / 20.0), 2.0) END AS sigma
   FROM buckets
 ),
-scan AS (
-  SELECT 0::BIGINT AS rn, CAST(NULL AS BIGINT) AS seq_id,
-         CAST(NULL AS VARCHAR) AS flag,
-         1::BIGINT AS n, 1.0::DOUBLE AS p,
-         'infinity'::DOUBLE AS psmin, 'infinity'::DOUBLE AS pmin,
-         'infinity'::DOUBLE AS smin, FALSE AS in_change
-  UNION ALL
-  SELECT rn, seq_id,
-         CASE WHEN n1 < 30 THEN 'N'
-              WHEN p1 + s1 > pmin1 + 3.0 * smin1 THEN 'D'
-              WHEN p1 + s1 > pmin1 + 2.0 * smin1 THEN 'W'
-              ELSE 'N' END AS flag,
-         n1 AS n, p1 AS p, psmin1 AS psmin, pmin1 AS pmin, smin1 AS smin,
-         (n1 >= 30 AND p1 + s1 > pmin1 + 3.0 * smin1) AS in_change
-  FROM (
-    SELECT rn, seq_id, n1, p1, s1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN p1 + s1 ELSE psmin0 END AS psmin1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN p1 ELSE pmin0 END AS pmin1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN s1 ELSE smin0 END AS smin1
-    FROM (
-      SELECT rn, seq_id, n0 + 1 AS n1, p1,
-             SQRT(GREATEST(p1 * (1.0 - p1), 0.0) / n0) AS s1,
-             psmin0, pmin0, smin0
-      FROM (
-        SELECT scan.rn + 1 AS rn, seq.seq_id,
-               CASE WHEN scan.in_change THEN 1 ELSE scan.n END AS n0,
-               (CASE WHEN scan.in_change THEN 1.0 ELSE scan.p END)
-                 + (seq.error
-                    - (CASE WHEN scan.in_change THEN 1.0 ELSE scan.p END))
-                   / (CASE WHEN scan.in_change THEN 1 ELSE scan.n END) AS p1,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.psmin END AS psmin0,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.pmin END AS pmin0,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.smin END AS smin0
-        FROM scan JOIN seq ON seq.rn = scan.rn + 1
-      )
-    )
-  )
-)
-SELECT sq.seq_id,
+""" + _ddm_scan_cte(False) + """SELECT sq.seq_id,
        FLOOR(sq.sigma * 1000000.0 + 0.5) / 1000000.0 AS sigma,
        FLOOR(sq.accuracy * 1000000.0 + 0.5) / 1000000.0 AS accuracy,
        sc.flag
@@ -436,22 +380,10 @@ FROM seq sq JOIN scan sc ON sq.seq_id = sc.seq_id
 
 @query("q59_gradual_drift_experiment", oracle=_Q59_ORACLE)
 def q59(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..pipelines import gradual_drift_experiment
+    from .drift import _labeled_documents
 
-    docs = load_table(spark, sf_dir, "documents")
-    lang_codes = (
-        docs.select("lang")
-        .distinct()
-        .withColumn(
-            "label",
-            (F.dense_rank().over(Window.orderBy("lang")) - 1).cast("int"),
-        )
-    )
-    labeled = docs.join(F.broadcast(lang_codes), "lang").select(
-        "doc_id", "text", "label"
-    )
+    labeled = _labeled_documents(spark, sf_dir)
     return gradual_drift_experiment(
         labeled, batch_size=8, warm_start=30, max_std=2.0, steps=20
     )
@@ -467,82 +399,7 @@ def q59(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The oracle is q39's two-model machinery with the union seam replaced by
 # per-doc prediction agreement.
 # --------------------------------------------------------------------------
-_Q60_ORACLE = """
-WITH RECURSIVE
-langcode AS (
-  SELECT lang, CAST(ROW_NUMBER() OVER (ORDER BY lang) - 1 AS INT) AS label
-  FROM (SELECT DISTINCT lang FROM documents)
-),
-docs AS (
-  SELECT d.doc_id, COALESCE(d.text, '') AS text, lc.label
-  FROM documents d JOIN langcode lc ON d.lang = lc.lang
-),
-doc_words AS (
-  SELECT doc_id, UNNEST(string_split(text, ' ')) AS word,
-         GENERATE_SUBSCRIPTS(string_split(text, ' '), 1) AS pos
-  FROM docs
-),
-doc_words_t AS (SELECT * FROM doc_words WHERE pos <= 512),
-words AS (SELECT DISTINCT word FROM doc_words_t),
-dims AS (SELECT UNNEST(GENERATE_SERIES(0, 7)) AS d),
-models AS (SELECT UNNEST(['BERT', 'SCIBERT']) AS model),
-word_pre AS (
-  SELECT w.word, m.model,
-         list_reduce(
-             [7::BIGINT] || list_transform(
-               string_split_regex(m.model || ':' || w.word || ':', ''),
-               c -> ord(c)::BIGINT),
-             (a, b) -> (a * 31 + b) % 2147483647) AS hpre
-  FROM words w CROSS JOIN models m
-),
-word_emb AS (
-  SELECT wp.word, wp.model, dm.d,
-         CAST(sin((wp.hpre * 31 + 48 + dm.d) % 2147483647) * 2 - 1
-              AS REAL) AS v32
-  FROM word_pre wp CROSS JOIN dims dm
-),
-pooled AS (
-  SELECT dw.doc_id, we.model, we.d,
-         list_reduce([0.0::DOUBLE] || LIST(we.v32::DOUBLE ORDER BY dw.pos),
-                     (a, b) -> a + b) / COUNT(*) AS v
-  FROM doc_words_t dw JOIN word_emb we ON dw.word = we.word
-  GROUP BY dw.doc_id, we.model, we.d
-),
-train AS (
-  SELECT p.doc_id, p.d, p.v, dc.label
-  FROM pooled p JOIN docs dc ON p.doc_id = dc.doc_id
-  WHERE p.model = 'BERT'
-),
-stats AS (
-  SELECT label, d, COUNT(*) AS n, SUM(v)/COUNT(*) AS mean,
-         SUM(v*v)/COUNT(*) - (SUM(v)/COUNT(*))*(SUM(v)/COUNT(*)) AS var
-  FROM train GROUP BY label, d
-),
-mv AS (SELECT MAX(var) AS maxvar FROM stats),
-priors AS (SELECT label, COUNT(*) AS cnt FROM train WHERE d = 0 GROUP BY label),
-total AS (SELECT COUNT(*) AS n_total FROM docs),
-scored AS (
-  SELECT p.model, p.doc_id, s.label AS cls,
-         SUM(-0.5*LN(2*PI()*(s.var + 1e-9*mv.maxvar))
-             - (p.v - s.mean)*(p.v - s.mean)
-               / (2*(s.var + 1e-9*mv.maxvar))) AS ll
-  FROM pooled p JOIN stats s ON p.d = s.d
-  CROSS JOIN mv
-  GROUP BY p.model, p.doc_id, s.label
-),
-post AS (
-  SELECT sc.model, sc.doc_id, sc.cls,
-         sc.ll + LN(pr.cnt::DOUBLE / t.n_total) AS lp
-  FROM scored sc JOIN priors pr ON sc.cls = pr.label CROSS JOIN total t
-),
-best AS (
-  SELECT model, doc_id, cls,
-         ROW_NUMBER() OVER (PARTITION BY model, doc_id
-                            ORDER BY lp DESC, cls) AS r
-  FROM post
-),
-preds AS (SELECT model, doc_id, cls AS pred FROM best WHERE r = 1),
-agree AS (
+_Q60_ORACLE = _NB_DOCS_CTES + _NB_WORDS_CTES + _NB_TWO_MODEL_BARE + """agree AS (
   SELECT a.doc_id,
          CASE WHEN b.pred = a.pred THEN 1 ELSE 0 END AS c
   FROM preds a JOIN preds b ON a.doc_id = b.doc_id
@@ -558,51 +415,7 @@ seq AS MATERIALIZED (
          1.0 - agreement AS error, agreement
   FROM buckets
 ),
-scan AS (
-  SELECT 0::BIGINT AS rn, CAST(NULL AS BIGINT) AS seq_id,
-         CAST(NULL AS VARCHAR) AS flag,
-         1::BIGINT AS n, 1.0::DOUBLE AS p,
-         'infinity'::DOUBLE AS psmin, 'infinity'::DOUBLE AS pmin,
-         'infinity'::DOUBLE AS smin, FALSE AS in_change
-  UNION ALL
-  SELECT rn, seq_id,
-         CASE WHEN n1 < 30 THEN 'N'
-              WHEN p1 + s1 > pmin1 + 3.0 * smin1 THEN 'D'
-              WHEN p1 + s1 > pmin1 + 2.0 * smin1 THEN 'W'
-              ELSE 'N' END AS flag,
-         n1 AS n, p1 AS p, psmin1 AS psmin, pmin1 AS pmin, smin1 AS smin,
-         (n1 >= 30 AND p1 + s1 > pmin1 + 3.0 * smin1) AS in_change
-  FROM (
-    SELECT rn, seq_id, n1, p1, s1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN p1 + s1 ELSE psmin0 END AS psmin1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN p1 ELSE pmin0 END AS pmin1,
-           CASE WHEN n1 >= 30 AND p1 + s1 <= psmin0
-                THEN s1 ELSE smin0 END AS smin1
-    FROM (
-      SELECT rn, seq_id, n0 + 1 AS n1, p1,
-             SQRT(GREATEST(p1 * (1.0 - p1), 0.0) / n0) AS s1,
-             psmin0, pmin0, smin0
-      FROM (
-        SELECT scan.rn + 1 AS rn, seq.seq_id,
-               CASE WHEN scan.in_change THEN 1 ELSE scan.n END AS n0,
-               (CASE WHEN scan.in_change THEN 1.0 ELSE scan.p END)
-                 + (seq.error
-                    - (CASE WHEN scan.in_change THEN 1.0 ELSE scan.p END))
-                   / (CASE WHEN scan.in_change THEN 1 ELSE scan.n END) AS p1,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.psmin END AS psmin0,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.pmin END AS pmin0,
-               CASE WHEN scan.in_change THEN 'infinity'::DOUBLE
-                    ELSE scan.smin END AS smin0
-        FROM scan JOIN seq ON seq.rn = scan.rn + 1
-      )
-    )
-  )
-)
-SELECT sq.seq_id,
+""" + _ddm_scan_cte(False) + """SELECT sq.seq_id,
        FLOOR(sq.agreement * 1000000.0 + 0.5) / 1000000.0 AS agreement,
        sc.flag
 FROM seq sq JOIN scan sc ON sq.seq_id = sc.seq_id
@@ -611,23 +424,12 @@ FROM seq sq JOIN scan sc ON sq.seq_id = sc.seq_id
 
 @query("q60_unsupervised_drift_experiment", oracle=_Q60_ORACLE)
 def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..pipelines import unsupervised_drift_experiment
+    from .drift import _labeled_documents
 
-    docs = load_table(spark, sf_dir, "documents")
-    lang_codes = (
-        docs.select("lang")
-        .distinct()
-        .withColumn(
-            "label",
-            (F.dense_rank().over(Window.orderBy("lang")) - 1).cast("int"),
-        )
+    return unsupervised_drift_experiment(
+        _labeled_documents(spark, sf_dir), batch_size=8
     )
-    labeled = docs.join(F.broadcast(lang_codes), "lang").select(
-        "doc_id", "text", "label"
-    )
-    return unsupervised_drift_experiment(labeled, batch_size=8)
 
 
 @query("q61_mapping_experiment", oracle=Q61_MAPPING_ORACLE)
@@ -642,22 +444,10 @@ def q61(spark: SparkSession, sf_dir: str) -> DataFrame:
     properties) and tests/test_adaptation_pipelines.py (pair-set MSE drops
     after mapping, mapped accuracy recovers). Output: per-batch accuracy
     series for the raw and mapped untrained streams."""
-    from pyspark.sql import Window
-
     from ..pipelines import mapping_experiment
+    from .drift import _labeled_documents
 
-    docs = load_table(spark, sf_dir, "documents")
-    lang_codes = (
-        docs.select("lang")
-        .distinct()
-        .withColumn(
-            "label",
-            (F.dense_rank().over(Window.orderBy("lang")) - 1).cast("int"),
-        )
-    )
-    labeled = docs.join(F.broadcast(lang_codes), "lang").select(
-        "doc_id", "text", "label"
-    )
+    labeled = _labeled_documents(spark, sf_dir)
     result, _mse_before, _mse_after = mapping_experiment(
         labeled, batch_size=8, top_k=100
     )

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import portable_round, portable_round_sql
 from ..sources.tables import load_table
 from .extensions import _minhash_guarded_edges_oracle
+from .fragments import _NB_EMBEDDINGS_CTES
 from .registry import query
 
 _STOPLIST = ("a", "the")
@@ -543,38 +544,7 @@ def x53(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "x54_model_quality_filter",
-    oracle="""
-    WITH e AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings
-    ),
-    ex AS (
-      SELECT vec_id, label, UNNEST(emb) AS v,
-             GENERATE_SUBSCRIPTS(emb, 1) AS d
-      FROM e
-    ),
-    stats AS (
-      SELECT label, d, COUNT(*) AS n, SUM(v)/COUNT(*) AS mean,
-             SUM(v*v)/COUNT(*) - (SUM(v)/COUNT(*))*(SUM(v)/COUNT(*)) AS var
-      FROM ex GROUP BY label, d
-    ),
-    mv AS (SELECT MAX(var) AS maxvar FROM stats),
-    priors AS (SELECT label, COUNT(*) AS cnt FROM e GROUP BY label),
-    total AS (SELECT COUNT(*) AS n_total FROM e),
-    scored AS (
-      SELECT ex.vec_id, s.label AS cls,
-             SUM(-0.5*LN(2*PI()*(s.var + 1e-9*mv.maxvar))
-                 - (ex.v - s.mean)*(ex.v - s.mean)
-                   / (2*(s.var + 1e-9*mv.maxvar))) AS ll
-      FROM ex JOIN stats s ON ex.d = s.d
-      CROSS JOIN mv
-      GROUP BY ex.vec_id, s.label
-    ),
-    post AS (
-      SELECT scored.vec_id, cls,
-             ll + LN(p.cnt::DOUBLE / t.n_total) AS lp
-      FROM scored JOIN priors p ON scored.cls = p.label CROSS JOIN total t
-    ),
-    lp6 AS (
+    oracle=_NB_EMBEDDINGS_CTES + """    lp6 AS (
       SELECT vec_id, FLOOR(MAX(lp) * 1000000.0 + 0.5) / 1000000.0 AS lp
       FROM post GROUP BY vec_id
     ),

@@ -163,14 +163,20 @@ def x58(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_cells(emb, n_centroids=N_CENTROIDS, n_iter=N_ITER)
 
 
-_X59_ORACLE = f"""
-    WITH {_kmeans_ctes(N_CENTROIDS, N_ITER)},
+def _ivf_ranked_ctes(first_query: int, fit_where: str = "") -> str:
+    """The k-means fit replay, then queries ``first_query`` to
+    ``first_query + 9`` probe their 2 nearest cells and exact cosine
+    ranks the members, ending at ``ranked(query_id, cand_id, cos_raw,
+    rnk)``. ``fit_where`` is passed to :func:`_kmeans_ctes`."""
+    last_query = first_query + 9
+    return f"""
+    WITH {_kmeans_ctes(N_CENTROIDS, N_ITER, fit_where=fit_where)},
     q AS (
       SELECT vec_id AS query_id, cent_id AS cell FROM (
         SELECT vec_id, cent_id,
                ROW_NUMBER() OVER (
                  PARTITION BY vec_id ORDER BY dist, cent_id) AS r
-        FROM dF WHERE vec_id BETWEEN 100 AND 109) t
+        FROM dF WHERE vec_id BETWEEN {first_query} AND {last_query}) t
       WHERE r <= 2
     ),
     cand AS (
@@ -200,12 +206,18 @@ _X59_ORACLE = f"""
              ROW_NUMBER() OVER (
                PARTITION BY query_id ORDER BY cos_raw DESC, cand_id) AS rnk
       FROM scored
-    )
+    )"""
+
+
+# the top-3 neighbours per query, as x59 and x94 return them
+_IVF_TOP3 = """
     SELECT query_id, cand_id,
            FLOOR(cos_raw * 10000.0 + 0.5) / 10000.0 AS cosine,
            CAST(rnk AS INT) AS rnk
     FROM ranked WHERE rnk <= 3
 """
+
+_X59_ORACLE = _ivf_ranked_ctes(100) + _IVF_TOP3
 
 
 @query("x59_kmeans_ivf_topk", oracle=_X59_ORACLE)

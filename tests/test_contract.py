@@ -118,3 +118,32 @@ def test_boolean_cells_stringify_identically_across_engines():
         con.sql("SELECT TRUE AS v UNION ALL SELECT FALSE").df()
     )
     assert a == b == [("False",), ("True",)]
+
+
+def test_oracle_surface_is_frozen():
+    """The registry order and every oracle's SQL text are part of the
+    ``__spark_entry__`` contract: a refactor that builds oracles from
+    shared fragments must reproduce each string byte for byte.
+    ``oracle_surface.json`` holds ``list(QUERIES)`` and the sha256 of
+    each ``ORACLE_SQL`` string; regenerate it only when a change to the
+    surface is intended."""
+    import hashlib
+    import json
+
+    from detecting_and_addressing_change_spark.queries import (
+        ORACLE_SQL,
+        QUERIES,
+    )
+
+    with open(REPO_ROOT / "tests" / "oracle_surface.json") as f:
+        pinned = json.load(f)
+    assert list(QUERIES) == pinned["queries"]
+    got = {
+        name: hashlib.sha256(sql.encode()).hexdigest()
+        for name, sql in ORACLE_SQL.items()
+    }
+    assert list(got) == list(pinned["oracle_sql_sha256"])
+    changed = sorted(
+        n for n in got if got[n] != pinned["oracle_sql_sha256"][n]
+    )
+    assert not changed, f"oracle SQL text changed: {changed}"

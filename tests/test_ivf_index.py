@@ -332,12 +332,15 @@ def test_x94_x95_share_one_lifecycle_fixture(spark):
     call returns the same path without a rebuild — and the fixture is
     keyed per sf_dir so different scales never alias."""
     from detecting_and_addressing_change_spark.queries.extensions12 import (
-        _IVF_LIFECYCLE_FIXTURE,
         _ivf_lifecycle_index,
+    )
+    from detecting_and_addressing_change_spark.queries.registry import (
+        _SESSION_FIXTURES,
     )
 
     sf = "/root/testdata/sf0.001"
-    _IVF_LIFECYCLE_FIXTURE.clear()
+    for key in [k for k in _SESSION_FIXTURES if k[2] == "ivf_lifecycle"]:
+        del _SESSION_FIXTURES[key]
     p1, c1 = _ivf_lifecycle_index(spark, sf)
     mtimes = {
         f: os.path.getmtime(os.path.join(f"{p1}/postings", f))

@@ -199,6 +199,47 @@ def test_append_num_hashes_mismatch_fails_fast(spark, corpus, tmp_path):
         append_to_minhash_index(corpus, path, num_hashes=4)
 
 
+def test_index_of_another_hash_family_is_refused(spark, corpus, tmp_path):
+    """An index signed by another MinHash family (or written before the
+    family was recorded at its root) shares no band bucket with this
+    build's signatures, so a probe would silently find no near match:
+    append, edges and probe must refuse it. Compaction and delete keep
+    the recorded family."""
+    import os
+
+    from detecting_and_addressing_change_spark.operators.minhash_index import (
+        append_minhash_batch,
+        compact_minhash_index,
+        delete_from_minhash_index,
+        init_minhash_index,
+    )
+
+    path = str(tmp_path / "famidx")
+    batch = corpus.filter(F.col("doc_id") >= 20)
+    build_minhash_index(corpus.filter(F.col("doc_id") < 20), path)
+    compact_minhash_index(spark, path)
+    delete_from_minhash_index(
+        spark, path, corpus.filter(F.col("doc_id") == 3)
+    )
+    assert minhash_index_probe(spark, path, batch).count() > 0
+    marker = os.path.join(path, "_hash_family")
+    if os.path.exists(marker):
+        os.remove(marker)
+    with pytest.raises(ValueError, match="rebuild"):
+        append_to_minhash_index(batch, path)
+    with pytest.raises(ValueError, match="rebuild"):
+        minhash_index_probe(spark, path, batch)
+    with pytest.raises(ValueError, match="rebuild"):
+        minhash_index_edges(spark, path)
+
+    stream_path = str(tmp_path / "famstream")
+    init_minhash_index(spark, stream_path)
+    with open(os.path.join(stream_path, "_hash_family"), "w") as f:
+        f.write("km-v0")
+    with pytest.raises(ValueError, match="km-v0"):
+        append_minhash_batch(batch, 0, stream_path)
+
+
 def test_compact_preserves_edges_and_shrinks_files(spark, corpus, tmp_path):
     import glob
 
