@@ -21,8 +21,9 @@ detectors is free, SURVEY §4.3), sorted by ``seq_id`` *within* the group,
 and scanned sequentially by an Arrow-batched ``applyInPandas`` kernel.
 That shell (:func:`detector_scan`, with :func:`scan_group` as its per-group
 body) is shared by every sequential detector: any state class with
-``add_element(x) -> flag`` and a ``STATE_SCHEMA`` of its carried fields runs
-through it, batch here and streaming in ``streaming/ddm_stream.py``.
+``add_element(x) -> flag``, a ``STATE_SCHEMA`` of its carried fields and an
+``ERROR_RANGE`` of the inputs it accepts runs through it, batch here and
+streaming in ``streaming/ddm_stream.py``.
 """
 
 from __future__ import annotations
@@ -55,6 +56,8 @@ class DDMState:
             T.StructField("in_concept_change", T.BooleanType()),
         ]
     )
+    # the errors DDM accepts: p(1 - p) is a variance only for p in [0, 1]
+    ERROR_RANGE = (0.0, 1.0)
 
     min_num_instances: int = 30
     warning_level: float = 2.0
@@ -145,9 +148,30 @@ def scan_group(
 ) -> pd.DataFrame:
     """Sort one detector's rows by ``seq_col``, feed them through ``st`` in
     that order and return them as a ``DDM_OUTPUT_SCHEMA`` frame. The id is
-    the group key, so a null detector id stays null."""
-    pdf = pdf.sort_values(seq_col)
+    the group key, so a null detector id stays null.
+
+    Raises ``ValueError``, naming the key and the ``seq_id``, on a null or
+    NaN error, on an error outside ``st.ERROR_RANGE`` (``None``: any real
+    value) and on a ``seq_id`` that repeats within the key. Any of these
+    would otherwise feed the detector silently: one NaN makes every later
+    DDM comparison false, and tied rows have no defined order."""
+    pdf = pdf.sort_values(seq_col, kind="stable")
+    seqs = pdf[seq_col]
     errors = pdf[error_col].astype(float)
+    checks = [("null or NaN error", errors.isna())]
+    if st.ERROR_RANGE is not None:
+        lo, hi = st.ERROR_RANGE
+        checks.append(
+            (f"error outside [{lo}, {hi}]", (errors < lo) | (errors > hi))
+        )
+    checks.append(("repeated seq_id", seqs.duplicated()))
+    for what, bad in checks:
+        if bad.any():
+            i = bad.to_numpy().argmax()
+            raise ValueError(
+                f"detector {key[0]!r}: {what} at seq_id {seqs.iloc[i]}"
+                f" (error {errors.iloc[i]})"
+            )
     return pd.DataFrame(
         {
             "detector_id": [key[0]] * len(pdf),

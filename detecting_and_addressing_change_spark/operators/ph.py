@@ -43,6 +43,7 @@ class PageHinkleyState:
             T.StructField("cum_min", T.DoubleType()),
         ]
     )
+    ERROR_RANGE = None  # any real value
 
     delta: float = 0.005
     threshold: float = 1.0

@@ -12,6 +12,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+# HotSpot's tier-4 thresholds, 4x (the defaults are 5000, 600, 15000, 40000)
+TIER4_JAVA_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400"
+    " -XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000"
+)
+
 
 def get_spark(
     app_name: str = "detecting-and-addressing-change-spark",
@@ -50,6 +56,27 @@ def get_spark(
       logs still fail loudly on a concurrent writer. On HDFS, an
       overwrite-rename onto an existing state file keeps the old file,
       which is Spark's own behaviour on object stores.
+    - C2 (tier-4) compile thresholds 4x HotSpot's defaults in the driver
+      JVM, through ``spark.driver.defaultJavaOptions``. A warm pass runs
+      Catalyst, the scheduler and py4j a few hundred times, and the
+      streamed drain re-plans every micro-batch, so that code kept
+      crossing the default thresholds and being C2-compiled pass after
+      pass. On 4 cores the C2 threads alone took 4.5-6.9 of 11-15 CPU
+      seconds of a warm perfbench pass. With the higher thresholds that
+      lukewarm code stays in C1, while a data loop of millions of
+      iterations still crosses the back-edge threshold early in its first
+      task. C2 fell to 1.9 s a ``drift`` pass and 3.0-3.8 s a ``curate``
+      pass, and ``cpu_s`` by 30% and 21% (10 of 10 interleaved pairs
+      each), with ``pass_s``, ``setup_s`` and memory level and the same
+      jobs, stages and tasks (BENCH_NOTES "JIT tiering"). One-shot runs
+      of many plan shapes, like the test suite, show no gain. Not taken:
+      ``CompileThresholdScaling`` (delays C1 too: slower set-up), C2 only
+      (slower session start), C1 only and 8x (slower ``curate`` passes),
+      fewer compiler threads (no better). Spark puts
+      ``defaultJavaOptions`` before ``extraJavaOptions``, so a caller's
+      extra options still apply, and ``extra_conf`` can replace the key.
+      Only the driver JVM gets them: executor JVMs on a cluster are not
+      touched.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -69,6 +96,7 @@ def get_spark(
             "FileSystemBasedCheckpointFileManager",
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.defaultJavaOptions", TIER4_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -78,6 +106,38 @@ def get_spark(
     return spark
 
 
+def package_zip(pkg_dir: str, out_dir: str) -> str:
+    """Zip the ``.py`` files under ``pkg_dir`` into ``out_dir`` and return
+    the zip's path, ``daac_spark_pkg-<sha256[:16]>.zip`` of the zip's bytes.
+    Entries carry a fixed timestamp, so the same tree always gives the same
+    bytes and name, and a different tree a different name: a driver never
+    rewrites a zip that another driver has already shipped."""
+    import hashlib
+    import io
+    import zipfile
+
+    root = os.path.dirname(pkg_dir)
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        for dirpath, dirs, files in os.walk(pkg_dir):
+            dirs.sort()
+            for fn in sorted(files):
+                if fn.endswith(".py"):
+                    full = os.path.join(dirpath, fn)
+                    info = zipfile.ZipInfo(os.path.relpath(full, root))
+                    with open(full, "rb") as f:
+                        z.writestr(info, f.read())
+    data = buf.getvalue()
+    digest = hashlib.sha256(data).hexdigest()[:16]
+    zpath = os.path.join(out_dir, f"daac_spark_pkg-{digest}.zip")
+    if not os.path.exists(zpath):
+        tmp = zpath + f".{os.getpid()}.tmp"
+        with open(tmp, "wb") as f:
+            f.write(data)
+        os.replace(tmp, zpath)
+    return zpath
+
+
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via addPyFile.
 
@@ -85,23 +145,13 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     unpickle on workers and import this package; when the driver process was
     launched from another cwd (as the harness may be), workers can't see it.
     A zip of the package shipped through the SparkContext makes the engine
-    self-contained regardless of PYTHONPATH. Idempotent per session."""
+    self-contained regardless of PYTHONPATH. The zip is named after its
+    contents (:func:`package_zip`), so drivers started from different
+    checkouts share ``$TMPDIR`` without overwriting each other's zip.
+    Idempotent per session."""
     if getattr(spark, "_daac_pkg_shipped", False):
         return
-    import zipfile
-
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"), "daac_spark_pkg.zip"
-    )
-    tmp = zpath + f".{os.getpid()}.tmp"
-    with zipfile.ZipFile(tmp, "w") as z:
-        for dirpath, _, files in os.walk(pkg_dir):
-            for fn in sorted(files):
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    z.write(full, os.path.relpath(full, root))
-    os.replace(tmp, zpath)
+    zpath = package_zip(pkg_dir, os.environ.get("TMPDIR", "/tmp"))
     spark.sparkContext.addPyFile(zpath)
     spark._daac_pkg_shipped = True  # type: ignore[attr-defined]

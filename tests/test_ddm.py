@@ -4,14 +4,19 @@ drift points, across partition counts, and in parallel across detectors."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
+import pandas as pd
 import pytest
 
 from detecting_and_addressing_change_spark.operators.ddm import (
     DDMState,
     ddm_scan,
     detect_drift,
+    scan_group,
 )
+from detecting_and_addressing_change_spark.operators.ph import PageHinkleyState
 
 
 def fixture_series(seed: int = 42, n: int = 1000) -> list[float]:
@@ -87,3 +92,66 @@ def test_spark_matches_kernel(spark, partitions):
         by_det.setdefault(r["detector_id"], []).append(r["flag"])
     for det, seed in [("d1", 42), ("d2", 1), ("d3", 2), ("d4", 3)]:
         assert by_det[det] == ddm_scan(fixture_series(seed=seed)), det
+
+
+# --------------------------------------------------------------------------
+# Input contract: scan_group refuses what would feed the detector silently
+# --------------------------------------------------------------------------
+def _series_frame(errs, seqs=None):
+    seqs = list(range(len(errs))) if seqs is None else seqs
+    return pd.DataFrame({"seq_id": seqs, "error": errs})
+
+
+_STEP = [0.1] * 60 + [0.9] * 40  # drift flagged at index 65
+
+
+def test_scan_group_flags_clean_step():
+    out = scan_group(
+        ("k",), _series_frame(_STEP), DDMState(), "seq_id", "error"
+    )
+    assert list(out["flag"]).index("D") == 65
+
+
+@pytest.mark.parametrize(
+    "bad, what",
+    [(float("nan"), "null or NaN error"), (7.0, "outside [0.0, 1.0]")],
+)
+def test_scan_group_refuses_bad_error(bad, what):
+    errs = list(_STEP)
+    errs[10] = bad
+    pattern = rf"'k'.*{re.escape(what)}.*seq_id 10\b"
+    with pytest.raises(ValueError, match=pattern):
+        scan_group(("k",), _series_frame(errs), DDMState(), "seq_id", "error")
+
+
+def test_scan_group_refuses_repeated_seq_id():
+    seqs = list(range(len(_STEP)))
+    seqs[11] = 10
+    pattern = r"'k'.*repeated seq_id at seq_id 10\b"
+    with pytest.raises(ValueError, match=pattern):
+        scan_group(
+            ("k",), _series_frame(_STEP, seqs), DDMState(), "seq_id", "error"
+        )
+
+
+def test_page_hinkley_takes_any_real_value():
+    errs = list(_STEP)
+    errs[10] = 7.0
+    out = scan_group(
+        ("k",), _series_frame(errs), PageHinkleyState(), "seq_id", "error"
+    )
+    assert len(out) == len(errs)
+
+
+def test_spark_null_error_raises(spark):
+    from detecting_and_addressing_change_spark.sources.tables import (
+        local_table,
+    )
+
+    rows = [("d1", i, e) for i, e in enumerate(_STEP)]
+    rows[10] = ("d1", 10, None)
+    df = local_table(
+        spark, rows, "detector_id string, seq_id long, error double"
+    )
+    with pytest.raises(Exception, match=r"null or NaN error at seq_id 10\b"):
+        detect_drift(df).collect()

@@ -118,6 +118,8 @@ def test_detector_fleet_parallelism(spark):
         s = list(0.1 + 0.03 * rng.randn(flip)) + list(
             0.6 + 0.03 * rng.randn(280 - flip)
         )
+        # error rates: DDM refuses values outside [0, 1]
+        s = list(np.clip(s, 0.0, 1.0))
         det = f"d{k}" if k else None
         series[det] = s
         rows += [(det, i, float(v)) for i, v in enumerate(s)]
