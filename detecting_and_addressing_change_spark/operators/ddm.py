@@ -155,6 +155,7 @@ def scan_group(
     value) and on a ``seq_id`` that repeats within the key. Any of these
     would otherwise feed the detector silently: one NaN makes every later
     DDM comparison false, and tied rows have no defined order."""
+    # ties raise below; stable only fixes which tied row the error reports
     pdf = pdf.sort_values(seq_col, kind="stable")
     seqs = pdf[seq_col]
     errors = pdf[error_col].astype(float)

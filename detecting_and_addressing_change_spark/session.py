@@ -68,15 +68,23 @@ def get_spark(
       task. C2 fell to 1.9 s a ``drift`` pass and 3.0-3.8 s a ``curate``
       pass, and ``cpu_s`` by 30% and 21% (10 of 10 interleaved pairs
       each), with ``pass_s``, ``setup_s`` and memory level and the same
-      jobs, stages and tasks (BENCH_NOTES "JIT tiering"). One-shot runs
-      of many plan shapes, like the test suite, show no gain. Not taken:
+      jobs, stages and tasks (BENCH_NOTES "JIT tiering"). A one-shot run
+      of many plan shapes, like the driver's sweep, has nothing to gain
+      and its loss is unresolved: ``tests/test_oracle_queries.py`` (about
+      190 plans, each run once or twice) took a median 1.6% longer than
+      at the default thresholds in 6 interleaved pairs, slower in 4,
+      inside the default's own run-to-run spread; 2x was slower still.
+      Not taken:
       ``CompileThresholdScaling`` (delays C1 too: slower set-up), C2 only
       (slower session start), C1 only and 8x (slower ``curate`` passes),
       fewer compiler threads (no better). Spark puts
       ``defaultJavaOptions`` before ``extraJavaOptions``, so a caller's
-      extra options still apply, and ``extra_conf`` can replace the key.
-      Only the driver JVM gets them: executor JVMs on a cluster are not
-      touched.
+      extra options still apply. The builder's value reaches spark-submit
+      as ``--conf``, which wins over ``spark-defaults.conf``: a site-level
+      ``spark.driver.defaultJavaOptions`` is replaced, not extended. To
+      keep one, pass it with ``TIER4_JAVA_OPTIONS`` appended through
+      ``extra_conf``, which replaces the key. Only the driver JVM gets
+      the flags: executor JVMs on a cluster are not touched.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")

@@ -8,6 +8,14 @@ replay source does); rows arriving out of order ACROSS batches would be a
 semantic error for DDM, as it is for the reference's strictly-ordered
 stream (``streams/stream_data.py:116-157``).
 
+Each micro-batch goes through the batch operator's ``scan_group``, so its
+input checks hold within a batch: a null or NaN error, an error outside
+the state class's ``ERROR_RANGE`` or a ``seq_id`` repeated within a key in
+one micro-batch raises, which fails that batch and stops the query with a
+``StreamingQueryException`` naming the key and the ``seq_id``. Order and
+repeats ACROSS batches are not checked: that needs the last ``seq_id`` in
+the group state, a ``STATE_SCHEMA`` change.
+
 Batch/stream parity (SURVEY §5.2.5): with the same ordered input this emits
 exactly what ``operators.ddm.detect_drift`` emits — pinned by
 tests/test_streaming.py.

@@ -112,31 +112,34 @@ def test_scan_group_flags_clean_step():
     assert list(out["flag"]).index("D") == 65
 
 
+def _with(values, i, value):
+    out = list(values)
+    out[i] = value
+    return out
+
+
+_SEQS = list(range(len(_STEP)))
+
+
 @pytest.mark.parametrize(
-    "bad, what",
-    [(float("nan"), "null or NaN error"), (7.0, "outside [0.0, 1.0]")],
+    "errs, seqs, what",
+    [
+        (_with(_STEP, 10, float("nan")), _SEQS, "null or NaN error"),
+        (_with(_STEP, 10, 7.0), _SEQS, "error outside [0.0, 1.0]"),
+        (_STEP, _with(_SEQS, 11, 10), "repeated seq_id"),
+    ],
+    ids=["nan", "out_of_range", "repeated_seq_id"],
 )
-def test_scan_group_refuses_bad_error(bad, what):
-    errs = list(_STEP)
-    errs[10] = bad
-    pattern = rf"'k'.*{re.escape(what)}.*seq_id 10\b"
-    with pytest.raises(ValueError, match=pattern):
-        scan_group(("k",), _series_frame(errs), DDMState(), "seq_id", "error")
-
-
-def test_scan_group_refuses_repeated_seq_id():
-    seqs = list(range(len(_STEP)))
-    seqs[11] = 10
-    pattern = r"'k'.*repeated seq_id at seq_id 10\b"
+def test_scan_group_refuses_bad_input(errs, seqs, what):
+    pattern = rf"'k'.*{re.escape(what)} at seq_id 10\b"
     with pytest.raises(ValueError, match=pattern):
         scan_group(
-            ("k",), _series_frame(_STEP, seqs), DDMState(), "seq_id", "error"
+            ("k",), _series_frame(errs, seqs), DDMState(), "seq_id", "error"
         )
 
 
 def test_page_hinkley_takes_any_real_value():
-    errs = list(_STEP)
-    errs[10] = 7.0
+    errs = _with(_STEP, 10, 7.0)
     out = scan_group(
         ("k",), _series_frame(errs), PageHinkleyState(), "seq_id", "error"
     )

@@ -477,6 +477,44 @@ def test_detector_stream_restart_carries_state(spark, error_rows, split):
         assert batch[key] == flag, key
 
 
+def test_detector_stream_refuses_nan_error(spark):
+    """The batch input contract holds within a micro-batch: a NaN error
+    fails its batch and stops the query, naming the detector and seq_id."""
+    from pyspark.errors import StreamingQueryException
+
+    from detecting_and_addressing_change_spark.sources.tables import (
+        local_table,
+    )
+    from detecting_and_addressing_change_spark.streaming.ddm_stream import (
+        detect_drift_stream,
+    )
+    from detecting_and_addressing_change_spark.streaming.replay import (
+        read_replay_stream,
+        stage_replay_files,
+    )
+
+    schema = "detector_id string, seq_id long, error double"
+    rows = [("d1", i, 0.1 if i < 60 else 0.9) for i in range(100)]
+    rows[10] = ("d1", 10, float("nan"))
+    with tempfile.TemporaryDirectory() as tmp:
+        staged = f"{tmp}/staged"
+        stage_replay_files(
+            local_table(spark, rows, schema), "seq_id", staged, batch_size=50
+        )
+        q = (
+            detect_drift_stream(read_replay_stream(spark, staged, schema))
+            .writeStream.foreachBatch(lambda bdf, _epoch: bdf.collect())
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        with pytest.raises(
+            StreamingQueryException,
+            match=r"detector 'd1': null or NaN error at seq_id 10\b",
+        ):
+            q.awaitTermination(120)
+
+
 def test_count_window_agg_streaming_parity(spark):
     """operators/windows.py claims count windows are 'identical in batch
     and streaming mode' — pin it: the same count_window_agg over a
