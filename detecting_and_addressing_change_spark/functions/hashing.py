@@ -85,11 +85,13 @@ def md5_pct_col(key: Column) -> Column:
 
 def rolling_fingerprint_udf(window: int = 8, base: int = 257, mod: int = 1_000_000_007):
     """Vectorized (Arrow-batched) rolling-hash fingerprint: MIN over all
-    window hashes of the character stream — numerically identical to
-    ``rolling_hash_col`` for ASCII text, but computed with `window` numpy
-    ops per document instead of an O(len*window) Catalyst expression tree
-    (~10x faster at sf0.1). The expression variant remains the
-    cross-engine-audited definition; this is the production path."""
+    window hashes of the character stream, each window folded left to
+    right as (acc * base + ascii(char)) % mod, computed with `window`
+    numpy ops per document instead of an O(len*window) Catalyst
+    expression tree. NULL for a null text or one shorter than `window`,
+    which has no full window (x13's oracle: its generate_series is
+    empty). tests/test_kernel_conformance.py checks it against that
+    oracle on edge inputs."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -97,43 +99,19 @@ def rolling_fingerprint_udf(window: int = 8, base: int = 257, mod: int = 1_000_0
     # NB: `from __future__ import annotations` stringifies hints, which
     # pandas_udf cannot resolve — set real annotations explicitly.
     def fp(texts):
-        out = np.empty(len(texts), dtype=np.int64)
-        for i, s in enumerate(texts):
+        out = []
+        for s in texts:
+            if not isinstance(s, str) or len(s) < window:
+                out.append(None)
+                continue
             # match ascii(char-of-split): per-codepoint, not per-byte
-            b = np.array([ord(c) for c in (s or "")], dtype=np.int64)
-            w = min(window, len(b)) if len(b) else 0
-            if w == 0:
-                out[i] = 0
-                continue
-            if len(b) == w:
-                h = 0
-                for c in b:
-                    h = (h * base + int(c)) % mod
-                out[i] = h
-                continue
-            sw = np.lib.stride_tricks.sliding_window_view(b, w)
+            b = np.array([ord(c) for c in s], dtype=np.int64)
+            sw = np.lib.stride_tricks.sliding_window_view(b, window)
             h = np.zeros(len(sw), dtype=np.int64)
-            for j in range(w):
+            for j in range(window):
                 h = (h * base + sw[:, j]) % mod
-            out[i] = int(h.min())
-        return pd.Series(out)
+            out.append(int(h.min()))
+        return pd.Series(out, dtype="Int64")
 
     fp.__annotations__ = {"texts": pd.Series, "return": pd.Series}
     return pandas_udf(fp, "long")
-
-
-def rolling_hash_col(text: Column, window: int = 8, base: int = 257, mod: int = 1_000_000_007) -> Column:
-    """Polynomial rolling hash over the character stream (document
-    fingerprinting, winnowing-style). Returns the MIN of all window hashes —
-    a single stable fingerprint per document. ascii() of each char; folds
-    left-to-right, exact int64 arithmetic (mod keeps products < 2^60)."""
-    chars = F.split(text, "")
-    n = F.size(chars)
-    cnt = F.greatest(n - (window - 1), F.lit(1))
-    window_hash = lambda i: F.aggregate(  # noqa: E731
-        F.slice(chars, i, window),
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
-    )
-    hashes = F.transform(F.sequence(F.lit(1), cnt), window_hash)
-    return F.array_min(hashes)

@@ -81,11 +81,10 @@ def range_join_bins(
     value_col: str,
     lo_col: str = "lo",
     hi_col: str = "hi",
-    broadcast_bins: bool = True,
 ) -> DataFrame:
     """facts x bins on lo <= value < hi. Small bin tables broadcast (the
     non-equi predicate runs map-side, no shuffle of facts)."""
-    b = F.broadcast(bins) if broadcast_bins else bins
+    b = F.broadcast(bins)
     return facts.join(
         b,
         (facts[value_col] >= b[lo_col]) & (facts[value_col] < b[hi_col]),

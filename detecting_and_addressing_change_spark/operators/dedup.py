@@ -255,10 +255,11 @@ def tier_cap(
 def minhash_candidate_pairs(
     bands: DataFrame,
     id_col: str = "doc_id",
-    bucket_cap: int | None = None,
+    *,
+    bucket_cap: int,
 ) -> DataFrame:
-    """Self-join within (band, bucket); distinct (a < b) pairs. The join key
-    is the bucket hash, so only genuinely colliding docs meet.
+    """Distinct (a < b) pairs that share a (band, bucket); the key is the
+    bucket hash, so only genuinely colliding docs meet.
 
     ``bucket_cap`` (the HOT-BUCKET GUARD) bounds the quadratic blow-up of a
     degenerate bucket — on real crawl data millions of near-identical
@@ -280,64 +281,40 @@ def minhash_candidate_pairs(
     linear in bucket width. The documented cost: candidates beyond the cap
     inside one tier are dropped, so byte-identical mass duplicates MUST be
     collapsed before banding (``minhash_dedup_edges`` does both).
-
-    Laziness contract (ADVICE r17): the UNCAPPED path (``bucket_cap=None``)
-    eagerly materializes the band table via ``localCheckpoint(eager=True)``
-    at plan-construction time — building the returned DataFrame fires a
-    Spark job even if the caller never evaluates it, and the materialized
-    blocks stay pinned for the session. The capped path (every production
-    caller) stays side-effect-free.
+    Building the returned DataFrame runs no Spark job.
     """
-    if bucket_cap is not None:
-        hx = F.col("sig_h")
-        bands = tier_cap(
-            bands, ["band", "bucket"], hx, bucket_cap, id_col
-        ).select(id_col, "band", "bucket", "__tier")
-        # capped buckets hold <= bucket_cap ids, so the within-bucket
-        # pairs come from ONE grouped collect + local array expansion
-        # instead of a bucket-keyed self-join (r17, guide §2.4 remove
-        # shuffles / §7.2 duplicated subtrees): the a/b self-join
-        # aliased the id column differently per side, so ReuseExchange
-        # could not unify them and the WHOLE upstream pipeline — corpus
-        # scan, collapse window, shingle explode, signature agg, band
-        # generate, tier windows — executed twice (verified in
-        # plans/r17/x04_minhash_pairs_before.txt: operators 8-32 and
-        # 33-57 are the same subtree, zero ReusedExchange), then paid
-        # TWO join exchanges. The grouped form evaluates the pipeline
-        # once and shuffles the (keys, id) rows once; collect_list is
-        # bounded by the cap, so no task holds more than
-        # bucket_cap longs per bucket. sort_array gives a_id < b_id.
-        ids = bands.groupBy("band", "bucket", "__tier").agg(
-            F.sort_array(F.collect_list(F.col(id_col))).alias("ids")
-        )
-        return (
-            ids.select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ids, (a, i) -> transform("
-                        "slice(ids, i + 2, size(ids)),"
-                        " b -> named_struct('a_id', a, 'b_id', b))))"
-                    )
-                ).alias("p")
-            )
-            .select("p.a_id", "p.b_id")
-            .distinct()
-        )
-    # UNCAPPED path (bounded inputs only — production callers all cap):
-    # bucket width is unbounded, so a grouped collect could hold an
-    # arbitrarily wide bucket in one task; keep the spilling self-join,
-    # but materialize the band table ONCE so the upstream pipeline does
-    # not execute per side (guide §7.2; the a/b aliasing defeats
-    # ReuseExchange). The table is (id, band, bucket) — n_bands rows per
-    # doc, no text.
-    keys = ["band", "bucket"]
-    bands = bands.select(id_col, *keys).localCheckpoint(eager=True)
-    a = bands.select(*keys, F.col(id_col).alias("a_id"))
-    b = bands.select(*keys, F.col(id_col).alias("b_id"))
+    hx = F.col("sig_h")
+    bands = tier_cap(
+        bands, ["band", "bucket"], hx, bucket_cap, id_col
+    ).select(id_col, "band", "bucket", "__tier")
+    # capped buckets hold <= bucket_cap ids, so the within-bucket
+    # pairs come from ONE grouped collect + local array expansion
+    # instead of a bucket-keyed self-join (r17, guide §2.4 remove
+    # shuffles / §7.2 duplicated subtrees): the a/b self-join
+    # aliased the id column differently per side, so ReuseExchange
+    # could not unify them and the WHOLE upstream pipeline — corpus
+    # scan, collapse window, shingle explode, signature agg, band
+    # generate, tier windows — executed twice (verified in
+    # plans/r17/x04_minhash_pairs_before.txt: operators 8-32 and
+    # 33-57 are the same subtree, zero ReusedExchange), then paid
+    # TWO join exchanges. The grouped form evaluates the pipeline
+    # once and shuffles the (keys, id) rows once; collect_list is
+    # bounded by the cap, so no task holds more than
+    # bucket_cap longs per bucket. sort_array gives a_id < b_id.
+    ids = bands.groupBy("band", "bucket", "__tier").agg(
+        F.sort_array(F.collect_list(F.col(id_col))).alias("ids")
+    )
     return (
-        a.join(b, keys)
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
+        ids.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ids, (a, i) -> transform("
+                    "slice(ids, i + 2, size(ids)),"
+                    " b -> named_struct('a_id', a, 'b_id', b))))"
+                )
+            ).alias("p")
+        )
+        .select("p.a_id", "p.b_id")
         .distinct()
     )
 
@@ -393,36 +370,6 @@ def minhash_dedup_edges(
     return chains.unionByName(rep_pairs)
 
 
-def simhash_col(text: Column, n_bits: int = 16) -> Column:
-    """SimHash over word features: bit b of the fingerprint is the sign of
-    sum over words of (+1 if bit b of md5_u16(word) else -1).
-
-    Implemented as pure higher-order functions: hash every word ONCE into a
-    16-bit int array, then fold that array per bit; 16 bits keeps the
-    expression tree small for the oracle-checked variant (the operator is
-    bit-width-parametric)."""
-    ws = F.split(text, " ")
-    hashed = F.transform(
-        ws,
-        lambda w: F.conv(F.substring(F.md5(w), 1, 4), 16, 10).cast("int"),
-    )
-
-    # NB: pyspark passes a Column for EVERY named lambda parameter
-    # (including defaults), so the bit index must be closed over via a
-    # factory, never a default argument.
-    def bit_folder(bit: int):
-        mask = F.lit(1 << bit)
-        return lambda acc, h: acc + F.when(
-            h.bitwiseAND(mask) > 0, F.lit(1)
-        ).otherwise(F.lit(-1))
-
-    out = F.lit(0)
-    for b in range(n_bits):
-        contrib = F.aggregate(hashed, F.lit(0), bit_folder(b))
-        out = out + F.when(contrib > 0, F.lit(1 << b)).otherwise(F.lit(0))
-    return out.cast("int")
-
-
 def simhash_df(
     df: DataFrame,
     text_col: str = "text",
@@ -432,10 +379,10 @@ def simhash_df(
     """SimHash as a relational pipeline: explode words -> hash each word
     ONCE -> one groupBy(id) with n_bits conditional sums -> assemble bits.
 
-    This is the scale formulation (the expression-tree variant in
-    ``simhash_col`` re-evaluates the hashed-word array once per bit): the
-    explode is linear, the aggregation is map-side combinable, and the
-    word hash is computed exactly once per token."""
+    The explode is linear, the aggregation is map-side combinable, and
+    the word hash is computed exactly once per token. x05's DuckDB
+    oracle is the reference; tests/test_kernel_conformance.py checks the
+    two on edge inputs."""
     from ..sources.tables import spread_small_input
 
     words = spread_small_input(df).select(

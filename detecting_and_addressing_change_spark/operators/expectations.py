@@ -58,7 +58,6 @@ def check(
     rules: list[Rule],
     unique_keys: list[list[str]] | None = None,
     foreign_keys: list[tuple[list[str], DataFrame, list[str]]] | None = None,
-    broadcast_parents: bool = True,
 ) -> DataFrame:
     """DataFrame[rule, violations, pass] for the whole suite.
 
@@ -66,10 +65,8 @@ def check(
     - ``unique_keys``: column sets that must be unique — one groupBy per
       key set, counting rows beyond the first per duplicate key.
     - ``foreign_keys``: (child_cols, parent_df, parent_cols) — orphan
-      count via anti-join. ``broadcast_parents=True`` (the default) hints
-      broadcast — right for dim-sized parents; pass False for a
-      fact-sized parent so the optimizer picks a shuffle anti-join
-      instead of collecting the full key set to the driver.
+      count via a broadcast anti-join, so the parent key set must be
+      dim-sized.
     """
     if not rules and not unique_keys and not foreign_keys:
         raise ValueError("check(): empty expectation suite")
@@ -117,10 +114,8 @@ def check(
                 for cc, pc in zip(child_cols, parent_cols)
             ]
         ).distinct()
-        if broadcast_parents:
-            pk = F.broadcast(pk)
         orphans = (
-            df.join(pk, child_cols, "left_anti")
+            df.join(F.broadcast(pk), child_cols, "left_anti")
             .agg(F.count(F.lit(1)).alias("violations"))
             .select(
                 F.lit(

@@ -122,71 +122,39 @@ def _cells_table_sql(
 
 
 def kmeans_assign_col(
-    centroids: list[tuple[int, list[int]]], qv: Column | str
+    centroids: list[tuple[int, list[int]]], qv: str
 ) -> Column:
     """Argmin cell id over the broadcast quantized centroids: struct-min
     on (distance, centroid_id) — lowest distance wins, ties to lowest id.
 
-    ``qv``: the quantized-vector column NAME (fast path — the whole
-    expression is one parsed SQL string) or a Column (the expression is
-    built as a py4j Column graph via ``_cells_col`` — same result,
-    slower to construct on the driver). String-named inputs auto-route
-    between the unrolled and table forms on k (VERDICT r12 #3; see
-    ASSIGN_TABLE_ROUTE_K above)."""
-    if isinstance(qv, str):
-        if len(centroids) >= ASSIGN_TABLE_ROUTE_K:
-            return F.expr(
-                f"array_min({_cells_table_sql(centroids, qv)})['cid']"
-            ).cast("int")
+    ``qv``: the quantized-vector column NAME; the whole expression is one
+    parsed SQL string. Auto-routes between the unrolled and table forms
+    on k (VERDICT r12 #3; see ASSIGN_TABLE_ROUTE_K above). x58's DuckDB
+    oracle replays the same argmin; tests/test_kmeans.py pins both routes
+    against a Python (distance, cid) argmin."""
+    if len(centroids) >= ASSIGN_TABLE_ROUTE_K:
         return F.expr(
-            f"array_min({_cells_sql(centroids, qv)})['cid']"
+            f"array_min({_cells_table_sql(centroids, qv)})['cid']"
         ).cast("int")
-    return F.array_min(_cells_col(centroids, qv))["cid"].cast("int")
-
-
-def _sqdist(qc: list[int], qv_col: Column) -> Column:
-    """Column-input twin of :func:`_sqdist_sql` (one F.expr literal array
-    per centroid, then JVM-side zip_with/aggregate)."""
-    qc_arr = F.expr("array(" + ",".join(f"{int(c)}L" for c in qc) + ")")
-    return F.aggregate(
-        F.zip_with(qc_arr, qv_col, lambda c, x: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _cells_col(
-    centroids: list[tuple[int, list[int]]], qv_col: Column
-) -> Column:
-    return F.array(
-        *[
-            F.struct(
-                _sqdist(qc, qv_col).alias("d"), F.lit(int(cid)).alias("cid")
-            )
-            for cid, qc in centroids
-        ]
-    )
+    return F.expr(
+        f"array_min({_cells_sql(centroids, qv)})['cid']"
+    ).cast("int")
 
 
 def kmeans_probe_cells_col(
-    centroids: list[tuple[int, list[int]]], qv: Column | str, nprobe: int
+    centroids: list[tuple[int, list[int]]], qv: str, nprobe: int
 ) -> Column:
     """The nprobe nearest cell ids (distance asc, ties to lowest id) —
     the multi-probe recall knob, same tie rule as assignment. Auto-routes
     on k like :func:`kmeans_assign_col`."""
-    if isinstance(qv, str):
-        cells = (
-            _cells_table_sql(centroids, qv)
-            if len(centroids) >= ASSIGN_TABLE_ROUTE_K
-            else _cells_sql(centroids, qv)
-        )
-        return F.expr(
-            f"transform(slice(array_sort({cells}),"
-            f" 1, {int(nprobe)}), s -> cast(s.cid as int))"
-        )
-    return F.transform(
-        F.slice(F.array_sort(_cells_col(centroids, qv)), 1, nprobe),
-        lambda s: s["cid"].cast("int"),
+    cells = (
+        _cells_table_sql(centroids, qv)
+        if len(centroids) >= ASSIGN_TABLE_ROUTE_K
+        else _cells_sql(centroids, qv)
+    )
+    return F.expr(
+        f"transform(slice(array_sort({cells}),"
+        f" 1, {int(nprobe)}), s -> cast(s.cid as int))"
     )
 
 

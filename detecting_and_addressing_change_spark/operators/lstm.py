@@ -205,69 +205,6 @@ def init_hash_weights(
     return ws
 
 
-def forward_one_portable(ws: LSTMWeights, tokens) -> list[float]:
-    """Bit-portable forward pass (pure Python / libm). Semantically the
-    same network as ``LSTMWeights.forward_one``; numerically it fixes the
-    summation order so a SQL engine can reproduce every bit."""
-    hid = ws.hidden
-    h_seq = [[float(v) for v in t] for t in tokens]
-    for layer in range(len(ws.w)):
-        w = ws.w[layer].tolist()
-        u = ws.u[layer].tolist()
-        b = ws.b[layer].tolist()
-        h = [0.0] * hid
-        c = [0.0] * hid
-        outs = []
-        for x in h_seq:
-            g = []
-            for j in range(4 * hid):
-                sx = 0.0
-                for i in range(len(x)):
-                    sx += x[i] * w[i][j]
-                sh = 0.0
-                for k in range(hid):
-                    sh += h[k] * u[k][j]
-                g.append(sx + sh + b[j])
-            nc = []
-            nh = []
-            for d in range(hid):
-                i_g = 1.0 / (1.0 + math.exp(-g[d]))
-                f_g = 1.0 / (1.0 + math.exp(-g[hid + d]))
-                g_g = 1.0 - 2.0 / (math.exp(2.0 * g[2 * hid + d]) + 1.0)
-                o_g = 1.0 / (1.0 + math.exp(-g[3 * hid + d]))
-                cd = f_g * c[d] + i_g * g_g
-                nc.append(cd)
-                nh.append(o_g * (1.0 - 2.0 / (math.exp(2.0 * cd) + 1.0)))
-            h, c = nh, nc
-            outs.append(h)
-        h_seq = outs
-    # R7 signed abs-max pooling, first-max ties (strict > keeps earlier)
-    pooled = []
-    for d in range(hid):
-        best = h_seq[0][d]
-        for t_i in range(1, len(h_seq)):
-            if abs(h_seq[t_i][d]) > abs(best):
-                best = h_seq[t_i][d]
-        pooled.append(best)
-    head_w = ws.head_w.tolist()
-    head_b = ws.head_b.tolist()
-    logits = []
-    for cls in range(len(head_b)):
-        s = 0.0
-        for d in range(hid):
-            s += pooled[d] * head_w[d][cls]
-        logits.append(s + head_b[cls])
-    m = logits[0]
-    for v in logits[1:]:
-        if v > m:
-            m = v
-    se = 0.0
-    for v in logits:
-        se += math.exp(v - m)
-    lse = math.log(se)
-    return [(v - m) - lse for v in logits]
-
-
 def lstm_predict_portable(
     df: DataFrame,
     weights: LSTMWeights,
@@ -318,7 +255,8 @@ def forward_batch_portable(
     ws: LSTMWeights, token_batch: list[list[list[float]]]
 ) -> list[list[float]]:
     """Vectorized-portable forward: bit-identical to running
-    ``forward_one_portable`` per row, ~10x faster.
+    ``tools/pure_kernels.py::forward_one_portable`` per row (pinned in
+    tests/test_lstm.py), ~10x faster.
 
     Rows are grouped by sequence length; within a group the fold loops
     run as numpy ELEMENTWISE ops across rows (per-row operation order is

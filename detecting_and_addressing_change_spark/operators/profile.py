@@ -8,10 +8,9 @@ wide aggregate (every statistic for every column in the same
 a 100-column profile over 100 TB is still exactly one pass + one
 O(columns) melt, not 100 scans.
 
-Distinct counts use exact `countDistinct` here because the profile sits
-on the DuckDB oracle gate; at real scale swap `exact_distinct=False` to
-get HyperLogLog (`approx_count_distinct`, no per-column shuffle) — same
-shape, ±2% cardinalities.
+Distinct counts use exact `countDistinct` because the profile sits on
+the DuckDB oracle gate (x22); an approximate profile would need its own
+oracle tolerance, so none is offered.
 
 No reference counterpart (the reference never validates its inputs —
 SURVEY §8); extension family per SURVEY §2.9.
@@ -26,7 +25,6 @@ from pyspark.sql import functions as F
 def profile_table(
     df: DataFrame,
     cols: list[str],
-    exact_distinct: bool = True,
     decimal_pin: dict[str, int] | None = None,
 ) -> DataFrame:
     """Long-format profile `(column, n_rows, n_null, n_distinct, min_s,
@@ -51,11 +49,7 @@ def profile_table(
         aggs += [
             F.count(F.lit(1)).alias(f"{c}__n"),
             F.sum(col.isNull().cast("long")).alias(f"{c}__null"),
-            (
-                F.countDistinct(col)
-                if exact_distinct
-                else F.approx_count_distinct(col)
-            ).alias(f"{c}__dist"),
+            F.countDistinct(col).alias(f"{c}__dist"),
             _str(F.min(col), c).alias(f"{c}__min"),
             _str(F.max(col), c).alias(f"{c}__max"),
         ]

@@ -478,34 +478,6 @@ def _fingerprint_agg(pairs: DataFrame, route: str, volume: int, budget: int) -> 
     )
 
 
-def ssjoin_routing_audit(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    shingle_size: int = 3,
-    budget_rows: int | None = None,
-    route: str = "auto",
-    **minhash_kwargs,
-) -> DataFrame:
-    """One-row audit of an adaptive join run: DataFrame[route,
-    candidate_volume, budget_rows, n_pairs, sum_jac_q] — see
-    :func:`_fingerprint_agg`."""
-    pairs, info = adaptive_jaccard_join(
-        df,
-        text_col=text_col,
-        id_col=id_col,
-        threshold=threshold,
-        shingle_size=shingle_size,
-        budget_rows=budget_rows,
-        route=route,
-        **minhash_kwargs,
-    )
-    return _fingerprint_agg(
-        pairs, info["route"], info["candidate_volume"], info["budget_rows"]
-    )
-
-
 def ssjoin_routing_audit_modes(
     df: DataFrame,
     text_col: str = "text",
@@ -518,15 +490,14 @@ def ssjoin_routing_audit_modes(
     bucket_cap: int = 64,
 ) -> DataFrame:
     """Two-row audit — mode 'auto' plus mode 'forced_minhash' — sharing
-    ONE tokenize/prefix/volume pass (r17, guide §1.2/§7.2): the previous
-    x90 shape called :func:`ssjoin_routing_audit` twice when auto routed
-    'exact', so the collapse window, shingle checkpoint, prefix windows
-    and volume aggregate all executed twice for rows that by definition
-    describe the SAME corpus. Semantics are unchanged: each row is
-    exactly :func:`ssjoin_routing_audit`'s row for that mode, and when
-    auto routes 'minhash' the forced row remains a literal copy of the
-    auto row (the two modes are the same deterministic computation
-    then — the pipeline still runs ONCE, as before).
+    ONE tokenize/prefix/volume pass (r17, guide §1.2/§7.2), so the
+    collapse window, shingle checkpoint, prefix windows and volume
+    aggregate run once for rows that describe the SAME corpus. Each row
+    is :func:`_fingerprint_agg` over :func:`adaptive_jaccard_join`'s
+    pairs for that mode (route 'auto' and route 'minhash'), checked so
+    in tests/test_setjoin.py; when auto routes 'minhash' the forced row
+    is a literal copy of the auto row (the two modes are the same
+    deterministic computation then — the pipeline runs ONCE).
 
     EAGER EXECUTION (ADVICE r17): constructing the returned DataFrame
     already runs the full forced-minhash pipeline driver-side (the

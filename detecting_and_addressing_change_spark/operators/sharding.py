@@ -221,8 +221,9 @@ def rendezvous_shard_col(
     ASSIGN_TABLE_ROUTE_K): a CONSTANT-size expression tree at any shard
     count — n_shards is data inside the sequence, not n unrolled code
     terms, so Catalyst analysis cost does not grow with the shard count
-    (parity vs the unrolled form pinned in tests/test_sharding.py;
-    analysis-cost numbers in BENCH_NOTES r14) — and a zero-shuffle
+    (parity vs :func:`rendezvous_shard_sql` pinned in
+    tests/test_sharding.py; analysis-cost numbers in BENCH_NOTES r14) —
+    and a zero-shuffle
     narrow map.
 
     At ``n_shards >= TWO_LEVEL_ROUTE_MIN_N`` (and an exact near-square
@@ -269,29 +270,6 @@ def _hrw_weight(m: Column, s: Column, mult: int) -> Column:
         * mult
         % _HASH_MOD
     )
-
-
-def _rendezvous_shard_col_unrolled(
-    id_col: Column | str, n_shards: int
-) -> Column:
-    """The UNROLLED form (n_shards separate struct terms) — kept ONLY
-    as the parity oracle for :func:`rendezvous_shard_col`'s table route
-    (tests/test_sharding.py); its expression tree grows with n_shards,
-    the exact analysis-cost shape the table route removes."""
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    m = _hrw_base(c, 1, _MIX_A)
-    pairs = F.array(
-        *[
-            F.struct(
-                _hrw_weight(m, F.lit(int(s)).cast("long"), _MIX_B).alias(
-                    "w"
-                ),
-                F.lit(int(s)).cast("long").alias("s"),
-            )
-            for s in range(int(n_shards))
-        ]
-    )
-    return F.array_max(pairs)["s"].cast("long")
 
 
 def _hrw_weight_sql(m_expr: str, s_expr: str, mult: int) -> str:

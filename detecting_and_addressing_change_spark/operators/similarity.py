@@ -100,30 +100,17 @@ def quantize_col(vec_col: Column, scale: int = QUANT_SCALE) -> Column:
     )
 
 
-def lsh_signature_col(qvec_col: Column, planes: list[list[int]]) -> Column:
-    """Signature int over a QUANTIZED vector: bit p set iff
-    sum_d(plane[p][d] * qvec[d]) > 0. Exact int64 arithmetic throughout."""
-    bits = F.lit(0)
-    for p, srow in enumerate(planes):
-        sarr = F.array(*[F.lit(int(s)) for s in srow])
-        dot = F.aggregate(
-            F.zip_with(sarr, qvec_col, lambda s, q: s.cast("long") * q),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        bits = bits + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bits.cast("int")
-
-
 def lsh_sigs_udf(n_planes: int, n_tables: int, dim: int):
     """Arrow-batched production path for the per-table signatures: ONE
     numpy int64 matmul `(batch, dim) @ (dim, n_tables*n_planes)` instead
     of a ~n_tables*n_planes*dim-node Catalyst expression tree per row
     (~6x faster at sf0.01, and the codegen stays compilable as
-    n_planes grows). Bit-identical to `lsh_signature_col`: same float64
-    quantization (`floor(v*scale + 0.5)`), same ±1 planes, exact int64
-    dots — the expression variant remains the cross-engine-audited
-    definition (cf. hashing.rolling_fingerprint_udf precedent)."""
+    n_planes grows). Bit p of table t is set iff the exact int64 dot of
+    the quantized vector (`floor(v*scale + 0.5)`) with ±1 global plane
+    t*n_planes + p is positive; tests/test_similarity.py checks that
+    against a pure-Python `plane_sign` dot product, and
+    tests/test_kernel_conformance.py runs x08 against its DuckDB oracle
+    on edge inputs."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -163,48 +150,22 @@ def _with_sigs(
     n_planes: int,
     n_tables: int,
     dim: int,
-    vectorized: bool = True,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Explode each row into one (tbl, sig) bucket row per LSH table.
-    Table t uses global planes [t*n_planes, (t+1)*n_planes). Default is
-    the Arrow-batched numpy path; `vectorized=False` keeps the pure
-    Catalyst expression variant (same bits — asserted in
-    tests/test_similarity.py). ``carry_cols`` passes extra columns of
-    ``df`` through unchanged — callers that need them downstream would
-    otherwise pay a join against ``df`` just to re-attach them (guide
-    §2.4; the embedding_near_dup_pairs __vq re-attach join, removed
-    r17)."""
-    if vectorized:
-        return df.select(
-            F.col(id_col).alias(f"{role}_id"),
-            F.col(vec_col).alias(f"{role}_emb"),
-            *[F.col(c) for c in carry_cols],
-            F.posexplode(
-                lsh_sigs_udf(n_planes, n_tables, dim)(F.col(vec_col))
-            ).alias("tbl", "sig"),
-        )
-    qv = quantize_col(F.col(vec_col))
-    sigs = []
-    for t in range(n_tables):
-        planes = sign_planes(t * n_planes, n_planes, dim)
-        sigs.append(
-            F.struct(
-                F.lit(t).alias("tbl"),
-                lsh_signature_col(qv, planes).alias("sig"),
-            )
-        )
+    Table t uses global planes [t*n_planes, (t+1)*n_planes), signed by
+    the Arrow-batched :func:`lsh_sigs_udf`. ``carry_cols`` passes extra
+    columns of ``df`` through unchanged — callers that need them
+    downstream would otherwise pay a join against ``df`` just to
+    re-attach them (guide §2.4; the embedding_near_dup_pairs __vq
+    re-attach join, removed r17)."""
     return df.select(
         F.col(id_col).alias(f"{role}_id"),
         F.col(vec_col).alias(f"{role}_emb"),
         *[F.col(c) for c in carry_cols],
-        F.explode(F.array(*sigs)).alias("ts"),
-    ).select(
-        f"{role}_id",
-        f"{role}_emb",
-        *carry_cols,
-        F.col("ts.tbl").alias("tbl"),
-        F.col("ts.sig").alias("sig"),
+        F.posexplode(
+            lsh_sigs_udf(n_planes, n_tables, dim)(F.col(vec_col))
+        ).alias("tbl", "sig"),
     )
 
 

@@ -17,11 +17,6 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
-def has_pushed_filters(df: DataFrame) -> bool:
-    s = explain_str(df)
-    return "PushedFilters: [" in s and "PushedFilters: []" not in s
-
-
 def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df)
 

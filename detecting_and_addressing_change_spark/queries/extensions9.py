@@ -104,7 +104,7 @@ def lm_cross_entropy(
     |model| = observed-bigram count), prefix totals are derived from the
     model itself (tiny second agg), and scoring joins the exploded corpus
     against the model. ``broadcast_model`` gates the join strategy
-    (expectations.check's broadcast_parents pattern, ADVICE r5): the model
+    (ADVICE r5): the model
     tables c12/cpre are CORPUS-DERIVED and grow with vocabulary, so the
     True default (right for a CCNet-style fixed pruned LM, and for these
     test scales) must degrade on an unpruned 100 TB-corpus model — pass
@@ -967,7 +967,6 @@ def x70(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X71 — TextRank keywords: PageRank over the word co-occurrence graph
 # --------------------------------------------------------------------------
 _TR_ITER = 3
-_TR_DAMP = 0.85
 
 
 def _x71_oracle() -> str:

@@ -8,7 +8,11 @@ matter on a real cluster (AQE, shuffle partitions, Arrow batching).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -146,6 +150,14 @@ def package_zip(pkg_dir: str, out_dir: str) -> str:
     return zpath
 
 
+@functools.cache
+def _package_dir() -> str:
+    """This driver process's zip directory, removed when the process exits."""
+    d = tempfile.mkdtemp(prefix="daac_spark_pkgdir-")
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via addPyFile.
 
@@ -154,12 +166,13 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     launched from another cwd (as the harness may be), workers can't see it.
     A zip of the package shipped through the SparkContext makes the engine
     self-contained regardless of PYTHONPATH. The zip is named after its
-    contents (:func:`package_zip`), so drivers started from different
-    checkouts share ``$TMPDIR`` without overwriting each other's zip.
-    Idempotent per session."""
+    contents (:func:`package_zip`) and written into a directory of its
+    own under ``$TMPDIR``, made once per driver process and removed by an
+    ``atexit`` hook, so drivers started from different checkouts never
+    share a zip and none is left behind. Idempotent per session."""
     if getattr(spark, "_daac_pkg_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = package_zip(pkg_dir, os.environ.get("TMPDIR", "/tmp"))
+    zpath = package_zip(pkg_dir, _package_dir())
     spark.sparkContext.addPyFile(zpath)
     spark._daac_pkg_shipped = True  # type: ignore[attr-defined]

@@ -3,8 +3,10 @@
 Mirrors SURVEY §2.1: the reference's line-file corpus scan
 (``streams/loaders.py:15-55``) and materialized-embedding scan
 (``streams/stream_data.py:18-22``) become declarative parquet scans so
-Catalyst gets predicate pushdown + column pruning for free. Schemas are
-declared explicitly (SURVEY §1.2: fixed, known up-front, never inferred).
+Catalyst gets predicate pushdown + column pruning for free. Schemas come
+from the parquet footers: ``load_table`` infers each table's schema once
+per (Spark application, sf_dir, table) and memoizes it, so later scans
+read with that explicit schema instead of re-inferring it.
 """
 
 from __future__ import annotations
@@ -28,116 +30,15 @@ TABLES = [
     "embeddings",
 ]
 
-# Small dimension tables worth broadcasting in joins (SURVEY §4.1: expected
-# BroadcastHashJoin for dim tables).
-BROADCAST_TABLES = {"region", "nation", "supplier", "part"}
-
-SCHEMAS: dict[str, T.StructType] = {
-    "region": T.StructType(
-        [
-            T.StructField("r_regionkey", T.IntegerType()),
-            T.StructField("r_name", T.StringType()),
-        ]
-    ),
-    "nation": T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-        ]
-    ),
-    "customer": T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType()),
-            T.StructField("c_name", T.StringType()),
-            T.StructField("c_nationkey", T.IntegerType()),
-            T.StructField("c_acctbal", T.DoubleType()),
-            T.StructField("c_mktsegment", T.StringType()),
-        ]
-    ),
-    "supplier": T.StructType(
-        [
-            T.StructField("s_suppkey", T.LongType()),
-            T.StructField("s_name", T.StringType()),
-            T.StructField("s_nationkey", T.IntegerType()),
-            T.StructField("s_acctbal", T.DoubleType()),
-        ]
-    ),
-    "part": T.StructType(
-        [
-            T.StructField("p_partkey", T.LongType()),
-            T.StructField("p_name", T.StringType()),
-            T.StructField("p_brand", T.StringType()),
-            T.StructField("p_type", T.StringType()),
-            T.StructField("p_size", T.IntegerType()),
-            T.StructField("p_retailprice", T.DoubleType()),
-        ]
-    ),
-    "orders": T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType()),
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_orderstatus", T.StringType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
-            T.StructField("o_orderpriority", T.StringType()),
-        ]
-    ),
-    "lineitem": T.StructType(
-        [
-            T.StructField("l_orderkey", T.LongType()),
-            T.StructField("l_partkey", T.LongType()),
-            T.StructField("l_suppkey", T.LongType()),
-            T.StructField("l_linenumber", T.IntegerType()),
-            T.StructField("l_quantity", T.DoubleType()),
-            T.StructField("l_extendedprice", T.DoubleType()),
-            T.StructField("l_discount", T.DoubleType()),
-            T.StructField("l_tax", T.DoubleType()),
-            T.StructField("l_returnflag", T.StringType()),
-            T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
-        ]
-    ),
-    "events": T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    ),
-    "documents": T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    ),
-    "embeddings": T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    ),
-}
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Footer-schema memo, keyed per (Spark application, sf_dir, table). A bare
 # ``spark.read.parquet(path)`` runs a schema-inference JOB over the file
 # footers at every call site — one driver job per table reference, i.e. one
 # scheduler floor (~0.05-0.2 s locally) per query construction, and at
 # 100 TB a full footer-listing pass over thousands of files per reference
-# (guide §1.2/§6: don't recompute metadata per query; this module's own
-# "never infer schemas" rule). The memo holds SCHEMA METADATA only (never
-# rows or results): the first reference in a session pays the inference
-# once, every later reference reads with the explicit footer schema, which
-# is byte-identical to what inference would return. Keyed by applicationId
+# (guide §1.2/§6: don't recompute metadata per query). The memo holds
+# SCHEMA METADATA only (never rows or results): the first reference in a
+# session pays the inference once, every later reference reads with the
+# explicit footer schema, which is byte-identical to what inference would return. Keyed by applicationId
 # so a fresh session (fresh bench/driver run) always re-probes the files.
 _FOOTER_SCHEMAS: dict[tuple[str, str, str], T.StructType] = {}
 
@@ -304,13 +205,3 @@ def local_table(
         [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, schema)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` works too."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

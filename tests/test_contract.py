@@ -147,3 +147,76 @@ def test_oracle_surface_is_frozen():
         n for n in got if got[n] != pinned["oracle_sql_sha256"][n]
     )
     assert not changed, f"oracle SQL text changed: {changed}"
+
+
+def _is_query_def(node) -> bool:
+    """A function registered with ``@query(...)``: the registry, not a
+    name, is what references it."""
+    import ast
+
+    for dec in getattr(node, "decorator_list", []):
+        f = dec.func if isinstance(dec, ast.Call) else dec
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+        if name == "query":
+            return True
+    return False
+
+
+def test_no_unreferenced_package_definitions():
+    """Every top-level function, class and assignment in the package
+    (``@query`` functions and dunder names aside) is used somewhere: some
+    ``Name`` or ``Attribute`` in the package, ``tests/``, ``tools/``,
+    ``perfbench/``, ``bench.py`` or ``__spark_entry__.py`` names it.
+    Imports and ``__all__`` strings do not count, so a definition that is
+    only re-exported is dead. A second implementation kept only as a
+    reference belongs in ``tools/pure_kernels.py`` or the tests, where
+    its users are."""
+    import ast
+
+    pkg = REPO_ROOT / "detecting_and_addressing_change_spark"
+    sources = [
+        *pkg.rglob("*.py"),
+        *(REPO_ROOT / "tests").rglob("*.py"),
+        *(REPO_ROOT / "tools").rglob("*.py"),
+        *(REPO_ROOT / "perfbench").rglob("*.py"),
+        REPO_ROOT / "bench.py",
+        REPO_ROOT / "__spark_entry__.py",
+    ]
+    defined: dict[str, list[str]] = {}
+    used: set[str] = set()
+    for path in sources:
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and not isinstance(
+                node.ctx, ast.Store
+            ):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+        if pkg not in path.parents:
+            continue
+        for node in tree.body:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                names = [] if _is_query_def(node) else [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (
+                    node.targets if isinstance(node, ast.Assign)
+                    else [node.target]
+                )
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            for name in names:
+                if not (name.startswith("__") and name.endswith("__")):
+                    defined.setdefault(name, []).append(
+                        f"{path.relative_to(REPO_ROOT)}:{node.lineno}"
+                    )
+    dead = sorted(
+        (site, name)
+        for name, sites in defined.items()
+        if name not in used
+        for site in sites
+    )
+    assert not dead, dead

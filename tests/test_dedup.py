@@ -55,7 +55,9 @@ def test_minhash_finds_near_dups(docs):
     sigs = minhash_signatures(docs)
     pairs = {
         (r["a_id"], r["b_id"])
-        for r in minhash_candidate_pairs(minhash_bands(sigs)).collect()
+        for r in minhash_candidate_pairs(
+            minhash_bands(sigs, carry_sig=True), bucket_cap=64
+        ).collect()
     }
     assert (0, 1) in pairs  # identical docs always collide
     assert (0, 2) in pairs  # one-word-out near dup should band-collide
@@ -264,9 +266,22 @@ def test_guarded_edges_preserve_components(spark, docs):
     )
 
     # on a corpus where no cap fires, the guarded edge set must yield the
-    # SAME connected components as the raw quadratic pair set
-    raw = minhash_candidate_pairs(
-        minhash_bands(minhash_signatures(docs))
+    # SAME connected components as the raw quadratic pair set: every pair
+    # of docs that share a (band, bucket), grouped here in Python
+    buckets: dict[tuple, list[int]] = {}
+    for r in minhash_bands(minhash_signatures(docs)).collect():
+        buckets.setdefault((r["band"], r["bucket"]), []).append(r["doc_id"])
+    raw = spark.createDataFrame(
+        sorted(
+            {
+                (a, b)
+                for ids in buckets.values()
+                for a in ids
+                for b in ids
+                if a < b
+            }
+        ),
+        "a_id long, b_id long",
     )
     guarded = minhash_dedup_edges(docs)
     ids = docs.select("doc_id")

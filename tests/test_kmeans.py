@@ -182,13 +182,17 @@ def test_assign_table_route_parity(spark, emb_rows, monkeypatch):
         unrolled = collect_routes(10**9)  # force the unrolled route
         table = collect_routes(0)  # force the table route
         assert unrolled == table, f"route divergence at k={k}"
-        # and the Column-input path (py4j graph) agrees too
-        col_rows = quant.select(
-            "vec_id",
-            km.kmeans_assign_col(centroids, F.col("qv")).alias("cell"),
-        ).collect()
-        got = {int(r["vec_id"]): int(r["cell"]) for r in col_rows}
-        assert got == {i: c for i, (c, _) in unrolled.items()}
+        # and both agree with a pure-Python (distance, cid) argmin over
+        # the collected quantized vectors
+        cents = [(cid, np.array(qc, dtype=np.int64)) for cid, qc in centroids]
+        want = {
+            int(r["vec_id"]): min(
+                (int(((np.array(r["qv"]) - c) ** 2).sum()), cid)
+                for cid, c in cents
+            )[1]
+            for r in quant.collect()
+        }
+        assert {i: c for i, (c, _) in unrolled.items()} == want
 
 
 def test_assign_table_route_tie_break(spark, monkeypatch):

@@ -56,9 +56,9 @@ def test_portable_kernel_matches_numpy_semantics():
     import numpy as np
 
     from detecting_and_addressing_change_spark.operators.lstm import (
-        forward_one_portable,
         init_hash_weights,
     )
+    from tools.pure_kernels import forward_one_portable
 
     ws = init_hash_weights(6, 4, 2, 3)
     tokens = [
@@ -85,9 +85,9 @@ def test_batch_kernel_bitwise_equals_scalar():
     )
     from detecting_and_addressing_change_spark.operators.lstm import (
         forward_batch_portable,
-        forward_one_portable,
         init_hash_weights,
     )
+    from tools.pure_kernels import forward_one_portable
 
     ws = init_hash_weights(8, 4, 2, 5)
     rng = random.Random(11)

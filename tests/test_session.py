@@ -55,3 +55,43 @@ def test_package_zip_is_named_after_its_contents(tmp_path):
     assert sorted(os.listdir(out)) == sorted(
         os.path.basename(z) for z in (za, zb)
     )
+
+
+def test_session_leaves_no_package_zip(tmp_path):
+    """A driver that starts and stops a session and exits leaves no
+    package zip in its ``$TMPDIR``: the zip lives in a per-process
+    directory that an atexit hook removes."""
+    import subprocess
+    import sys
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp),
+        SPARK_DRIVER_MEMORY="1g",
+        PYTHONPATH=os.pathsep.join(
+            [repo] + [p for p in [os.environ.get("PYTHONPATH")] if p]
+        ),
+    )
+    code = (
+        "import glob, os\n"
+        "from detecting_and_addressing_change_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]')\n"
+        "assert spark.range(3).count() == 3\n"
+        "assert glob.glob(os.path.join(os.environ['TMPDIR'], '*',"
+        " 'daac_spark_pkg-*.zip'))\n"
+        "spark.stop()\n"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=str(tmp_path),
+        check=True, timeout=300,
+    )
+    left = [
+        os.path.join(d, f)
+        for d, _, files in os.walk(tmp)
+        for f in files
+        if f.startswith("daac_spark_pkg-")
+    ]
+    assert left == []

@@ -184,12 +184,26 @@ def test_adaptive_auto_routes_by_budget(spark, corpus_rows):
 def test_routing_audit_modes_matches_per_mode_audits(spark, corpus_rows):
     """r17: x90's ssjoin_routing_audit_modes shares one tokenize/prefix/
     volume pass (and, over budget, one pipeline run) across its two mode
-    rows — the rows must stay exactly what two independent
-    ssjoin_routing_audit calls produce, in both budget regimes."""
+    rows — the rows must stay exactly the fingerprints of two independent
+    adaptive_jaccard_join runs (route 'auto' and route 'minhash'), in
+    both budget regimes."""
     from detecting_and_addressing_change_spark.operators.setjoin import (
-        ssjoin_routing_audit,
+        _fingerprint_agg,
         ssjoin_routing_audit_modes,
     )
+
+    def audit(df, budget, route):
+        pairs, info = adaptive_jaccard_join(
+            df, threshold=0.5, budget_rows=budget, route=route
+        )
+        return tuple(
+            _fingerprint_agg(
+                pairs,
+                info["route"],
+                info["candidate_volume"],
+                info["budget_rows"],
+            ).collect()[0]
+        )
 
     df = spark.createDataFrame(corpus_rows, "doc_id long, text string")
     for budget in (10**12, 0):  # exact route / forced-minhash regime
@@ -200,18 +214,8 @@ def test_routing_audit_modes_matches_per_mode_audits(spark, corpus_rows):
             ).collect()
         }
         assert sorted(got) == ["auto", "forced_minhash"]
-        want_auto = tuple(
-            ssjoin_routing_audit(
-                df, threshold=0.5, budget_rows=budget, route="auto"
-            ).collect()[0]
-        )
-        want_forced = tuple(
-            ssjoin_routing_audit(
-                df, threshold=0.5, budget_rows=budget, route="minhash"
-            ).collect()[0]
-        )
-        assert got["auto"] == want_auto
-        assert got["forced_minhash"] == want_forced
+        assert got["auto"] == audit(df, budget, "auto")
+        assert got["forced_minhash"] == audit(df, budget, "minhash")
 
 
 def test_adaptive_forced_route_overrides_budget(spark, corpus_rows):

@@ -377,31 +377,6 @@ def test_epoch_orders_are_not_rotations_of_each_other():
         assert max(pairs.values()) < 30, (s0, s1, max(pairs.values()))
 
 
-def test_rendezvous_table_route_parity_with_unrolled(spark):
-    """The transform-over-sequence table route must assign EXACTLY the
-    same shard as the r13 unrolled struct-array form at every shard
-    count (the tests/test_kmeans.py route-parity precedent, VERDICT r13
-    #2) — same int64 mix, same (w, s) lexicographic tie-break."""
-    from detecting_and_addressing_change_spark.operators.sharding import (
-        _rendezvous_shard_col_unrolled,
-        rendezvous_shard_col,
-    )
-
-    ids = list(range(400)) + [2**20, 2**20 + 1, 10**15, 2**62]
-    df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    for n in (2, 8, 64, 512):
-        mism = (
-            df.select(
-                "doc_id",
-                rendezvous_shard_col("doc_id", n).alias("t"),
-                _rendezvous_shard_col_unrolled("doc_id", n).alias("u"),
-            )
-            .filter(F.col("t") != F.col("u"))
-            .count()
-        )
-        assert mism == 0, f"route mismatch at n_shards={n}"
-
-
 def test_write_shards_empty_input(spark, tmp_path):
     """ADVICE r13: an empty input must yield an empty manifest (no
     TypeError on int(None)) and skip the data write."""
@@ -720,11 +695,12 @@ def test_two_level_factor_properties():
 
 
 def test_rendezvous_sql_column_parity_in_routed_regime(spark):
-    """Cross-ENGINE parity where the adaptive route is live: the DuckDB
-    text from rendezvous_shard_sql(n >= 1024) must assign the same
-    shard as the executed Spark column (x122 carries the flat-regime
-    pin on the driver gate since the round-16 x119 fold; this pins the
-    routed regime)."""
+    """Cross-ENGINE parity on both sides of the adaptive route: the
+    DuckDB text from rendezvous_shard_sql must assign the same shard as
+    the executed Spark column, in the flat table route (n < 1024: same
+    int64 mix, same (w, s) lexicographic tie-break) and in the routed
+    two-level regime (x122 carries the flat-regime pin on the driver
+    gate; this pins both regimes on ids up to 2^62)."""
     import duckdb
 
     from detecting_and_addressing_change_spark.operators.sharding import (
@@ -732,24 +708,28 @@ def test_rendezvous_sql_column_parity_in_routed_regime(spark):
         rendezvous_shard_sql,
     )
 
-    ids = [0, 1, 7, 97, 12_345, 2**20 + 1, 10**9, 10**15, 2**62]
-    for n in (1024, 2048):
+    ids = list(range(400)) + [
+        12_345, 2**20, 2**20 + 1, 10**9, 10**15, 2**62
+    ]
+    df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    con = duckdb.connect()
+    id_list = ", ".join(map(str, ids))
+    for n in (2, 8, 64, 512, 1024, 2048):
         got = {
             r["doc_id"]: int(r["s"])
-            for r in spark.createDataFrame(
-                [(i,) for i in ids], "doc_id long"
-            )
-            .select("doc_id", rendezvous_shard_col("doc_id", n).alias("s"))
-            .collect()
+            for r in df.select(
+                "doc_id", rendezvous_shard_col("doc_id", n).alias("s")
+            ).collect()
         }
-        con = duckdb.connect()
-        expr = rendezvous_shard_sql("doc_id", n)
-        for i in ids:
-            want = con.sql(
-                f"SELECT {expr} FROM (SELECT CAST({i} AS BIGINT) "
-                "AS doc_id)"
-            ).fetchone()[0]
-            assert got[i] == int(want), (n, i, got[i], want)
+        want = {
+            int(i): int(s)
+            for i, s in con.sql(
+                f"SELECT doc_id, {rendezvous_shard_sql('doc_id', n)} "
+                f"FROM (SELECT UNNEST([{id_list}]::BIGINT[]) AS doc_id)"
+            ).fetchall()
+        }
+        mism = sorted(i for i in ids if got[i] != want[i])
+        assert not mism, (n, mism[:5])
 
 
 def test_epoch_order_sql_column_parity_cross_engine(spark):

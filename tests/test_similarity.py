@@ -3,6 +3,8 @@ the exact baseline is bounded below."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 
@@ -78,20 +80,34 @@ def test_embedding_near_dup_finds_planted_pair(spark, embeddings):
 
 def test_sig_paths_bit_identical(spark, embeddings):
     """The Arrow-batched numpy signature path (production) must produce
-    exactly the Catalyst-expression signatures (the cross-engine-audited
-    definition)."""
+    exactly the defining signatures, computed here in pure Python: bit p
+    of table t is set iff the exact integer dot of the quantized vector
+    (floor(v*scale + 0.5)) with the ±1 global plane t*n_planes + p is
+    positive."""
     from detecting_and_addressing_change_spark.operators.similarity import (
+        QUANT_SCALE,
         _with_sigs,
+        plane_sign,
     )
 
-    df, _ = embeddings
-    fast = _with_sigs(
-        df, "a", "vec_id", "embedding", 8, 4, 16, vectorized=True
+    df, vecs = embeddings
+    n_planes, n_tables, dim = 8, 4, 16
+    got = sorted(
+        (r["a_id"], r["tbl"], r["sig"])
+        for r in _with_sigs(
+            df, "a", "vec_id", "embedding", n_planes, n_tables, dim
+        ).collect()
     )
-    slow = _with_sigs(
-        df, "a", "vec_id", "embedding", 8, 4, 16, vectorized=False
-    )
-    key = lambda r: (r["a_id"], r["tbl"], r["sig"])  # noqa: E731
-    assert sorted(map(key, fast.collect())) == sorted(
-        map(key, slow.collect())
-    )
+    want = []
+    for i, v in vecs.items():
+        q = [math.floor(float(x) * QUANT_SCALE + 0.5) for x in v]
+        for t in range(n_tables):
+            sig = 0
+            for p in range(n_planes):
+                g = t * n_planes + p
+                if sum(plane_sign(g, d) * q[d] for d in range(dim)) > 0:
+                    sig |= 1 << p
+            want.append((i, t, sig))
+    assert got == sorted(want)
+
+
