@@ -377,6 +377,42 @@ def test_epoch_orders_are_not_rotations_of_each_other():
         assert max(pairs.values()) < 30, (s0, s1, max(pairs.values()))
 
 
+def test_rendezvous_table_route_parity_with_unrolled(spark):
+    """The transform-over-sequence table route must assign EXACTLY the
+    same shard as an unrolled per-shard argmax written out in plain
+    Python at every flat shard count — same int64 mix, same (w, s)
+    lexicographic tie-break. Every intermediate stays below 2^53, so
+    Python ints and Spark longs agree term by term."""
+    from detecting_and_addressing_change_spark.operators import sharding
+    from detecting_and_addressing_change_spark.operators.sharding import (
+        rendezvous_shard_col,
+    )
+
+    id_mod, hash_mod = sharding._ID_MOD, sharding._HASH_MOD
+    mix_a, mix_b = sharding._MIX_A, sharding._MIX_B
+
+    def unrolled(doc_id: int, n: int) -> int:
+        m = ((doc_id % id_mod) * 31 + 1) % id_mod * mix_a % hash_mod
+        best = None
+        for s in range(n):
+            w = (m ^ (s * mix_a % hash_mod)) % id_mod * mix_b % hash_mod
+            if best is None or (w, s) > best:
+                best = (w, s)
+        return best[1]
+
+    ids = list(range(400)) + [2**20, 2**20 + 1, 10**15, 2**62]
+    df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    for n in (2, 8, 64, 512):
+        got = {
+            r["doc_id"]: int(r["t"])
+            for r in df.select(
+                "doc_id", rendezvous_shard_col("doc_id", n).alias("t")
+            ).collect()
+        }
+        mism = sorted(i for i in ids if got[i] != unrolled(i, n))
+        assert not mism, f"route mismatch at n_shards={n}: {mism[:5]}"
+
+
 def test_write_shards_empty_input(spark, tmp_path):
     """ADVICE r13: an empty input must yield an empty manifest (no
     TypeError on int(None)) and skip the data write."""
